@@ -24,6 +24,15 @@ single row, which is fine up to ~hundreds of MB of sequence — beyond
 that, ``merge_path_pairwise`` does log2(L) rounds of pairwise interval
 merges with no single-row blowup.
 
+Lifecycle: like the reference, which loads its read file into the
+distributed graph once (assembly_final.cpp:88-123) and runs every phase
+over that graph, the pipeline runs over the pinned frame that
+``sources.graphlab_text.read_graphlab_text`` returns. The caller's load
+count fills the pin; ``assemble``'s path collect, the merge fold and the
+per-vertex sink then read pinned rows and never re-scan or re-parse the
+file. Intermediate frames (``annotated``) are not pinned: each consumer
+re-runs only the joins over the pinned reads.
+
 Semantics pinned per SURVEY.md §2.A "faithful-semantics notes":
   * ``valid`` is a derived *output* column with the intended semantics
     (dead-end + not-best-child invalidation); like the reference
@@ -256,9 +265,7 @@ def extract_path(
     # T_k: (v, s) — s is the 2^k-step successor of v
     t = succ.localCheckpoint(eager=True)
     path = spark.createDataFrame([(0, source)], "pos LONG, read_id LONG")
-    path = path.localCheckpoint(eager=True)
-    step = 1
-    n_vertices = path.count()
+    step, n_vertices = 1, 1  # the path starts as just the source
     for _ in range(max_rounds):
         # extend: every known position pos(v) spawns pos + step at T(v)
         shifted = (

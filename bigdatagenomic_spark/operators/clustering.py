@@ -25,7 +25,6 @@ broadcast — the classic small-model/big-data iteration).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.sources.tables import load_table

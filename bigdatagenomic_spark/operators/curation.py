@@ -56,7 +56,7 @@ def curate(docs: DataFrame) -> DataFrame:
     n_tok, stop, alpha = F.col("n_tok"), F.col("stop"), F.col("alpha")
     quality = (
         F.lit(0.5) * F.least(n_tok, F.lit(100)).cast("double") / 100.0
-        + F.lit(0.3) * alpha.cast("double") / F.greatest(F.length("text"), F.lit(1))
+        + F.lit(0.3) * (alpha.cast("double") / F.greatest(F.length("text"), F.lit(1)))
         + F.lit(0.2)
         * F.least(
             stop.cast("double") / F.greatest(n_tok, F.lit(1)) * 5.0, F.lit(1.0)
@@ -313,7 +313,7 @@ def curriculum_order(docs: DataFrame, stage_tokens: int = STAGE_TOKENS) -> DataF
     n_tok, stop, alpha = F.col("n_tok"), F.col("stop"), F.col("alpha")
     quality = (
         F.lit(0.5) * F.least(n_tok, F.lit(100)).cast("double") / 100.0
-        + F.lit(0.3) * alpha.cast("double") / F.col("nch")
+        + F.lit(0.3) * (alpha.cast("double") / F.col("nch"))
         + F.lit(0.2)
         * F.least(
             stop.cast("double") / F.greatest(n_tok, F.lit(1)) * 5.0, F.lit(1.0)

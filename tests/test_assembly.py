@@ -10,12 +10,14 @@ from __future__ import annotations
 
 import os
 import random
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.operators import assembly as asm
 from bigdatagenomic_spark.sources.graphlab_text import read_graphlab_text, reads_to_edges
+from bigdatagenomic_spark.sources.writers import write_best_path_text
 
 from tests.assembly_oracle import Interval, fold_chain, merge_step
 
@@ -318,6 +320,30 @@ def test_smoke3_end_to_end(spark):
     assert out.length == len(out.content) == 2719  # 119+1903+104+461+132
     nxt = {r.read_id: r.next_id for r in annotated.collect()}
     assert nxt == {33: 10, 10: 38, 38: 0}
+
+
+def test_input_is_read_once(spark, tmp_path):
+    """The load count is the only scan of the read file: with the file
+    deleted after it, the edge list, path collect, merge fold and sink
+    all still run, from the pinned rows."""
+    infile = tmp_path / "reads.txt"
+    shutil.copy(os.path.join(DATA, "smoke3.txt"), infile)
+    reads = read_graphlab_text(spark, str(infile))
+    assert reads.count() == 3
+    infile.unlink()
+    edges = reads_to_edges(reads)
+    annotated, assembled = asm.assemble(reads, edges, source=33, destination=38)
+    out = assembled.collect()[0]
+    assert (out.offset, out.length) == (1304, 2719)
+    sink = tmp_path / "out"
+    write_best_path_text(annotated, str(sink))
+    headers = [
+        line
+        for part in sink.glob("part-*")
+        for line in part.read_text().splitlines()
+        if "\t" in line
+    ]
+    assert sorted(headers) == ["10\t38", "33\t10", "38\t0"]
 
 
 def _random_chain(rng: random.Random, n: int):

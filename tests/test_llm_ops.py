@@ -756,6 +756,38 @@ def test_curriculum_order_stages_by_cumulative_tokens(spark):
     assert out[100].q10k < out[0].q10k
 
 
+def test_quality_score_associates_like_oracle(spark):
+    """The 0.3 * (alpha / nch) term is divided first, as in the DuckDB
+    oracles. This 155-char text scores 0.55625, a rounding boundary of
+    q10k: divided first the double is exact and rounds to 5563 like the
+    oracle; multiplied first (0.3 * alpha / nch) it lands one ulp below
+    and rounds to 5562."""
+    from bigdatagenomic_spark.operators.curation import (
+        Q_PIPELINE_CURATION_SQL,
+        Q_X_CURRICULUM_SQL,
+        curate,
+        curriculum_order,
+    )
+
+    text = (
+        "a a order window order line scan part join query a fast slow hash "
+        "agg big table group a small order line the group query sort row "
+        "data slow sort big column"
+    )
+    assert len(text) == 155
+    # doc_id 11 falls in curate's deterministic 70% hash sample
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT 11::BIGINT AS doc_id, 'web' AS source, ? AS text",
+        [text],
+    )
+    assert con.sql(Q_X_CURRICULUM_SQL).fetchall() == [(11, 5563, 32, 32, 0)]
+    assert con.sql(Q_PIPELINE_CURATION_SQL).fetchall() == [("web", 1, 0.5563)]
+    docs = spark.createDataFrame([(11, "web", text)], "doc_id LONG, source STRING, text STRING")
+    assert curriculum_order(docs.select("doc_id", "text")).collect()[0].q10k == 5563
+    assert curate(docs).collect()[0].q10k == 5563
+
+
 def test_k_anonymize_generalizes_and_suppresses(spark):
     from datetime import datetime
 
