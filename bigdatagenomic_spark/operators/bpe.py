@@ -149,7 +149,7 @@ def bpe_train(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
     # 4.14 s vs lazy 4.55 s at sf0.01; wash at sf0.1) — the broadcast
     # build serializes the previous round's merge windows into its
     # blocking path, costing more than the saved job submission.
-    # Reverted per the measured-wins-only rule (tools/ab_bpe_r15.py).
+    # Reverted per the measured-wins-only rule (OPTIMIZATION_r15.md).
     syms = vocab.select(
         "word", "freq", i
     ).select(

@@ -1263,6 +1263,9 @@ def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # payload through the argmax (guide §2.4; §8's "decide with small
     # rows" — here the decision needs no shuffle at all)
     dim = PQ_M * PQ_SUBDIM
+    # one k trains every span; the oracle and pq_codebook_kmeans train
+    # the PQ spans at PQ_K, so parity holds only while the two agree
+    assert N_CENTROIDS == PQ_K
     cbs = _train_joint_lit(
         vecs,
         [(0, dim)] + [(m * PQ_SUBDIM, PQ_SUBDIM) for m in range(PQ_M)],

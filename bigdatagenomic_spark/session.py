@@ -23,6 +23,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap for a local session: half the host's physical memory in
+    whole GiB, at least 1g and at most 48g (a larger heap on a small host
+    lets the JVM grow until the kernel kills it)."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys_bytes // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "bigdatagenomic_spark",
     cpus: int | None = None,
@@ -41,7 +50,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the driver's events.parquet stores TIMESTAMP(NANOS), which the

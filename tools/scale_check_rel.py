@@ -20,7 +20,11 @@ Workloads (all are plain registry entries taking (spark, sf_dir)):
   * q_x_asof_join       — as-of backward join clicks->views over events
 
 Usage: python tools/scale_check_rel.py [tables_dir] [--out FILE]
+       [--tranche 2 | --queries q_a,q_b,...]
 (default tables_dir /tmp/scale_rel; expects x1/x10/x100 under it).
+``--queries`` sweeps any registry entries instead: point tables_dir at
+the corpus replicas (tools/make_scale_corpus.py) for text operators. A
+cell that raises is recorded as {"raised": "<exception type>"}.
 """
 
 from __future__ import annotations
@@ -95,16 +99,21 @@ def main() -> None:
         for r in REPLICAS:
             sf_dir = os.path.join(tables_dir, f"x{r}")
             # warm-up + min-of-2 timed runs, same protocol as scale_check.py
-            force(fn(spark, sf_dir))
-            times = []
-            for _ in range(2):
-                t0 = time.monotonic()
+            try:
                 force(fn(spark, sf_dir))
-                times.append(time.monotonic() - t0)
-            row[f"x{r}"] = round(min(times), 3)
-            print(f"{label} x{r}: {row[f'x{r}']} s", flush=True)
-        row["ratio_10"] = round(row["x10"] / row["x1"], 2)
-        row["ratio_100"] = round(row["x100"] / row["x1"], 2)
+                times = []
+                for _ in range(2):
+                    t0 = time.monotonic()
+                    force(fn(spark, sf_dir))
+                    times.append(time.monotonic() - t0)
+                row[f"x{r}"] = round(min(times), 3)
+            except Exception as exc:  # e.g. a size guard refusing the scale
+                row[f"x{r}"] = {"raised": type(exc).__name__}
+                print(f"{label} x{r}: {str(exc)[:300]}", file=sys.stderr)
+            print(f"{label} x{r}: {row[f'x{r}']}", flush=True)
+        for r in REPLICAS[1:]:
+            if all(isinstance(row[k], float) for k in ("x1", f"x{r}")):
+                row[f"ratio_{r}"] = round(row[f"x{r}"] / row["x1"], 2)
         results[label] = row
 
     line = json.dumps(results)
