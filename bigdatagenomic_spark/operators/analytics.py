@@ -1185,8 +1185,12 @@ def q_tpch_q21_shape(spark, sf_dir):
     # pin the lineitem⋈orders subtree once (round 15, VERDICT r14 #5,
     # guide §5): `lo` feeds BOTH the per-order countDistinct aggregate
     # and the sole_late probe side, and un-pinned each consumer re-ran
-    # the join (2 lineitem + 2 orders scans + 2 join builds in the
-    # before-plan, plans/r15/q_tpch_q21_shape_before.txt). Lazy: the
+    # the join (the sf0.1 plan had 5 `Scan parquet` nodes unpinned, 2
+    # lineitem + 2 orders + supplier, and 1 pinned, supplier, beside 2
+    # `Scan ExistingRDD` reads of the pin; check at any revision with
+    # `git worktree add --detach DIR REV` and, in DIR,
+    # `python -m bigdatagenomic_spark.cli query q_tpch_q21_shape
+    # --explain --limit 0`). Lazy: the
     # query's single action materializes it once and both consumers
     # read the cached blocks — the q_dedup_minhash_pairs pattern; the
     # production analog is persisting the joined fact slice.

@@ -31,7 +31,10 @@ over that graph, the pipeline runs over the pinned frame that
 count fills the pin; ``assemble``'s path collect, the merge fold and the
 per-vertex sink then read pinned rows and never re-scan or re-parse the
 file. Intermediate frames (``annotated``) are not pinned: each consumer
-re-runs only the joins over the pinned reads.
+re-runs only the joins over the pinned reads. The path walked on the
+driver comes back as a local relation (``sources.local.local_frame``), so
+the merge's broadcast of it runs in the JVM and no step of the pipeline
+starts a Python worker.
 
 Semantics pinned per SURVEY.md §2.A "faithful-semantics notes":
   * ``valid`` is a derived *output* column with the intended semantics
@@ -50,6 +53,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from bigdatagenomic_spark.sources.local import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -165,7 +171,13 @@ DRIVER_WALK_MEM_FRACTION = 16  # walk map may use at most 1/16 of driver heap
 DRIVER_WALK_TIME_CAP_ROWS = 20_000_000  # measured walk/doubling crossover
                                # (SCALING.md path-extraction sweep: walk's
                                # per-row driver cost ~7.8 us/row overtakes
-                               # pointer doubling around ~20M rows)
+                               # pointer doubling around ~20M rows; measured
+                               # when the walked path was a Python-RDD frame,
+                               # which costs more per row than the local
+                               # relation it is now, so the cap is cautious)
+PATH_SCHEMA = StructType(
+    [StructField("pos", LongType()), StructField("read_id", LongType())]
+)
 
 
 def _driver_mem_bytes(spark) -> int:
@@ -188,7 +200,7 @@ def driver_walk_row_budget(spark, bytes_budget: int | None = None) -> int:
       the same "fits comfortably in one node's memory" regime where
       Spark would broadcast, scaled to the actual heap.
     * **time** — ``DRIVER_WALK_TIME_CAP_ROWS``: the walk is a SERIAL
-      per-row driver loop (py4j collect + dict walk + createDataFrame),
+      per-row driver loop (py4j collect + dict walk + local relation),
       and SCALING.md's path-extraction sweep measured its crossover
       against the distributed pointer-doubling path at ~20M rows. On a
       big driver (128 GiB -> ~95M memory-budget rows) memory alone
@@ -260,11 +272,11 @@ def extract_path(
             order.append((len(order), v))
             seen.add(v)
             v = nxt.get(v)
-        return spark.createDataFrame(order, "pos LONG, read_id LONG")
+        return local_frame(spark, order, PATH_SCHEMA)
 
     # T_k: (v, s) — s is the 2^k-step successor of v
     t = succ.localCheckpoint(eager=True)
-    path = spark.createDataFrame([(0, source)], "pos LONG, read_id LONG")
+    path = local_frame(spark, [(0, source)], PATH_SCHEMA)
     step, n_vertices = 1, 1  # the path starts as just the source
     for _ in range(max_rounds):
         # extend: every known position pos(v) spawns pos + step at T(v)

@@ -186,8 +186,12 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < PAIR_SAMPLE_DOCS)
     # pin the per-doc shingle sets once (round 14): the verify stage
     # joins `base` on BOTH pair sides, and un-pinned each side re-ran
-    # the scan + tokenize + shingle subtree (4 parquet scans in the
-    # before-plan, plans/r14/q_dedup_minhash_pairs_before.txt). The
+    # the scan + tokenize + shingle subtree (the sf0.1 plan had 4
+    # `Scan parquet` nodes unpinned and 0 pinned, where 4 `Scan
+    # ExistingRDD` nodes read the two pins; check at any revision with
+    # `git worktree add --detach DIR REV` and, in DIR,
+    # `python -m bigdatagenomic_spark.cli query q_dedup_minhash_pairs
+    # --explain --limit 0`). The
     # table is bounded by PAIR_SAMPLE_DOCS, so materializing it is
     # driver-bounded by construction; measured 1.38 -> 1.10 s at sf0.1
     # together with the band-table pin in lsh_candidate_pairs.

@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from bigdatagenomic_spark.sources.local import local_frame
 
 
 def out_degrees(edges: DataFrame) -> DataFrame:
@@ -259,9 +262,13 @@ def _pagerank_oracle_sql(n_iter: int = 8, damping: float = 0.85) -> str:
 
     Fixed iteration counts need no recursion — each iteration is a
     join + group-by over the previous CTE, so the whole computation is
-    a chain of ordinary CTEs DuckDB evaluates exactly like the Spark
-    driver loop. Ranks use the portable floor-rounding at 4 decimals
-    (both engines sum doubles; the rounding absorbs order effects)."""
+    a chain of CTEs DuckDB evaluates exactly like the Spark driver loop.
+    Each round reads the previous one twice (dangling mass + received
+    mass), and DuckDB inlines a plain CTE at every reference, so the
+    rounds are MATERIALIZED — inlined, 8 rounds evaluate r0 2^8 times
+    and exhaust memory. Ranks use the portable floor-rounding at 4
+    decimals (both engines sum doubles; the rounding absorbs order
+    effects)."""
     base = """
   o AS (SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey < 500),
   nxt AS (SELECT a.o_custkey AS src, b.o_custkey AS dst
@@ -276,7 +283,7 @@ def _pagerank_oracle_sql(n_iter: int = 8, damping: float = 0.85) -> str:
     steps = []
     for k in range(1, n_iter + 1):
         steps.append(f"""
-  r{k} AS (
+  r{k} AS MATERIALIZED (
     SELECT v.id,
            {1.0 - damping} + {damping} * (coalesce(m.recv, 0.0) + d.dmass / nv.n)
              AS rank
@@ -1350,7 +1357,11 @@ def sssp_bellman_ford(
         .localCheckpoint(eager=True)
     )
     dist = (
-        e.sparkSession.createDataFrame([(source, 0)], "id LONG, dist LONG")
+        local_frame(
+            e.sparkSession,
+            [(source, 0)],
+            StructType([StructField("id", LongType()), StructField("dist", LongType())]),
+        )
         .localCheckpoint(eager=True)
     )
     for _ in range(n_rounds):

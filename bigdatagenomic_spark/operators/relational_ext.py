@@ -28,9 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bigdatagenomic_spark.functions import md5_long
 from bigdatagenomic_spark.operators.relational import round2_portable
+from bigdatagenomic_spark.sources.local import local_frame
 from bigdatagenomic_spark.sources.tables import load_table
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -54,8 +56,6 @@ def asof_join_backward(
     as-of; the naive range self-join is O(n^2) per key and never
     acceptable at scale.
     """
-    from pyspark.sql import types as T
-
     l_type = T.StructType(left.schema.fields)
     carried = F.struct(F.col(ts).alias("_r_ts"), *[F.col(c) for c in right_cols])
     r = right.select(
@@ -1955,9 +1955,14 @@ def q_x_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         for prev, nxt in zip(stats, stats[1:])
         if nxt.lo - prev.hi > 1
     ]
-    spark_seams = spark.createDataFrame(
-        seams, "gap_after LONG, next_present LONG"
-    ) if seams else spark.createDataFrame([], "gap_after LONG, next_present LONG")
+    spark_seams = local_frame(
+        spark,
+        seams,
+        T.StructType(
+            [T.StructField("gap_after", T.LongType()),
+             T.StructField("next_present", T.LongType())]
+        ),
+    )
     return (
         local.unionByName(spark_seams)
         .select(

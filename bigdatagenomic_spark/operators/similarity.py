@@ -25,6 +25,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.functions import cosine
+from bigdatagenomic_spark.sources.local import local_frame
 from bigdatagenomic_spark.sources.tables import fan_out, load_table
 
 N_QUERIES = 8
@@ -285,7 +286,7 @@ def _centroid_table(spark: SparkSession, cents: list[tuple[int, list[float]]]):
             StructField("cvec", ArrayType(DoubleType()), False),
         ]
     )
-    return spark.createDataFrame([(int(c), v) for c, v in cents], schema)
+    return local_frame(spark, [(int(c), v) for c, v in cents], schema)
 
 
 def _ivf_assign(candidates: DataFrame, cent: DataFrame) -> DataFrame:

@@ -12,6 +12,12 @@ is the one you would also set on a 1000-executor cluster:
   * shuffle.partitions sized to cores locally; on a real cluster this is
     overridden per-deploy (or left to AQE's coalescing).
   * UTC session timezone so results hash-match the DuckDB oracle.
+  * PySpark's DataFrame debugging off: with it on, every ``functions.*``
+    and ``Column`` call captures its Python call site and sends it to the
+    JVM over py4j; off, an AnalysisException no longer names the Python
+    line that built the failing expression (pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+    before the first Column call to get it back).
 """
 
 from __future__ import annotations
@@ -55,6 +61,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the driver's events.parquet stores TIMESTAMP(NANOS), which the
         # Spark parquet reader rejects by default; read as long + convert

@@ -1,4 +1,4 @@
-"""The session factory's host-derived defaults (no Spark needed)."""
+"""The session factory: host-derived defaults and the confs it sets."""
 
 from __future__ import annotations
 
@@ -27,3 +27,12 @@ def test_driver_memory_is_half_the_host(phys, heap):
 def test_driver_memory_reads_this_host():
     heap = default_driver_memory()
     assert heap.endswith("g") and 1 <= int(heap[:-1]) <= 48
+
+
+def test_dataframe_debugging_is_off(spark):
+    """The engine session does not capture a Python call site per Column
+    call (the ``spark`` fixture is built by ``get_spark``)."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
