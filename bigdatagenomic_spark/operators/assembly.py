@@ -172,9 +172,8 @@ DRIVER_WALK_TIME_CAP_ROWS = 20_000_000  # measured walk/doubling crossover
                                # (SCALING.md path-extraction sweep: walk's
                                # per-row driver cost ~7.8 us/row overtakes
                                # pointer doubling around ~20M rows; measured
-                               # when the walked path was a Python-RDD frame,
-                               # which costs more per row than the local
-                               # relation it is now, so the cap is cautious)
+                               # with a Python-RDD path frame, dearer per row
+                               # than the local relation, so it errs low)
 PATH_SCHEMA = StructType(
     [StructField("pos", LongType()), StructField("read_id", LongType())]
 )

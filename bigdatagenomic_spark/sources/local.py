@@ -8,6 +8,9 @@ a frame as a ``LogicalRDD`` over a Python RDD, so every job that reads it
 :func:`local_frame` hands Spark an Arrow table instead, which it plans as
 a ``LocalRelation`` (``LocalTableScan`` in the physical plan, with exact
 size statistics): the rows live in the plan and no Python worker runs.
+Above ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+default) Spark keeps the Arrow batches as a JVM-side RDD instead, which
+needs no Python worker either.
 """
 
 from __future__ import annotations
