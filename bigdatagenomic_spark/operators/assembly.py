@@ -51,6 +51,8 @@ Semantics pinned per SURVEY.md §2.A "faithful-semantics notes":
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -179,13 +181,20 @@ PATH_SCHEMA = StructType(
 )
 
 
+# Spark's byte-string suffixes (JavaUtils.byteStringAs): binary units
+_BYTE_SHIFTS = {"b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30,
+                "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
 def _driver_mem_bytes(spark) -> int:
-    """Parse ``spark.driver.memory`` (default 1g when unset)."""
+    """``spark.driver.memory`` in bytes (default 1g when unset), read by
+    Spark's rules: a whole number with an optional unit suffix in any
+    case (``4g``, ``4gb``, ``512M``), and MiB when it has none."""
     raw = str(spark.conf.get("spark.driver.memory", "1g")).strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if raw and raw[-1] in units:
-        return int(float(raw[:-1]) * units[raw[-1]])
-    return int(raw)
+    m = re.fullmatch(r"([0-9]+)([a-z]+)?", raw)
+    if m is None or (m.group(2) or "m") not in _BYTE_SHIFTS:
+        raise ValueError(f"spark.driver.memory={raw!r} is not a Spark byte string")
+    return int(m.group(1)) << _BYTE_SHIFTS[m.group(2) or "m"]
 
 
 def driver_walk_row_budget(spark, bytes_budget: int | None = None) -> int:

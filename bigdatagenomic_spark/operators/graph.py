@@ -10,22 +10,25 @@ the training-data-pipeline use case: q_graph_cc groups orders into
 co-purchase components).
 
 Scale notes: every superstep is one shuffle on vertex id. The driver
-loop localCheckpoints each round — iterative lineage otherwise grows
-unboundedly and re-executes from the scan on every action. Convergence
-is checked per round by carrying the round-start label alongside the
-new one (a filter + isEmpty on the checkpointed frame — no extra join);
-hash-min propagation needs O(component diameter) rounds, which is small
-for the short-diameter graphs entity resolution produces — for
-adversarial long-path graphs, extract_path-style pointer doubling
-(assembly.py) is the O(log n) alternative.
+loops localCheckpoint each round — iterative lineage otherwise grows
+unboundedly and re-executes from the scan on every action.
+connected_components picks its strategy from the size of the pinned,
+symmetrized edge list, as extract_path (assembly.py) does: within the
+driver-walk row budget the edges are collected and labeled by a
+union-find on the driver (the pinning job and one collect); above it, hash-min
+propagation with pointer jumping runs one checkpoint job per round, its
+convergence test counted inside that job by an Observation. On random
+graphs of 10k-5M edges the driver path was faster at every size
+(SCALING.md Part 16), so the budget needs no CC-specific cap.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from bigdatagenomic_spark.operators.assembly import driver_walk_row_budget
 from bigdatagenomic_spark.sources.local import local_frame
 
 
@@ -73,36 +76,89 @@ def connected_components(
 ) -> DataFrame:
     """(id, component) — component = min vertex id reachable (undirected).
 
-    Hash-min label propagation: every vertex repeatedly adopts the
-    smallest label among itself and its neighbors, until a round changes
-    nothing. Edges are symmetrized once up front; each round is one
-    aggregate_messages shuffle + a changed-count check, with
-    localCheckpoint cutting lineage.
+    Edges are symmetrized and pinned once (``sym``); the job that pins
+    them also counts the rows through an ``Observation``, and the count
+    picks the physical strategy, as :func:`~bigdatagenomic_spark.
+    operators.assembly.extract_path` picks between its driver walk and
+    pointer doubling:
 
-    Deliberately NOT adaptive (no small-graph driver union-find): the
-    measured cost is dominated by materializing the edge pipeline into
-    the up-front checkpoint, each subsequent round runs on the tiny
-    checkpointed frame, and pointer jumping bounds the round count by
-    O(log diameter) — while a Python local-relation result adds
-    ~0.4 s/pass of serialization overhead that a near-empty loop never
-    pays.
+    * **small graph** (``sym`` rows ≤ :func:`~bigdatagenomic_spark.
+      operators.assembly.driver_walk_row_budget`, the same "fits in one
+      node's memory" rule): one more job collects ``sym`` as Arrow, a
+      union-find with min-id roots labels it on the driver, and the
+      labels come back as a local relation.
+    * **large graph**: hash-min label propagation over the pinned
+      ``sym`` — every vertex adopts the smallest label among itself and
+      its neighbors, then the label of its label (pointer jumping),
+      until a round changes nothing. One job per round.
+
+    Both give the same frame: a self-loop vertex labels itself and
+    empty input gives no rows. On ``q_graph_cc``'s sf0.001 graph the
+    loop alone ran 55 jobs per call (2.1-3.0 s steady); the driver path
+    runs 8 (0.38-0.55 s), the loop 50 when forced (4-core host,
+    ``local[4]``, five warm calls each). The loop used to be kept for
+    every size because a driver-built result then went through a
+    Python-RDD ``createDataFrame`` (~0.4 s per pass of Python worker
+    start); ``local_frame`` builds an Arrow local relation and starts no
+    Python worker. On random graphs of 10k-5M edges the driver path was
+    the faster one at every size (SCALING.md Part 16), so the budget
+    carries no CC-specific cap.
     """
-    # lazy up-front checkpoints (round 15): both still pin their frames
-    # at first materialization — which now happens inside round 1's
-    # checkpoint job instead of two standalone blocking driver jobs.
-    # Interleaved A/B: q_graph_cc 1.118 vs 1.194 s, q_dedup_survivors
-    # 1.076 vs 1.121 s (min-of-3 pairs). A SECOND pointer jump per
-    # round was also tried (VERDICT r14 #4) and measured strictly
-    # worse: rounds-to-converge did NOT drop (3 -> 3 on q_graph_cc,
-    # 1 -> 1 on the survivor pair graph — the co-purchase components
-    # are shallower than the jump schedule) while every round paid an
-    # extra self-join (1.556 vs 1.194 s) — reverted, not kept.
+    spark = edges.sparkSession
+    size = Observation()
     sym = (
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .observe(size, F.count(F.lit(1)).alias("rows"))
+        .localCheckpoint(eager=True)
     )
+    if size.get["rows"] <= driver_walk_row_budget(spark):
+        vid = sym.schema["src"].dataType
+        return local_frame(
+            spark,
+            _union_find(sym.toArrow()),
+            StructType([StructField("id", vid), StructField("component", vid)]),
+        )
+    return _hash_min(sym, max_rounds)
+
+
+def _union_find(sym) -> list[tuple]:
+    """(id, min reachable id) for every vertex of the symmetrized Arrow
+    edge table ``sym``: union-find with path halving whose roots are
+    always the smallest member. Each undirected edge is read once (the
+    ``src < dst`` half); an edge with a null end joins nothing, and a
+    null vertex labels itself null, as the hash-min loop leaves it."""
+    import pyarrow.compute as pc
+
+    parent = {v: v for v in pc.unique(sym["src"]).to_pylist()}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    half = sym.filter(pc.less(sym["src"], sym["dst"]))
+    for batch in half.to_batches(max_chunksize=1 << 16):
+        for a, b in zip(batch["src"].to_pylist(), batch["dst"].to_pylist()):
+            ra, rb = find(a), find(b)
+            if ra < rb:
+                parent[rb] = ra
+            elif rb < ra:
+                parent[ra] = rb
+    return [(v, find(v)) for v in parent]
+
+
+def _hash_min(sym: DataFrame, max_rounds: int) -> DataFrame:
+    """The distributed strategy of :func:`connected_components` over the
+    pinned symmetrized edges: one aggregate_messages shuffle plus a
+    pointer jump per round, each round one checkpoint job."""
+    # A SECOND pointer jump per round was tried (VERDICT r14 #4) and
+    # measured strictly worse: rounds-to-converge did NOT drop (3 -> 3
+    # on q_graph_cc, 1 -> 1 on the survivor pair graph — the
+    # co-purchase components are shallower than the jump schedule)
+    # while every round paid an extra self-join (1.556 vs 1.194 s).
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
@@ -131,7 +187,12 @@ def connected_components(
         parents = stepped.select(
             F.col("id").alias("component"), F.col("component").alias("_parent")
         )
-        new_labels = (
+        # convergence check: the round-start label rides along as _old
+        # and the checkpoint job itself counts the changed labels, so a
+        # round is one job. A retried task can only add to the count,
+        # never hide a change, so a zero is exact.
+        changed = Observation()
+        labels = (
             stepped.join(parents, "component", "left")
             .select(
                 "id",
@@ -140,15 +201,11 @@ def connected_components(
                     F.col("component"), F.coalesce("_parent", F.col("component"))
                 ).alias("component"),
             )
+            .observe(changed, F.count_if(F.col("component") != F.col("_old")).alias("n"))
+            .select("id", "component")
             .localCheckpoint(eager=True)
         )
-        # convergence check: the round-start label rides along as _old,
-        # so "anything changed?" is a filter on the frame just
-        # checkpointed — no per-round (new ⋈ old) shuffle join, and
-        # isEmpty short-circuits at the first changed row
-        converged = new_labels.where(F.col("component") != F.col("_old")).isEmpty()
-        labels = new_labels.select("id", "component")
-        if converged:
+        if changed.get["n"] == 0:
             break
     return labels
 

@@ -175,6 +175,32 @@ def test_driver_walk_budget_is_byte_derived(spark):
     )
 
 
+@pytest.mark.parametrize(
+    "conf, mib",
+    [("1g", 1024), ("1024", 1024), ("512mb", 512), ("4gb", 4096),
+     ("2t", 2 << 20), (" 8G ", 8192)],
+)
+def test_driver_mem_bytes_reads_spark_byte_strings(conf, mib):
+    """spark.driver.memory by Spark's rules: binary unit suffixes with or
+    without a trailing b, in any case; MiB when there is no suffix."""
+    from types import SimpleNamespace
+
+    from bigdatagenomic_spark.operators.assembly import _driver_mem_bytes
+
+    spark = SimpleNamespace(conf={"spark.driver.memory": conf})
+    assert _driver_mem_bytes(spark) == mib << 20
+
+
+@pytest.mark.parametrize("conf", ["1.5g", "4x", "g", ""])
+def test_driver_mem_bytes_rejects_what_spark_rejects(conf):
+    from types import SimpleNamespace
+
+    from bigdatagenomic_spark.operators.assembly import _driver_mem_bytes
+
+    with pytest.raises(ValueError):
+        _driver_mem_bytes(SimpleNamespace(conf={"spark.driver.memory": conf}))
+
+
 def test_driver_walk_budget_time_cap_governs_big_drivers(spark):
     """VERDICT r7 #8: the walk is a serial per-row driver loop whose
     measured crossover vs pointer doubling is ~20M rows (SCALING.md

@@ -14,6 +14,7 @@ from bigdatagenomic_spark.operators.graph import (
     out_degrees,
     q_graph_cc,
 )
+from tests import test_edge_cases
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -128,6 +129,61 @@ def test_cc_chain_and_islands(spark):
     )
     got = {(r.id, r.component) for r in connected_components(e).collect()}
     assert {(1, 1), (4, 1), (5, 1), (11, 10), (12, 10), (20, 20)} <= got
+
+
+def _force_hash_min(monkeypatch):
+    """Send connected_components down its distributed loop: a row budget
+    below every count, the empty graph's 0 included."""
+    from bigdatagenomic_spark.operators import graph
+
+    monkeypatch.setattr(graph, "driver_walk_row_budget", lambda spark: -1)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_connected_components_two_islands,
+        test_cc_chain_and_islands,
+        test_cc_matches_union_find_on_copurchase_graph,
+        test_edge_cases.test_connected_components_no_edges,
+    ],
+    ids=lambda case: case.__name__,
+)
+def test_cc_cases_on_the_hash_min_loop(spark, monkeypatch, case):
+    """The CC tests above label their small graphs on the driver; the
+    same checks must hold on the hash-min loop that large graphs take."""
+    _force_hash_min(monkeypatch)
+    case(spark)
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [[], [(5, 5), (7, 7)], [(1, None), (None, 2), (2, 3)]],
+    ids=["empty", "self_loops", "null_ends"],
+)
+def test_cc_paths_return_identical_frames(spark, monkeypatch, pairs):
+    """Driver union-find and hash-min loop: same schema, same rows."""
+    e = _edges(spark, pairs)
+    driver = connected_components(e)
+    _force_hash_min(monkeypatch)
+    loop = connected_components(e)
+    assert driver.schema.simpleString() == loop.schema.simpleString()
+    assert sorted(driver.collect(), key=repr) == sorted(loop.collect(), key=repr)
+
+
+def test_q_graph_cc_job_count(spark):
+    """On the sf0.001 tables the edge list fits the driver budget, so
+    building and collecting q_graph_cc runs a handful of jobs; the
+    hash-min loop ran 55 (a checkpoint and a convergence job per round)."""
+    sc = spark.sparkContext
+    group = "test-q-graph-cc-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        q_graph_cc(spark, SF_DIR).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 12, len(jobs)
 
 
 def test_triangle_count_matches_bruteforce(spark):

@@ -1,7 +1,10 @@
 """Empirical scale validation (VERDICT r6 #1): run the most expensive
 headline plan families at 1x / 10x / 100x the sf0.1 documents corpus
 (tools/make_scale_corpus.py) plus the assembly path extraction at
-20k / 200k / 2M-read chains, and report wall-time growth.
+20k / 200k / 2M-read chains, and report wall-time growth. With ``--cc``
+it instead times connected_components' two strategies on random graphs
+of 10k / 100k / 1M / 5M edges: the driver union-find (budget forced
+open) against the hash-min loop (budget forced shut).
 
 Pass criterion: near-linear growth — a workload's time ratio should
 track its data ratio (x10 ≈ 10x, x100 ≈ 100x) within constant factors;
@@ -15,7 +18,8 @@ registry entries bound their O(n^2)-flavored verification samples by
 contract, which would mask scaling.
 
 Usage: python tools/scale_check.py [corpus_dir] [--out FILE]
-(default corpus_dir /tmp/scale_corpus; expects x1/x10/x100 under it).
+(default corpus_dir /tmp/scale_corpus; expects x1/x10/x100 under it);
+       python tools/scale_check.py --cc [--out FILE] (needs no input).
 """
 
 from __future__ import annotations
@@ -98,6 +102,37 @@ def chain_reads(spark, n: int):
     )
 
 
+CC_EDGES = (10_000, 100_000, 1_000_000, 5_000_000)
+
+
+def random_edges(spark, n: int):
+    # n uniform random edges over n vertices (mean degree 2): one giant
+    # component of ~80% of the vertices, short diameter, many small ones
+    return spark.range(n).select(
+        (F.xxhash64("id", F.lit(1)).bitwiseAND(F.lit((1 << 62) - 1)) % n).alias("src"),
+        (F.xxhash64("id", F.lit(2)).bitwiseAND(F.lit((1 << 62) - 1)) % n).alias("dst"),
+    )
+
+
+def cc_crossover(spark) -> dict:
+    """min-of-2 seconds per strategy and edge count, after one untimed
+    warm-up of each strategy on the smallest graph."""
+    from bigdatagenomic_spark.operators import graph
+
+    budgets = {"driver": 1 << 62, "loop": -1}
+    graphs = {n: random_edges(spark, n).localCheckpoint(eager=True) for n in CC_EDGES}
+    out: dict = {}
+    for strategy, budget in budgets.items():
+        graph.driver_walk_row_budget = lambda spark, _b=budget: _b
+        force(graph.connected_components(graphs[CC_EDGES[0]]))
+        per = {}
+        for n, e in graphs.items():
+            per[f"e{n}"] = time_workload(lambda: graph.connected_components(e))
+            print(f"cc[{strategy}] edges={n}: {per[f'e{n}']}s", flush=True)
+        out[strategy] = per
+    return out
+
+
 def time_workload(build, runs: int = 2) -> float:
     ts = []
     for _ in range(runs):
@@ -117,6 +152,8 @@ def main() -> int:
     corpus_dir = argv[0] if argv else "/tmp/scale_corpus"
     spark = get_spark(app_name="scale-check")
     spark.sparkContext.setLogLevel("ERROR")
+    if corpus_dir == "--cc":
+        return emit({"cc": cc_crossover(spark)}, out_path)
 
     results: dict = {"corpus": {}, "chain": {}}
     for name, fn in CORPUS_WORKLOADS:
@@ -152,6 +189,10 @@ def main() -> int:
         per["ratio_100"] = round(per[f"n{CHAIN_SIZES[2]}"] / per[f"n{CHAIN_SIZES[0]}"], 2)
         results["chain"][strategy] = per
 
+    return emit(results, out_path)
+
+
+def emit(results: dict, out_path: str | None) -> int:
     line = json.dumps(results)
     print(line)
     if out_path:
