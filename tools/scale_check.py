@@ -149,11 +149,11 @@ def main() -> int:
         i = argv.index("--out")
         out_path = argv[i + 1]
         del argv[i : i + 2]
-    corpus_dir = argv[0] if argv else "/tmp/scale_corpus"
     spark = get_spark(app_name="scale-check")
     spark.sparkContext.setLogLevel("ERROR")
-    if corpus_dir == "--cc":
+    if "--cc" in argv:
         return emit({"cc": cc_crossover(spark)}, out_path)
+    corpus_dir = argv[0] if argv else "/tmp/scale_corpus"
 
     results: dict = {"corpus": {}, "chain": {}}
     for name, fn in CORPUS_WORKLOADS:
