@@ -288,12 +288,13 @@ def curriculum_order(docs: DataFrame, stage_tokens: int = STAGE_TOKENS) -> DataF
 
     The ordering key is the INTEGER q10k score (quality floored at 4
     decimals ×10000, :func:`curate`'s convention), so the total order
-    (q10k DESC, doc_id) is engine-exact. The global order and the
-    running token count are both TWO-PHASE (scale.two_phase_cumsum):
-    range-partition on the schedule order, per-partition partials,
-    broadcast offsets — no single-partition window anywhere, so the
-    schedule materializes at any corpus size. A doc's stage is decided
-    by where its cumulative END token lands: stage = (cum_tok - 1) div
+    (q10k DESC, doc_id) is engine-exact. The running token count is
+    scale.two_phase_cumsum over the pinned scores: a corpus within the
+    driver budget runs the plain window over one partition, a larger
+    one goes TWO-PHASE (range-partition on the schedule order,
+    per-partition partials, broadcast offsets), so the schedule
+    materializes at any corpus size. A doc's stage is decided by where
+    its cumulative END token lands: stage = (cum_tok - 1) div
     stage_tokens.
     """
     from bigdatagenomic_spark.operators.scale import two_phase_cumsum

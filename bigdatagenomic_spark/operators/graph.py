@@ -86,7 +86,8 @@ def connected_components(
       operators.assembly.driver_walk_row_budget`, the same "fits in one
       node's memory" rule): one more job collects ``sym`` as Arrow, a
       union-find with min-id roots labels it on the driver, and the
-      labels come back as a local relation.
+      labels come back as a local relation in one partition, so a
+      caller's sort of them needs no range exchange.
     * **large graph**: hash-min label propagation over the pinned
       ``sym`` — every vertex adopts the smallest label among itself and
       its neighbors, then the label of its label (pointer jumping),
@@ -96,7 +97,8 @@ def connected_components(
     empty input gives no rows. On ``q_graph_cc``'s sf0.001 graph the
     loop alone ran 55 jobs per call (2.1-3.0 s steady); the driver path
     runs 8 (0.38-0.55 s), the loop 50 when forced (4-core host,
-    ``local[4]``, five warm calls each). The loop used to be kept for
+    ``local[4]``, five warm calls each), and the one-partition labels
+    take the driver path to 6. The loop used to be kept for
     every size because a driver-built result then went through a
     Python-RDD ``createDataFrame`` (~0.4 s per pass of Python worker
     start); ``local_frame`` builds an Arrow local relation and starts no
@@ -119,7 +121,7 @@ def connected_components(
             spark,
             _union_find(sym.toArrow()),
             StructType([StructField("id", vid), StructField("component", vid)]),
-        )
+        ).coalesce(1)
     return _hash_min(sym, max_rounds)
 
 

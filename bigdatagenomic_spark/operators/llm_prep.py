@@ -667,13 +667,15 @@ def assign_shards(
     reshuffles the epoch; changing nothing replays it byte-identically.
 
     100 TB shape: the hash and shard columns are map-only; the
-    per-shard position is a TWO-PHASE rank (operators/scale.py), so a
-    shard never funnels into a single window task — corpus/n_shards
-    rows per shard split across range partitions whatever n_shards is
-    (VERDICT r5 #6: the previous per-shard row_number window made the
-    default n_shards=8 a hot-partition foot-gun). Output is identical
-    to the window formulation; still pick n_shards ≈ number of trainer
-    data-loader workers so the SHARDS themselves balance the loaders.
+    per-shard position is scale.two_phase_rank. A corpus within the
+    driver budget is ranked by the plain per-shard window over one
+    partition; a larger one goes TWO-PHASE, so a shard never funnels
+    into a single window task — corpus/n_shards rows per shard split
+    across range partitions whatever n_shards is (VERDICT r5 #6: a
+    per-shard row_number window at any size made the default
+    n_shards=8 a hot-partition foot-gun). Output is identical either
+    way; still pick n_shards ≈ number of trainer data-loader workers
+    so the SHARDS themselves balance the loaders.
     """
     from bigdatagenomic_spark.operators.scale import two_phase_rank
 
@@ -733,12 +735,13 @@ def token_budget_mix(
     inclusive bound — the doc that crosses the line is dropped).
 
     100 TB shape: token counting is map-only; the cumulative sum is
-    :func:`~bigdatagenomic_spark.operators.scale.two_phase_cumsum` —
-    range-partitioned partial sums + broadcast offsets, so no source
-    ever funnels into a single window task (the naive per-source
-    running-sum window is exactly the hot-partition the zipf /
-    train-shards fixes removed). Integral token counts keep the
-    two-phase sum exact.
+    :func:`~bigdatagenomic_spark.operators.scale.two_phase_cumsum`. A
+    corpus within the driver budget runs the plain per-source window
+    over one partition; a larger one gets range-partitioned partial
+    sums + broadcast offsets, so no source ever funnels into a single
+    window task (the naive per-source running-sum window is exactly
+    the hot-partition the zipf / train-shards fixes removed). Integral
+    token counts keep the two-phase sum exact.
     """
     from bigdatagenomic_spark.operators.scale import two_phase_cumsum
 

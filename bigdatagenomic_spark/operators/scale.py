@@ -21,9 +21,12 @@ shuffle into a local merge.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from bigdatagenomic_spark.operators.assembly import driver_walk_row_budget
 from bigdatagenomic_spark.sources.local import local_frame
 
 # count/sum/min/max re-aggregate cleanly; avg must be derived as sum/count
@@ -38,7 +41,9 @@ def two_phase_rank(
     rank_col: str = "rank",
     checkpoint_input: bool = False,
 ) -> DataFrame:
-    """Exact dense row-number rank WITHOUT a single-partition sort.
+    """Exact row-number rank, ``row_number() OVER (PARTITION BY
+    group_cols ORDER BY order_cols)`` as a long, that scales past one
+    window task.
 
     Spark executes an unpartitioned ``row_number()`` window in ONE
     partition — an OOM/straggler the moment the ranked set is unbounded
@@ -57,63 +62,14 @@ def two_phase_rank(
     order (add a unique tiebreaker column).
 
     ``group_cols=None``/``[]`` ranks globally; otherwise ranks restart
-    per group (the scalable form of
-    ``row_number() OVER (PARTITION BY g ORDER BY ...)`` when single
-    groups are too big for one task).
+    per group (the scalable form when single groups are too big for
+    one task). With ``checkpoint_input`` an input that fits the driver
+    budget is ranked by the plain window over one partition instead
+    (see :func:`_two_phase`).
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    group_cols = list(group_cols or [])
-    if n_parts is None:
-        # default to the session's shuffle parallelism: a fixed small
-        # constant caps the per-partition slice size at corpus/constant,
-        # which stops scaling exactly when the cluster does; the rank
-        # values are partition-count-invariant, so this is purely a
-        # physical knob
-        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if checkpoint_input:
-        # repartitionByRange SAMPLES its input to pick range bounds, so
-        # an un-materialized df computes twice (sample pass + shuffle
-        # pass). Opt in when df's lineage is expensive (a fact scan or
-        # a tokenize) and its row count is grid-sized (SCALING.md
-        # Part 14 addendum, round 13).
-        df = df.localCheckpoint(eager=True)
-    parts = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in group_cols], *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the collect below is always the first action, so it
-        # materializes the checkpoint in the SAME job — one fewer
-        # blocking job per call than eager (round 14); the pid pinning
-        # is identical (pinned at first materialization)
-        .localCheckpoint(eager=False)
-    )
-    counts = (
-        parts.groupBy("_pid", *group_cols).agg(F.count("*").alias("_n")).collect()
-    )
-    per_group: dict[tuple, list[tuple[int, int]]] = {}
-    for r in counts:
-        g = tuple(r[c] for c in group_cols)
-        per_group.setdefault(g, []).append((r["_pid"], r["_n"]))
-    off_rows = []
-    for g, lst in per_group.items():
-        acc = 0
-        for pid, n in sorted(lst):
-            off_rows.append((pid, *g, acc))
-            acc += n
-    schema = StructType(
-        [StructField("_pid", IntegerType())]
-        + [parts.schema[c] for c in group_cols]
-        + [StructField("_off", LongType())]
-    )
-    off_df = local_frame(df.sparkSession, off_rows, schema)
-    local = F.row_number().over(
-        W.partitionBy("_pid", *group_cols).orderBy(*order_cols)
-    )
-    return (
-        parts.join(F.broadcast(off_df), ["_pid", *group_cols], "left")
-        .withColumn(rank_col, F.coalesce("_off", F.lit(0)) + local)
-        .drop("_pid", "_off")
+    return _two_phase(
+        df, F.row_number(), F.count("*"), order_cols, group_cols, n_parts,
+        rank_col, checkpoint_input,
     )
 
 
@@ -126,32 +82,77 @@ def two_phase_cumsum(
     out_col: str = "cumsum",
     checkpoint_input: bool = False,
 ) -> DataFrame:
-    """Exact (per-group) INCLUSIVE running sum of an integral column
-    WITHOUT a single-partition window — the cumsum sibling of
-    :func:`two_phase_rank`, same machinery: (1) range-repartition on
-    (group_cols + order_cols) with the partition assignment pinned,
-    (2) per-(partition, group) partial SUMS collected as a bounded
-    offset table (≤ n_parts × |groups| rows), (3) local window cumsum
-    + broadcast-joined exclusive prefix offset. ``order_cols`` must be
-    a total order. Restricted by intent to integral values (token
-    counts, byte sizes): long addition is associative, so the result
-    is exactly the single-window cumsum wherever the range boundaries
-    land — float inputs would make the answer boundary-dependent in
-    the last ulp.
+    """Exact (per-group) INCLUSIVE running sum of an integral column as
+    a long, ``sum(val_col) OVER (PARTITION BY group_cols ORDER BY
+    order_cols ROWS UNBOUNDED PRECEDING)``, with the machinery of
+    :func:`two_phase_rank`: per-(partition, group) partial SUMS as the
+    offset table, a local window cumsum plus the broadcast-joined
+    exclusive prefix offset. Nulls count as the window counts them: a
+    row sees null until its group's first non-null value.
+    ``order_cols`` must be a total order. Restricted by intent to
+    integral values (token counts, byte sizes): long addition is
+    associative, so the result is exactly the single-window cumsum
+    wherever the range boundaries land — float inputs would make the
+    answer boundary-dependent in the last ulp.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+    return _two_phase(
+        df, F.sum(val_col), F.sum(val_col).cast("long"), order_cols,
+        group_cols, n_parts, out_col, checkpoint_input,
+    )
 
+
+def _two_phase(
+    df: DataFrame,
+    fn: Column,
+    partial: Column,
+    order_cols: list,
+    group_cols: list[str] | None,
+    n_parts: int | None,
+    out_col: str,
+    checkpoint_input: bool,
+) -> DataFrame:
+    """The running window function ``fn`` over (group_cols, order_cols)
+    as a long column ``out_col``; ``partial`` aggregates one (partition,
+    group) slice into what the later slices of its group add on.
+
+    ``checkpoint_input`` pins ``df`` by an eager ``localCheckpoint``
+    first: repartitionByRange SAMPLES its input to pick range bounds, so
+    an un-materialized df computes twice (sample pass + shuffle pass);
+    opt in when df's lineage is expensive (a fact scan or a tokenize;
+    SCALING.md Part 14 addendum). That job also counts the rows, and an
+    input of at most ``driver_walk_row_budget`` rows — the "fits in one
+    node's memory" rule that picks extract_path's driver walk and
+    connected_components' union-find — comes back as one partition
+    under the plain window: no range sample, offsets or broadcast, and
+    the window (like a caller's later ``orderBy``) sorts inside that
+    partition with no exchange. Above the budget, and without
+    ``checkpoint_input`` (where counting would cost a job of its own),
+    the two-phase path runs.
+    """
     group_cols = list(group_cols or [])
-    if n_parts is None:
-        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    spark = df.sparkSession
+
+    def running(spec):
+        return fn.over(
+            spec.orderBy(*order_cols).rowsBetween(W.unboundedPreceding, W.currentRow)
+        )
+
     if checkpoint_input:
-        # repartitionByRange SAMPLES its input to pick range bounds, so
-        # an un-materialized df computes twice (sample pass + shuffle
-        # pass). Opt in when df's lineage is expensive (a fact scan or
-        # a tokenize) and its row count is grid-sized (SCALING.md
-        # Part 14 addendum, round 13).
-        df = df.localCheckpoint(eager=True)
+        size = Observation()
+        df = df.observe(size, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+            eager=True
+        )
+        if size.get["rows"] <= driver_walk_row_budget(spark):
+            return df.coalesce(1).withColumn(
+                out_col, running(W.partitionBy(*group_cols)).cast("long")
+            )
+    if n_parts is None:
+        # default to the session's shuffle parallelism: a fixed small
+        # constant caps the per-partition slice size at corpus/constant,
+        # which stops scaling exactly when the cluster does; the result
+        # is partition-count-invariant, so this is purely a physical knob
+        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    keys = ["_pid", *group_cols]
     parts = (
         df.repartitionByRange(n_parts, *[F.col(c) for c in group_cols], *order_cols)
         .withColumn("_pid", F.spark_partition_id())
@@ -161,36 +162,31 @@ def two_phase_cumsum(
         # is identical (pinned at first materialization)
         .localCheckpoint(eager=False)
     )
-    sums = (
-        parts.groupBy("_pid", *group_cols)
-        .agg(F.sum(val_col).cast("long").alias("_s"))
-        .collect()
-    )
-    per_group: dict[tuple, list[tuple[int, int]]] = {}
-    for r in sums:
-        g = tuple(r[c] for c in group_cols)
-        per_group.setdefault(g, []).append((r["_pid"], r["_s"]))
+    partials = parts.groupBy(*keys).agg(partial.alias("_p")).collect()
+    # a slice's offset is the sum of its group's earlier partials, null
+    # until the first non-null one (a sum over nulls only is null)
+    acc: dict[tuple, int] = {}
     off_rows = []
-    for g, lst in per_group.items():
-        acc = 0
-        for pid, s in sorted(lst):
-            off_rows.append((pid, *g, acc))
-            acc += s
+    for r in sorted(partials, key=lambda r: r["_pid"]):
+        g = tuple(r[c] for c in group_cols)
+        off_rows.append((r["_pid"], *g, acc.get(g)))
+        if r["_p"] is not None:
+            acc[g] = acc.get(g, 0) + r["_p"]
+    # the offset table's keys are renamed so the join can match a null
+    # group null-safely (the window's PARTITION BY groups nulls together)
+    off_keys = [f"_k{i}" for i in range(len(keys))]
     schema = StructType(
-        [StructField("_pid", IntegerType())]
-        + [parts.schema[c] for c in group_cols]
+        [StructField(o, parts.schema[k].dataType) for o, k in zip(off_keys, keys)]
         + [StructField("_off", LongType())]
     )
-    off_df = local_frame(df.sparkSession, off_rows, schema)
-    local = F.sum(val_col).over(
-        W.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
+    off_df = local_frame(spark, off_rows, schema)
+    on = [F.col(k).eqNullSafe(F.col(o)) for k, o in zip(keys, off_keys)]
+    off, local = F.col("_off"), F.col(out_col)
     return (
-        parts.join(F.broadcast(off_df), ["_pid", *group_cols], "left")
-        .withColumn(out_col, (F.coalesce("_off", F.lit(0)) + local).cast("long"))
-        .drop("_pid", "_off")
+        parts.join(F.broadcast(off_df), on, "left")
+        .withColumn(out_col, running(W.partitionBy(*keys)))
+        .withColumn(out_col, F.coalesce(off + local, local, off).cast("long"))
+        .drop("_pid", *off_keys, "_off")
     )
 
 
@@ -651,9 +647,6 @@ def two_phase_prefix_max(
     rows; NULL for the global first row) — the record-detection /
     skyline primitive. ``order_cols`` must be a total order.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     if n_parts is None:
         n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     parts = (

@@ -174,7 +174,9 @@ def test_cc_paths_return_identical_frames(spark, monkeypatch, pairs):
 def test_q_graph_cc_job_count(spark):
     """On the sf0.001 tables the edge list fits the driver budget, so
     building and collecting q_graph_cc runs a handful of jobs; the
-    hash-min loop ran 55 (a checkpoint and a convergence job per round)."""
+    hash-min loop ran 55 (a checkpoint and a convergence job per round).
+    The labels come back as one partition, so the ORDER BY sorts them
+    in place; a range-partitioned sort of them cost 3 more jobs."""
     sc = spark.sparkContext
     group = "test-q-graph-cc-jobs"
     sc.setJobGroup(group, group)
@@ -183,7 +185,7 @@ def test_q_graph_cc_job_count(spark):
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(jobs) <= 12, len(jobs)
+    assert len(jobs) <= 6, len(jobs)
 
 
 def test_triangle_count_matches_bruteforce(spark):

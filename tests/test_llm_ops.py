@@ -756,6 +756,25 @@ def test_curriculum_order_stages_by_cumulative_tokens(spark):
     assert out[100].q10k < out[0].q10k
 
 
+def test_q_x_curriculum_job_count(spark):
+    """On the sf0.001 documents the scored corpus fits the driver budget,
+    so the running token count is the plain window over one pinned
+    partition: building and collecting q_x_curriculum runs a handful of
+    jobs. The two-phase path ran 12 (range sample, offsets collect and
+    the ORDER BY's range sort on top)."""
+    from bigdatagenomic_spark.operators.curation import q_x_curriculum
+
+    sc = spark.sparkContext
+    group = "test-q-x-curriculum-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        q_x_curriculum(spark, "/root/testdata/sf0.001").collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 5, len(jobs)
+
+
 def test_quality_score_associates_like_oracle(spark):
     """The 0.3 * (alpha / nch) term is divided first, as in the DuckDB
     oracles. This 155-char text scores 0.55625, a rounding boundary of

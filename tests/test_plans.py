@@ -515,26 +515,49 @@ def test_zipf_rank_window_is_partitioned(spark):
     assert opt.count("windowspecdefinition") == 1, opt
 
 
-def test_train_shards_rank_window_is_partitioned(spark):
+def _force_two_phase(monkeypatch):
+    """Plan the two-phase helpers' checkpoint_input callers as if their
+    input exceeded the driver budget (the path large corpora take)."""
+    from bigdatagenomic_spark.operators import scale
+
+    monkeypatch.setattr(scale, "driver_walk_row_budget", lambda spark: -1)
+
+
+def test_train_shards_rank_window_is_partitioned(spark, monkeypatch):
     """q_x_train_shards must never rank a whole shard in one window
-    task (VERDICT r5 item 6): the per-shard position is two-phase —
-    range repartition + per-(pid, shard) row_number. Pin that the
-    plan's ONLY window is partitioned on _pid (same guard as the zipf
-    fix)."""
+    task (VERDICT r5 item 6): above the driver budget the per-shard
+    position is two-phase — range repartition + per-(pid, shard)
+    row_number. Pin that the plan's ONLY window is partitioned on _pid
+    (same guard as the zipf fix)."""
+    _force_two_phase(monkeypatch)
     df = _df(spark, "q_x_train_shards")
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert "windowspecdefinition(_pid" in opt, opt
     assert opt.count("windowspecdefinition") == 1, opt
 
 
-def test_token_budget_mix_window_is_partitioned(spark):
-    """q_x_token_budget_mix's running sum must be two-phase (range
-    repartition + per-(pid, source) window) — never one unbounded
-    per-source window task. Same guard as zipf/train_shards."""
+def test_token_budget_mix_window_is_partitioned(spark, monkeypatch):
+    """Above the driver budget q_x_token_budget_mix's running sum must
+    be two-phase (range repartition + per-(pid, source) window) — never
+    one unbounded per-source window task. Same guard as
+    zipf/train_shards."""
+    _force_two_phase(monkeypatch)
     df = _df(spark, "q_x_token_budget_mix")
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert "windowspecdefinition(_pid" in opt, opt
     assert opt.count("windowspecdefinition") == 1, opt
+
+
+def test_token_budget_mix_within_budget_is_one_partition(spark):
+    """Within the driver budget the pinned input is one partition under
+    the plain per-source window: the window and the caller's ORDER BY
+    sort inside it, so the plan has no shuffle at all."""
+    df = _df(spark, "q_x_token_budget_mix")
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("windowspecdefinition") == 1, opt
+    assert "_pid" not in opt, opt
+    assert "Repartition 1, false" in opt[opt.index("Window [") :], opt
+    assert exchange_count(df) == 0, formatted_plan(df)
 
 
 def test_simhash_signatures_are_map_only(spark):

@@ -136,6 +136,61 @@ def test_two_phase_cumsum_matches_window_sum(spark):
     assert got_g == want_g
 
 
+def _force_two_phase(monkeypatch):
+    """Send checkpoint_input callers down the two-phase path: a row
+    budget below every count, the empty input's 0 included."""
+    from bigdatagenomic_spark.operators import scale
+
+    monkeypatch.setattr(scale, "driver_walk_row_budget", lambda spark: -1)
+
+
+@pytest.mark.parametrize("n_parts", [1, 7])
+@pytest.mark.parametrize("grouped", [False, True], ids=["global", "grouped"])
+@pytest.mark.parametrize("op", ["rank", "cumsum"])
+def test_two_phase_paths_match_plain_window(spark, monkeypatch, op, grouped, n_parts):
+    """With checkpoint_input, an input within the driver budget takes the
+    one-partition plain window and a larger one the two-phase path; both
+    must equal the plain window, schema and values. The values hold
+    nulls (the first ~60 rows in id order, so a whole range partition
+    can be null) and one group key is null; the empty input too."""
+    import random
+
+    from pyspark.sql import Window as W
+
+    from bigdatagenomic_spark.operators.scale import two_phase_cumsum, two_phase_rank
+
+    rng = random.Random(5)
+    rows = [
+        (i, rng.choice(["a", "b", None]), None if i < 60 or rng.random() < 0.2 else rng.randint(0, 50))
+        for i in range(300)
+    ]
+    groups = ["g"] if grouped else []
+    if op == "rank":
+        fn = F.row_number()
+        run = lambda d, **kw: two_phase_rank(  # noqa: E731
+            d, [F.asc("id")], group_cols=groups, n_parts=n_parts, rank_col="out", **kw
+        )
+    else:
+        fn = F.sum("v")
+        run = lambda d, **kw: two_phase_cumsum(  # noqa: E731
+            d, "v", [F.asc("id")], group_cols=groups, n_parts=n_parts, out_col="out", **kw
+        )
+    win = W.partitionBy(*groups).orderBy("id").rowsBetween(W.unboundedPreceding, W.currentRow)
+    for data in (rows, []):
+        d = spark.createDataFrame(data, "id LONG, g STRING, v LONG")
+        want = d.withColumn("out", fn.over(win).cast("long"))
+        small = run(d, checkpoint_input=True)
+        with monkeypatch.context() as m:
+            _force_two_phase(m)
+            large = run(d, checkpoint_input=True)
+        plain_input = run(d)
+        expect = sorted(want.collect())
+        assert len(expect) == len(data)
+        for got in (small, large, plain_input):
+            assert got.schema == want.schema
+            assert sorted(got.collect()) == expect
+
+
 def test_salted_agg_is_two_phase(spark):
     ev = load_table(spark, SF_DIR, "events")
     out = salted_agg(
