@@ -4,7 +4,11 @@ headline plan families at 1x / 10x / 100x the sf0.1 documents corpus
 20k / 200k / 2M-read chains, and report wall-time growth. With ``--cc``
 it instead times connected_components' two strategies on random graphs
 of 10k / 100k / 1M / 5M edges: the driver union-find (budget forced
-open) against the hash-min loop (budget forced shut).
+open) against the hash-min loop (budget forced shut). With
+``--two-phase`` it times ``two_phase_cumsum(checkpoint_input=True)`` on
+generated frames of 100k / 1M / 5M / 20M rows: the plain window over one
+partition (budget forced open) against the two-phase path (budget
+forced shut).
 
 Pass criterion: near-linear growth — a workload's time ratio should
 track its data ratio (x10 ≈ 10x, x100 ≈ 100x) within constant factors;
@@ -19,7 +23,8 @@ contract, which would mask scaling.
 
 Usage: python tools/scale_check.py [corpus_dir] [--out FILE]
 (default corpus_dir /tmp/scale_corpus; expects x1/x10/x100 under it);
-       python tools/scale_check.py --cc [--out FILE] (needs no input).
+       python tools/scale_check.py --cc [--out FILE] (needs no input);
+       python tools/scale_check.py --two-phase [--out FILE] (needs no input).
 """
 
 from __future__ import annotations
@@ -133,6 +138,47 @@ def cc_crossover(spark) -> dict:
     return out
 
 
+TWO_PHASE_ROWS = (100_000, 1_000_000, 5_000_000, 20_000_000)
+
+
+def running_sum_frame(spark, n: int):
+    # n rows whose schedule order (score DESC, id) is a hash shuffle of
+    # the id order, as curriculum_order's (q10k DESC, doc_id) is
+    return spark.range(n).select(
+        "id",
+        (F.xxhash64("id", F.lit(3)).bitwiseAND(F.lit((1 << 62) - 1)) % 10_000).alias("score"),
+        (F.xxhash64("id", F.lit(4)).bitwiseAND(F.lit((1 << 62) - 1)) % 100).alias("v"),
+    )
+
+
+def two_phase_crossover(spark) -> dict:
+    """min-of-2 seconds per path and row count, after one untimed
+    warm-up of each path on the smallest frame."""
+    from bigdatagenomic_spark.operators import scale
+
+    budgets = {"window": 1 << 62, "two_phase": -1}
+    frames = {
+        n: running_sum_frame(spark, n).localCheckpoint(eager=True)
+        for n in TWO_PHASE_ROWS
+    }
+
+    def cumsum(d):
+        return scale.two_phase_cumsum(
+            d, "v", [F.desc("score"), F.asc("id")], checkpoint_input=True
+        )
+
+    out: dict = {}
+    for path, budget in budgets.items():
+        scale.driver_walk_row_budget = lambda spark, _b=budget: _b
+        force(cumsum(frames[TWO_PHASE_ROWS[0]]))
+        per = {}
+        for n, d in frames.items():
+            per[f"n{n}"] = time_workload(lambda: cumsum(d))
+            print(f"cumsum[{path}] rows={n}: {per[f'n{n}']}s", flush=True)
+        out[path] = per
+    return out
+
+
 def time_workload(build, runs: int = 2) -> float:
     ts = []
     for _ in range(runs):
@@ -153,6 +199,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     if "--cc" in argv:
         return emit({"cc": cc_crossover(spark)}, out_path)
+    if "--two-phase" in argv:
+        return emit({"two_phase": two_phase_crossover(spark)}, out_path)
     corpus_dir = argv[0] if argv else "/tmp/scale_corpus"
 
     results: dict = {"corpus": {}, "chain": {}}
