@@ -119,23 +119,29 @@ def random_edges(spark, n: int):
     )
 
 
+def crossover(module, budgets: dict, inputs: dict, call, label: str, unit: str) -> dict:
+    """min-of-2 seconds of ``call`` per path and input size, each path
+    forced by patching ``module.driver_walk_row_budget`` to its budget,
+    after one untimed warm-up of each path on the first input."""
+    out: dict = {}
+    for path, budget in budgets.items():
+        module.driver_walk_row_budget = lambda spark, _b=budget: _b
+        force(call(next(iter(inputs.values()))))
+        per = {}
+        for n, d in inputs.items():
+            key = f"{unit[0]}{n}"
+            per[key] = time_workload(lambda: call(d))
+            print(f"{label}[{path}] {unit}={n}: {per[key]}s", flush=True)
+        out[path] = per
+    return out
+
+
 def cc_crossover(spark) -> dict:
-    """min-of-2 seconds per strategy and edge count, after one untimed
-    warm-up of each strategy on the smallest graph."""
     from bigdatagenomic_spark.operators import graph
 
-    budgets = {"driver": 1 << 62, "loop": -1}
     graphs = {n: random_edges(spark, n).localCheckpoint(eager=True) for n in CC_EDGES}
-    out: dict = {}
-    for strategy, budget in budgets.items():
-        graph.driver_walk_row_budget = lambda spark, _b=budget: _b
-        force(graph.connected_components(graphs[CC_EDGES[0]]))
-        per = {}
-        for n, e in graphs.items():
-            per[f"e{n}"] = time_workload(lambda: graph.connected_components(e))
-            print(f"cc[{strategy}] edges={n}: {per[f'e{n}']}s", flush=True)
-        out[strategy] = per
-    return out
+    return crossover(graph, {"driver": 1 << 62, "loop": -1}, graphs,
+                     graph.connected_components, "cc", "edges")
 
 
 TWO_PHASE_ROWS = (100_000, 1_000_000, 5_000_000, 20_000_000)
@@ -152,11 +158,8 @@ def running_sum_frame(spark, n: int):
 
 
 def two_phase_crossover(spark) -> dict:
-    """min-of-2 seconds per path and row count, after one untimed
-    warm-up of each path on the smallest frame."""
     from bigdatagenomic_spark.operators import scale
 
-    budgets = {"window": 1 << 62, "two_phase": -1}
     frames = {
         n: running_sum_frame(spark, n).localCheckpoint(eager=True)
         for n in TWO_PHASE_ROWS
@@ -167,16 +170,8 @@ def two_phase_crossover(spark) -> dict:
             d, "v", [F.desc("score"), F.asc("id")], checkpoint_input=True
         )
 
-    out: dict = {}
-    for path, budget in budgets.items():
-        scale.driver_walk_row_budget = lambda spark, _b=budget: _b
-        force(cumsum(frames[TWO_PHASE_ROWS[0]]))
-        per = {}
-        for n, d in frames.items():
-            per[f"n{n}"] = time_workload(lambda: cumsum(d))
-            print(f"cumsum[{path}] rows={n}: {per[f'n{n}']}s", flush=True)
-        out[path] = per
-    return out
+    return crossover(scale, {"window": 1 << 62, "two_phase": -1}, frames,
+                     cumsum, "cumsum", "rows")
 
 
 def time_workload(build, runs: int = 2) -> float:
