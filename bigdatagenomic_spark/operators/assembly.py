@@ -51,13 +51,11 @@ Semantics pinned per SURVEY.md §2.A "faithful-semantics notes":
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from bigdatagenomic_spark.sources.local import local_frame
+from bigdatagenomic_spark.sources.local import fits_driver, local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -167,70 +165,16 @@ def scatter_invalidation(reads_with_next: DataFrame, edges: DataFrame) -> DataFr
 # phase 3a — path extraction along next_id (functional-graph walk)
 # ---------------------------------------------------------------------------
 
-DRIVER_WALK_ENTRY_BYTES = 90   # measured CPython dict-entry footprint for
-                               # a (boxed long -> boxed long) pair incl. slots
-DRIVER_WALK_MEM_FRACTION = 16  # walk map may use at most 1/16 of driver heap
-DRIVER_WALK_TIME_CAP_ROWS = 20_000_000  # measured walk/doubling crossover
-                               # (SCALING.md path-extraction sweep: walk's
-                               # per-row driver cost ~7.8 us/row overtakes
-                               # pointer doubling around ~20M rows; measured
-                               # with a Python-RDD path frame, dearer per row
-                               # than the local relation, so it errs low)
 PATH_SCHEMA = StructType(
     [StructField("pos", LongType()), StructField("read_id", LongType())]
 )
-
-
-# Spark's byte-string suffixes (JavaUtils.byteStringAs): binary units
-_BYTE_SHIFTS = {"b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30,
-                "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
-
-
-def _driver_mem_bytes(spark) -> int:
-    """``spark.driver.memory`` in bytes (default 1g when unset), read by
-    Spark's rules: a whole number with an optional unit suffix in any
-    case (``4g``, ``4gb``, ``512M``), and MiB when it has none."""
-    raw = str(spark.conf.get("spark.driver.memory", "1g")).strip().lower()
-    m = re.fullmatch(r"([0-9]+)([a-z]+)?", raw)
-    if m is None or (m.group(2) or "m") not in _BYTE_SHIFTS:
-        raise ValueError(f"spark.driver.memory={raw!r} is not a Spark byte string")
-    return int(m.group(1)) << _BYTE_SHIFTS[m.group(2) or "m"]
-
-
-def driver_walk_row_budget(spark, bytes_budget: int | None = None) -> int:
-    """Max successor-table rows the driver-walk strategy may collect
-    (``graph.connected_components`` applies it to its edge rows too).
-
-    TWO bounds, the tighter governs (VERDICT r5 #4 + r7 #8):
-
-    * **memory** — 1/DRIVER_WALK_MEM_FRACTION of ``spark.driver.memory``
-      divided by the ~90 B a (vid -> succ) dict entry costs in CPython.
-      A 4 GiB driver thus walks up to ~3M rows; a 1 GiB driver ~745k —
-      the same "fits comfortably in one node's memory" regime where
-      Spark would broadcast, scaled to the actual heap.
-    * **time** — ``DRIVER_WALK_TIME_CAP_ROWS``: the walk is a SERIAL
-      per-row driver loop (py4j collect + dict walk + local relation),
-      and SCALING.md's path-extraction sweep measured its crossover
-      against the distributed pointer-doubling path at ~20M rows. On a
-      big driver (128 GiB -> ~95M memory-budget rows) memory alone
-      would pick the slower strategy in the 20-95M band, so the
-      measured crossover caps the budget regardless of heap.
-    """
-    if bytes_budget is None:
-        bytes_budget = _driver_mem_bytes(spark) // DRIVER_WALK_MEM_FRACTION
-    return min(
-        max(1, bytes_budget // DRIVER_WALK_ENTRY_BYTES),
-        DRIVER_WALK_TIME_CAP_ROWS,
-    )
 
 
 def extract_path(
     reads_with_next: DataFrame,
     source: int,
     max_rounds: int = 40,
-    driver_walk_threshold: int | None = None,
     n_rows_hint: int | None = None,
-    driver_walk_bytes: int | None = None,
 ) -> DataFrame:
     """Extract the ``next_id`` chain from ``source`` as (pos, read_id).
 
@@ -240,9 +184,8 @@ def extract_path(
     adaptive physical strategy (same spirit as broadcast-vs-shuffle join
     selection):
 
-    * **small successor table** (row count ≤ the byte-derived budget of
-      :func:`driver_walk_row_budget`, overridable row-wise via
-      ``driver_walk_threshold`` or byte-wise via ``driver_walk_bytes``
+    * **small successor table** (row count within
+      :func:`~bigdatagenomic_spark.sources.local.fits_driver`'s budget
       — the same "fits in one node's memory" regime where Spark would
       broadcast it): collect the (vid → succ) map and walk the chain
       driver-side in O(L); one job instead of O(log L) shuffle rounds.
@@ -257,8 +200,6 @@ def extract_path(
     stopping when no new vertex joins the path.
     """
     spark = reads_with_next.sparkSession
-    if driver_walk_threshold is None:
-        driver_walk_threshold = driver_walk_row_budget(spark, driver_walk_bytes)
     succ = (
         reads_with_next.select(
             F.col("read_id").alias("v"), F.col("next_id").alias("s")
@@ -272,7 +213,7 @@ def extract_path(
     # can only over-estimate, i.e. err toward pointer doubling — never
     # toward collecting too much to the driver.
     n_succ = n_rows_hint if n_rows_hint is not None else succ.count()
-    if n_succ <= driver_walk_threshold:
+    if fits_driver(spark, n_succ):
         nxt = dict(succ.collect())
         order: list[tuple[int, int]] = []
         seen: set[int] = set()

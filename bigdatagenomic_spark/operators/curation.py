@@ -330,9 +330,6 @@ def curriculum_order(docs: DataFrame, stage_tokens: int = STAGE_TOKENS) -> DataF
         "n_tok",
         [F.desc("q10k"), F.asc("doc_id")],
         out_col="cum_tok",
-        # scored's lineage is the tokenize + quality score over every
-        # doc — without this the range sampler re-runs it (round 13)
-        checkpoint_input=True,
     )
     return cum.select(
         "doc_id",

@@ -28,8 +28,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from bigdatagenomic_spark.operators.assembly import driver_walk_row_budget
-from bigdatagenomic_spark.sources.local import local_frame
+from bigdatagenomic_spark.sources.local import local_frame, pin_counted
 
 
 def out_degrees(edges: DataFrame) -> DataFrame:
@@ -82,9 +81,9 @@ def connected_components(
     operators.assembly.extract_path` picks between its driver walk and
     pointer doubling:
 
-    * **small graph** (``sym`` rows ≤ :func:`~bigdatagenomic_spark.
-      operators.assembly.driver_walk_row_budget`, the same "fits in one
-      node's memory" rule): one more job collects ``sym`` as Arrow, a
+    * **small graph** (``sym`` rows within :func:`~bigdatagenomic_spark.
+      sources.local.fits_driver`'s budget, the same "fits in one node's
+      memory" rule): one more job collects ``sym`` as Arrow, a
       union-find with min-id roots labels it on the driver, and the
       labels come back as a local relation in one partition, so a
       caller's sort of them needs no range exchange.
@@ -106,19 +105,15 @@ def connected_components(
     the faster one at every size (SCALING.md Part 16), so the budget
     carries no CC-specific cap.
     """
-    spark = edges.sparkSession
-    size = Observation()
-    sym = (
+    sym, fits = pin_counted(
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .observe(size, F.count(F.lit(1)).alias("rows"))
-        .localCheckpoint(eager=True)
     )
-    if size.get["rows"] <= driver_walk_row_budget(spark):
+    if fits:
         vid = sym.schema["src"].dataType
         return local_frame(
-            spark,
+            edges.sparkSession,
             _union_find(sym.toArrow()),
             StructType([StructField("id", vid), StructField("component", vid)]),
         ).coalesce(1)

@@ -692,9 +692,6 @@ def assign_shards(
         [F.asc("order_key"), F.asc("doc_id")],
         group_cols=["shard"],
         rank_col="_rk",
-        # base's lineage scans every doc for the hash key — without
-        # this the range sampler re-runs the corpus scan (round 13)
-        checkpoint_input=True,
     )
     return ranked.withColumn("pos", (F.col("_rk") - 1).cast("long")).drop("_rk")
 
@@ -759,9 +756,6 @@ def token_budget_mix(
         [F.asc("order_key"), F.asc("doc_id")],
         group_cols=["source"],
         out_col="cum_tok",
-        # base tokenizes every doc — checkpoint before the sampler
-        # (round 13)
-        checkpoint_input=True,
     )
     return (
         cum.where(F.col("cum_tok") <= budget)

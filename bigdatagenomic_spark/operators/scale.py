@@ -21,13 +21,12 @@ shuffle into a local merge.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
-from bigdatagenomic_spark.operators.assembly import driver_walk_row_budget
-from bigdatagenomic_spark.sources.local import local_frame
+from bigdatagenomic_spark.sources.local import local_frame, pin_counted
 
 # count/sum/min/max re-aggregate cleanly; avg must be derived as sum/count
 _COMBINE = {"count": F.sum, "sum": F.sum, "min": F.min, "max": F.max}
@@ -37,9 +36,7 @@ def two_phase_rank(
     df: DataFrame,
     order_cols: list,
     group_cols: list[str] | None = None,
-    n_parts: int | None = None,
     rank_col: str = "rank",
-    checkpoint_input: bool = False,
 ) -> DataFrame:
     """Exact row-number rank, ``row_number() OVER (PARTITION BY
     group_cols ORDER BY order_cols)`` as a long, that scales past one
@@ -54,7 +51,7 @@ def two_phase_rank(
     partition assignment (the offsets job and the final job must see
     identical pids); (2) a per-(partition, group) ``row_number`` over
     bounded slices plus broadcast-joined offsets, where the offset
-    table is one bounded driver fetch (≤ n_parts × |groups| rows —
+    table is one bounded driver fetch (≤ partitions × |groups| rows —
     same class as the 1-row stats reads elsewhere in this module).
     Because the range boundaries respect the total order, offset +
     local rank reproduces the global (or per-group) rank EXACTLY,
@@ -63,13 +60,11 @@ def two_phase_rank(
 
     ``group_cols=None``/``[]`` ranks globally; otherwise ranks restart
     per group (the scalable form when single groups are too big for
-    one task). With ``checkpoint_input`` an input that fits the driver
-    budget is ranked by the plain window over one partition instead
-    (see :func:`_two_phase`).
+    one task). An input that fits the driver budget is ranked by the
+    plain window over one partition instead (see :func:`_two_phase`).
     """
     return _two_phase(
-        df, F.row_number(), F.count("*"), order_cols, group_cols, n_parts,
-        rank_col, checkpoint_input,
+        df, F.row_number(), F.count("*"), "sum", order_cols, group_cols, rank_col
     )
 
 
@@ -78,9 +73,7 @@ def two_phase_cumsum(
     val_col: str,
     order_cols: list,
     group_cols: list[str] | None = None,
-    n_parts: int | None = None,
     out_col: str = "cumsum",
-    checkpoint_input: bool = False,
 ) -> DataFrame:
     """Exact (per-group) INCLUSIVE running sum of an integral column as
     a long, ``sum(val_col) OVER (PARTITION BY group_cols ORDER BY
@@ -96,65 +89,97 @@ def two_phase_cumsum(
     answer boundary-dependent in the last ulp.
     """
     return _two_phase(
-        df, F.sum(val_col), F.sum(val_col).cast("long"), order_cols,
-        group_cols, n_parts, out_col, checkpoint_input,
+        df, F.sum(val_col), F.sum(val_col).cast("long"), "sum", order_cols,
+        group_cols, out_col,
     )
+
+
+def two_phase_prefix_max(
+    df: DataFrame,
+    val_col: str,
+    order_cols: list,
+    out_col: str = "prefix_max",
+    inclusive: bool = False,
+) -> DataFrame:
+    """Exact running max of ``val_col`` in ``order_cols`` order, the
+    window ``max(val_col) OVER (ORDER BY order_cols ROWS BETWEEN
+    UNBOUNDED PRECEDING AND CURRENT ROW)``, with the machinery of
+    :func:`two_phase_cumsum`. MAX is associative AND idempotent, so it
+    composes across the range boundaries for any comparable type, and
+    the output keeps ``val_col``'s type. ``inclusive=False`` gives the
+    EXCLUSIVE prefix (strictly-preceding rows, frame end ``1
+    PRECEDING``; NULL for the global first row) — the record-detection
+    / skyline primitive. ``order_cols`` must be a total order.
+    """
+    end = W.currentRow if inclusive else -1
+    return _two_phase(
+        df, F.max(val_col), F.max(val_col), "max", order_cols, None, out_col, end
+    )
+
+
+# per combine: how the partials of a group's earlier slices add up on
+# the driver, and how a row adds that offset onto its slice-local
+# running value (a null offset or local value adds nothing)
+_COMBINE_SLICES = {
+    "sum": (
+        lambda a, b: a + b,
+        lambda off, local: F.coalesce(off + local, local, off).cast("long"),
+    ),
+    "max": (max, F.greatest),
+}
 
 
 def _two_phase(
     df: DataFrame,
     fn: Column,
     partial: Column,
+    combine: str,
     order_cols: list,
     group_cols: list[str] | None,
-    n_parts: int | None,
     out_col: str,
-    checkpoint_input: bool,
+    end: int = W.currentRow,
 ) -> DataFrame:
-    """The running window function ``fn`` over (group_cols, order_cols)
-    as a long column ``out_col``; ``partial`` aggregates one (partition,
-    group) slice into what the later slices of its group add on.
+    """The running window function ``fn`` over (group_cols, order_cols),
+    frame ``unboundedPreceding .. end``, as column ``out_col``;
+    ``partial`` aggregates one (partition, group) slice into what the
+    later slices of its group add on, by ``combine`` (``"sum"``, as a
+    long, or ``"max"``).
 
-    ``checkpoint_input`` pins ``df`` by an eager ``localCheckpoint``
-    first: repartitionByRange SAMPLES its input to pick range bounds, so
-    an un-materialized df computes twice (sample pass + shuffle pass);
-    opt in when df's lineage is expensive (a fact scan or a tokenize;
-    SCALING.md Part 14 addendum). That job also counts the rows, and an
-    input of at most ``driver_walk_row_budget`` rows — the "fits in one
-    node's memory" rule that picks extract_path's driver walk and
-    connected_components' union-find — comes back as one partition
-    under the plain window: no range sample, offsets or broadcast, and
-    the window (like a caller's later ``orderBy``) sorts inside that
-    partition with no exchange. Above the budget, and without
-    ``checkpoint_input`` (where counting would cost a job of its own),
-    the two-phase path runs.
+    ``df`` is pinned first by :func:`~bigdatagenomic_spark.sources.
+    local.pin_counted`: repartitionByRange SAMPLES its input to pick
+    range bounds, so an un-materialized df would compute twice (sample
+    pass + shuffle pass; SCALING.md Part 14 addendum), and the pinning
+    job also counts the rows. An input that fits the driver budget —
+    the "fits in one node's memory" rule that picks extract_path's
+    driver walk and connected_components' union-find — comes back as
+    one partition under the plain window: no range sample, offsets or
+    broadcast, and the window (like a caller's later ``orderBy``) sorts
+    inside that partition with no exchange (SCALING.md Part 17 measured
+    it faster than the two-phase path from 100k to 5M rows on 4 cores).
+    A larger input runs the two-phase path over
+    ``spark.sql.shuffle.partitions`` range partitions; the result does
+    not depend on that count.
     """
     group_cols = list(group_cols or [])
     spark = df.sparkSession
+    add_partial, add_offset = _COMBINE_SLICES[combine]
 
     def running(spec):
-        return fn.over(
-            spec.orderBy(*order_cols).rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
+        return fn.over(spec.orderBy(*order_cols).rowsBetween(W.unboundedPreceding, end))
 
-    if checkpoint_input:
-        size = Observation()
-        df = df.observe(size, F.count(F.lit(1)).alias("rows")).localCheckpoint(
-            eager=True
+    df, fits = pin_counted(df)
+    if fits:
+        # one slice: no earlier slice, so every row's offset is null
+        return df.coalesce(1).withColumn(
+            out_col, add_offset(F.lit(None), running(W.partitionBy(*group_cols)))
         )
-        if size.get["rows"] <= driver_walk_row_budget(spark):
-            return df.coalesce(1).withColumn(
-                out_col, running(W.partitionBy(*group_cols)).cast("long")
-            )
-    if n_parts is None:
-        # default to the session's shuffle parallelism: a fixed small
-        # constant caps the per-partition slice size at corpus/constant,
-        # which stops scaling exactly when the cluster does; the result
-        # is partition-count-invariant, so this is purely a physical knob
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     keys = ["_pid", *group_cols]
     parts = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in group_cols], *order_cols)
+        df.repartitionByRange(
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            *[F.col(c) for c in group_cols],
+            *order_cols,
+        )
         .withColumn("_pid", F.spark_partition_id())
         # lazy: the collect below is always the first action, so it
         # materializes the checkpoint in the SAME job — one fewer
@@ -162,30 +187,29 @@ def _two_phase(
         # is identical (pinned at first materialization)
         .localCheckpoint(eager=False)
     )
-    partials = parts.groupBy(*keys).agg(partial.alias("_p")).collect()
-    # a slice's offset is the sum of its group's earlier partials, null
-    # until the first non-null one (a sum over nulls only is null)
-    acc: dict[tuple, int] = {}
+    slices = parts.groupBy(*keys).agg(partial.alias("_p"))
+    # a slice's offset is its group's earlier partials combined, null
+    # until the first non-null one (a sum or max over nulls only is null)
+    acc: dict[tuple, object] = {}
     off_rows = []
-    for r in sorted(partials, key=lambda r: r["_pid"]):
+    for r in sorted(slices.collect(), key=lambda r: r["_pid"]):
         g = tuple(r[c] for c in group_cols)
         off_rows.append((r["_pid"], *g, acc.get(g)))
         if r["_p"] is not None:
-            acc[g] = acc.get(g, 0) + r["_p"]
+            acc[g] = add_partial(acc[g], r["_p"]) if g in acc else r["_p"]
     # the offset table's keys are renamed so the join can match a null
     # group null-safely (the window's PARTITION BY groups nulls together)
     off_keys = [f"_k{i}" for i in range(len(keys))]
     schema = StructType(
         [StructField(o, parts.schema[k].dataType) for o, k in zip(off_keys, keys)]
-        + [StructField("_off", LongType())]
+        + [StructField("_off", slices.schema["_p"].dataType)]
     )
     off_df = local_frame(spark, off_rows, schema)
     on = [F.col(k).eqNullSafe(F.col(o)) for k, o in zip(keys, off_keys)]
-    off, local = F.col("_off"), F.col(out_col)
     return (
         parts.join(F.broadcast(off_df), on, "left")
         .withColumn(out_col, running(W.partitionBy(*keys)))
-        .withColumn(out_col, F.coalesce(off + local, local, off).cast("long"))
+        .withColumn(out_col, add_offset(F.col("_off"), F.col(out_col)))
         .drop("_pid", *off_keys, "_off")
     )
 
@@ -626,62 +650,6 @@ Q_X_ZORDER_VALUE_SQL = (
 
 
 # ---------------------------------------------------------------------------
-# two-phase prefix max (the running-max sibling of two_phase_cumsum)
-# ---------------------------------------------------------------------------
-
-def two_phase_prefix_max(
-    df: DataFrame,
-    val_col: str,
-    order_cols: list,
-    n_parts: int | None = None,
-    out_col: str = "prefix_max",
-    inclusive: bool = False,
-) -> DataFrame:
-    """Exact running max of ``val_col`` in ``order_cols`` order WITHOUT
-    a single-partition window — same machinery as
-    :func:`two_phase_cumsum` (range-repartition with pinned partition
-    ids, bounded per-partition offsets, local window + broadcast
-    offset), but for MAX, which is associative AND idempotent, so it
-    composes across the range boundaries for any comparable type.
-    ``inclusive=False`` gives the EXCLUSIVE prefix (strictly-preceding
-    rows; NULL for the global first row) — the record-detection /
-    skyline primitive. ``order_cols`` must be a total order.
-    """
-    if n_parts is None:
-        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    parts = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    maxes = parts.groupBy("_pid").agg(F.max(val_col).alias("_m")).collect()
-    acc = None
-    off_rows = []
-    for pid, m in sorted((r["_pid"], r["_m"]) for r in maxes):
-        off_rows.append((pid, acc))
-        if m is not None:
-            acc = m if acc is None or m > acc else acc
-    schema = StructType(
-        [
-            StructField("_pid", IntegerType()),
-            StructField("_off", parts.schema[val_col].dataType, True),
-        ]
-    )
-    off_df = local_frame(df.sparkSession, off_rows, schema)
-    end = 0 if inclusive else -1
-    local = F.max(val_col).over(
-        W.partitionBy("_pid").orderBy(*order_cols).rowsBetween(
-            W.unboundedPreceding, end
-        )
-    )
-    return (
-        parts.join(F.broadcast(off_df), "_pid", "left")
-        .withColumn(out_col, F.greatest(F.col("_off"), local))
-        .drop("_pid", "_off")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Bloom semi-join reduction (runtime-filter pattern, made explicit)
 # ---------------------------------------------------------------------------
 
@@ -948,11 +916,10 @@ def q_x_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("grp"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
-    # localCheckpoint the grid BEFORE two_phase_cumsum: its internal
-    # repartitionByRange SAMPLES the un-materialized input to pick
-    # range bounds, so the fact scan + aggregate would run twice (the
-    # shuffle_audit measured 3 fact scans here pre-fix); the grid is
-    # |distinct cents| narrow rows
+    # localCheckpoint the grid: it feeds the cumsum AND the per-group
+    # total below, so unpinned the fact scan + aggregate would run once
+    # per consumer (the shuffle_audit measured 3 fact scans here
+    # pre-fix); the grid is |distinct cents| narrow rows
     dv = (
         li.groupBy("grp", "cents")
         .agg(F.count("*").cast("long").alias("_cnt"))
@@ -1038,11 +1005,10 @@ def q_x_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("grp"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
-    # localCheckpoint the grid BEFORE two_phase_cumsum: its internal
-    # repartitionByRange SAMPLES the un-materialized input to pick
-    # range bounds, so the fact scan + aggregate would run twice (the
-    # shuffle_audit measured 3 fact scans here pre-fix); the grid is
-    # |distinct cents| narrow rows
+    # localCheckpoint the grid: it feeds the cumsum AND the per-group
+    # total below, so unpinned the fact scan + aggregate would run once
+    # per consumer (the shuffle_audit measured 3 fact scans here
+    # pre-fix); the grid is |distinct cents| narrow rows
     dv = (
         li.groupBy("grp", "cents")
         .agg(F.count("*").cast("long").alias("_cnt"))
@@ -1166,9 +1132,8 @@ def q_x_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("g", "p")
         .agg(F.sum("w").cast("long").alias("wsum"))
-        # checkpoint: the grid feeds the cumsum (whose repartitionByRange
-        # SAMPLES its input — a second scan) and the total; without it
-        # the shuffle_audit measured FOUR fact scans for this operator
+        # checkpoint: the grid feeds the cumsum and the total; without
+        # it the shuffle_audit measured FOUR fact scans for this operator
         .localCheckpoint(eager=True)
     )
     cum = two_phase_cumsum(

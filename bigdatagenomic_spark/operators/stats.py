@@ -1951,12 +1951,6 @@ def q_x_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("_cnt"),
         F.sum("_is1").cast("long").alias("_c1"),
     )
-    # deliberately NO checkpoint_input here: this op already reads the
-    # fact parquet exactly once — its input_records decompose as
-    # 100,000 scan rows + 2x the 13,241-row cent grid re-read from the
-    # helper's internal checkpoint (stage metrics count ExistingRDD
-    # re-reads like scan rows), and an eager checkpoint just adds two
-    # more grid-sized re-reads — SCALING.md Part 15 addendum
     cum = two_phase_cumsum(dv, "_cnt", [F.col("v").asc()], out_col="_cum")
     d38 = "decimal(38,0)"
     dr = (F.lit(2) * F.col("_cum") - F.col("_cnt") + 1).cast("long")
@@ -2057,16 +2051,11 @@ def q_x_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("_is1").cast("long").alias("_c1"),
         (F.count("*") - F.sum("_is1")).cast("long").alias("_c2"),
     )
-    # deliberately NO checkpoint_input here (the q_x_mann_whitney
-    # finding, SCALING.md Part 15 addendum): one parquet scan already —
-    # the input_records beyond 100k are grid-sized checkpoint re-reads
-    # (2x per cumsum helper), volume-flat, and an eager checkpoint only
-    # adds more of them
     cum1 = two_phase_cumsum(dv, "_c1", [F.col("v").asc()], out_col="_cum1")
     cum2 = two_phase_cumsum(cum1, "_c2", [F.col("v").asc()], out_col="_cum2")
     d38 = "decimal(38,0)"
     # totals = MAX of the inclusive cumsums, derived from cum2 (lineage
-    # ends at two_phase_cumsum's internal checkpoint) — a dv-rooted
+    # ends at two_phase_cumsum's checkpoint of its input) — a dv-rooted
     # total was a second consumer of the un-checkpointed aggregate and
     # replayed the events scan (round-13 fix)
     tot = cum2.agg(

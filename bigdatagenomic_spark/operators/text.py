@@ -1907,20 +1907,12 @@ def q_text_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_types = first_seen.groupBy("_fd").agg(
         F.count("*").cast("long").alias("_new")
     )
-    base = (
-        per_doc.join(
-            new_types, per_doc["doc_id"] == new_types["_fd"], "left"
-        )
-        .select(
-            "doc_id",
-            "_nt",
-            F.coalesce("_new", F.lit(0)).cast("long").alias("_new"),
-        )
-        # checkpoint the |docs|-row grid: two_phase_cumsum's internal
-        # repartitionByRange SAMPLES its input, and base's lineage
-        # carries the full token explode + first-seen aggregate — the
-        # shuffle_audit measured 3.5 corpus scans pre-fix (round 13)
-        .localCheckpoint(eager=True)
+    base = per_doc.join(
+        new_types, per_doc["doc_id"] == new_types["_fd"], "left"
+    ).select(
+        "doc_id",
+        "_nt",
+        F.coalesce("_new", F.lit(0)).cast("long").alias("_new"),
     )
     c1 = two_phase_cumsum(base, "_nt", [F.col("doc_id").asc()], out_col="cum_tokens")
     c2 = two_phase_cumsum(c1, "_new", [F.col("doc_id").asc()], out_col="cum_types")

@@ -11,14 +11,25 @@ size statistics): the rows live in the plan and no Python worker runs.
 Above ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
 default) Spark keeps the Arrow batches as a JVM-side RDD instead, which
 needs no Python worker either.
+
+The module also owns the rule that decides whether a frame belongs on
+the driver at all: :func:`driver_walk_row_budget`, the "fits in one
+node's memory" bound that ``assembly.extract_path`` (driver walk vs
+pointer doubling), ``graph.connected_components`` (union-find vs
+hash-min) and ``scale``'s two-phase window family (one-partition window
+vs range-partitioned two-phase path) pick their plans by.
+:func:`pin_counted` pins a frame and counts it in the same job, so a
+caller pays no separate count to apply the rule.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterable, Sequence
 from datetime import timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampType
 
 
@@ -53,3 +64,67 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+DRIVER_WALK_ENTRY_BYTES = 90   # measured CPython dict-entry footprint for
+                               # a (boxed long -> boxed long) pair incl. slots
+DRIVER_WALK_MEM_FRACTION = 16  # driver rows may use at most 1/16 of the heap
+DRIVER_WALK_TIME_CAP_ROWS = 20_000_000  # measured walk/doubling crossover
+                               # (SCALING.md path-extraction sweep: walk's
+                               # per-row driver cost ~7.8 us/row overtakes
+                               # pointer doubling around ~20M rows; measured
+                               # with a Python-RDD path frame, dearer per row
+                               # than the local relation, so it errs low)
+
+# Spark's byte-string suffixes (JavaUtils.byteStringAs): binary units
+_BYTE_SHIFTS = {"b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30,
+                "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def _driver_mem_bytes(spark) -> int:
+    """``spark.driver.memory`` in bytes (default 1g when unset), read by
+    Spark's rules: a whole number with an optional unit suffix in any
+    case (``4g``, ``4gb``, ``512M``), and MiB when it has none."""
+    raw = str(spark.conf.get("spark.driver.memory", "1g")).strip().lower()
+    m = re.fullmatch(r"([0-9]+)([a-z]+)?", raw)
+    if m is None or (m.group(2) or "m") not in _BYTE_SHIFTS:
+        raise ValueError(f"spark.driver.memory={raw!r} is not a Spark byte string")
+    return int(m.group(1)) << _BYTE_SHIFTS[m.group(2) or "m"]
+
+
+def driver_walk_row_budget(spark) -> int:
+    """Max rows a plan may hold on the driver (or in one partition).
+
+    TWO bounds, the tighter governs (VERDICT r5 #4 + r7 #8):
+
+    * **memory** — 1/DRIVER_WALK_MEM_FRACTION of ``spark.driver.memory``
+      divided by the ~90 B a (vid -> succ) dict entry costs in CPython.
+      A 4 GiB driver thus holds up to ~3M rows; a 1 GiB driver ~745k —
+      the same "fits comfortably in one node's memory" regime where
+      Spark would broadcast, scaled to the actual heap.
+    * **time** — ``DRIVER_WALK_TIME_CAP_ROWS``: the path walk is a SERIAL
+      per-row driver loop (py4j collect + dict walk + local relation),
+      and SCALING.md's path-extraction sweep measured its crossover
+      against the distributed pointer-doubling path at ~20M rows. On a
+      big driver (128 GiB -> ~95M memory-budget rows) memory alone
+      would pick the slower strategy in the 20-95M band, so the
+      measured crossover caps the budget regardless of heap.
+    """
+    rows = _driver_mem_bytes(spark) // DRIVER_WALK_MEM_FRACTION // DRIVER_WALK_ENTRY_BYTES
+    return min(max(1, rows), DRIVER_WALK_TIME_CAP_ROWS)
+
+
+def fits_driver(spark: SparkSession, rows: int) -> bool:
+    """Whether ``rows`` rows are within :func:`driver_walk_row_budget`."""
+    return rows <= driver_walk_row_budget(spark)
+
+
+def pin_counted(df: DataFrame) -> tuple[DataFrame, bool]:
+    """``df`` pinned by an eager ``localCheckpoint``, and whether its
+    row count :func:`fits_driver`. The pinning job counts the rows
+    through an ``Observation``, so the rule costs no job of its own."""
+    size = Observation()
+    pinned = df.observe(size, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+        eager=True
+    )
+    return pinned, fits_driver(df.sparkSession, size.get["rows"])

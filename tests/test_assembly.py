@@ -125,10 +125,11 @@ def test_scatter_invalidation_marks_unchosen(spark):
 # phase 3a: path extraction
 # ---------------------------------------------------------------------------
 
-# threshold=0 forces the distributed pointer-doubling strategy; default
-# exercises the adaptive driver-side walk (small successor table)
+# a row budget of 0 forces the distributed pointer-doubling strategy;
+# 4M exercises the driver-side walk (small successor table)
 @pytest.mark.parametrize("threshold", [0, 4_000_000])
-def test_extract_path_chain_and_cycle(spark, threshold):
+def test_extract_path_chain_and_cycle(spark, driver_budget, threshold):
+    driver_budget(threshold)
     n = 37
     rows = [(i, 4, "ACGT", i * 10, 0.5, [i + 1]) for i in range(1, n)] + [
         (n, 4, "ACGT", n * 10, 0.5, [])
@@ -136,7 +137,7 @@ def test_extract_path_chain_and_cycle(spark, threshold):
     reads = make_reads(spark, rows)
     edges = reads_to_edges(reads)
     with_next = asm.with_next_id(reads, edges)
-    path = asm.extract_path(with_next, 1, driver_walk_threshold=threshold).collect()
+    path = asm.extract_path(with_next, 1).collect()
     path.sort(key=lambda r: r.pos)
     assert [r.read_id for r in path] == list(range(1, n + 1))
     assert [r.pos for r in path] == list(range(n))
@@ -149,15 +150,27 @@ def test_extract_path_chain_and_cycle(spark, threshold):
     ]
     reads_c = make_reads(spark, rows_c)
     with_next_c = asm.with_next_id(reads_c, reads_to_edges(reads_c))
-    path_c = asm.extract_path(with_next_c, 1, driver_walk_threshold=threshold).collect()
+    path_c = asm.extract_path(with_next_c, 1).collect()
     path_c.sort(key=lambda r: r.pos)
     assert [(r.pos, r.read_id) for r in path_c] == [(0, 1), (1, 2), (2, 3)]
+
+
+def _heap(bytes_budget: int):
+    """A session stand-in whose driver heap gives the row budget a
+    ``bytes_budget``-byte share."""
+    from types import SimpleNamespace
+
+    from bigdatagenomic_spark.sources.local import DRIVER_WALK_MEM_FRACTION
+
+    return SimpleNamespace(
+        conf={"spark.driver.memory": f"{bytes_budget * DRIVER_WALK_MEM_FRACTION}b"}
+    )
 
 
 def test_driver_walk_budget_is_byte_derived(spark):
     """VERDICT r5 #4: the walk threshold derives from a bytes budget
     (driver heap fraction / ~90B per dict entry), not a row constant."""
-    from bigdatagenomic_spark.operators.assembly import (
+    from bigdatagenomic_spark.sources.local import (
         DRIVER_WALK_ENTRY_BYTES,
         DRIVER_WALK_MEM_FRACTION,
         DRIVER_WALK_TIME_CAP_ROWS,
@@ -165,8 +178,8 @@ def test_driver_walk_budget_is_byte_derived(spark):
         driver_walk_row_budget,
     )
 
-    assert driver_walk_row_budget(spark, bytes_budget=9000) == 100
-    assert driver_walk_row_budget(spark, bytes_budget=1) == 1  # floors at 1
+    assert driver_walk_row_budget(_heap(9000)) == 100
+    assert driver_walk_row_budget(_heap(1)) == 1  # floors at 1
     mem = _driver_mem_bytes(spark)
     assert mem > 0
     assert driver_walk_row_budget(spark) == min(
@@ -185,7 +198,7 @@ def test_driver_mem_bytes_reads_spark_byte_strings(conf, mib):
     without a trailing b, in any case; MiB when there is no suffix."""
     from types import SimpleNamespace
 
-    from bigdatagenomic_spark.operators.assembly import _driver_mem_bytes
+    from bigdatagenomic_spark.sources.local import _driver_mem_bytes
 
     spark = SimpleNamespace(conf={"spark.driver.memory": conf})
     assert _driver_mem_bytes(spark) == mib << 20
@@ -195,7 +208,7 @@ def test_driver_mem_bytes_reads_spark_byte_strings(conf, mib):
 def test_driver_mem_bytes_rejects_what_spark_rejects(conf):
     from types import SimpleNamespace
 
-    from bigdatagenomic_spark.operators.assembly import _driver_mem_bytes
+    from bigdatagenomic_spark.sources.local import _driver_mem_bytes
 
     with pytest.raises(ValueError):
         _driver_mem_bytes(SimpleNamespace(conf={"spark.driver.memory": conf}))
@@ -208,7 +221,7 @@ def test_driver_walk_budget_time_cap_governs_big_drivers(spark):
     pick the slower strategy in the 20-95M band. Pins that the TIME cap
     governs exactly at the boundary: one byte-budget row past the cap
     stays capped, one row under passes through."""
-    from bigdatagenomic_spark.operators.assembly import (
+    from bigdatagenomic_spark.sources.local import (
         DRIVER_WALK_ENTRY_BYTES,
         DRIVER_WALK_TIME_CAP_ROWS,
         driver_walk_row_budget,
@@ -216,28 +229,16 @@ def test_driver_walk_budget_time_cap_governs_big_drivers(spark):
 
     cap = DRIVER_WALK_TIME_CAP_ROWS
     # 1 TiB byte budget (~12.2B memory-budget rows): time cap governs
-    assert driver_walk_row_budget(spark, bytes_budget=1 << 40) == cap
+    assert driver_walk_row_budget(_heap(1 << 40)) == cap
     # exactly at the boundary from the bytes side
-    assert (
-        driver_walk_row_budget(
-            spark, bytes_budget=(cap + 1) * DRIVER_WALK_ENTRY_BYTES
-        )
-        == cap
-    )
-    assert (
-        driver_walk_row_budget(
-            spark, bytes_budget=(cap - 1) * DRIVER_WALK_ENTRY_BYTES
-        )
-        == cap - 1
-    )
+    assert driver_walk_row_budget(_heap((cap + 1) * DRIVER_WALK_ENTRY_BYTES)) == cap
+    assert driver_walk_row_budget(_heap((cap - 1) * DRIVER_WALK_ENTRY_BYTES)) == cap - 1
 
 
-def test_low_byte_budget_forces_doubling_high_budget_walks(spark):
-    """A low bytes budget must push extract_path onto the distributed
+def test_low_byte_budget_forces_doubling_high_budget_walks(spark, driver_budget):
+    """A low budget must push extract_path onto the distributed
     pointer-doubling strategy and a high budget onto the driver walk;
     both produce the identical path."""
-    from bigdatagenomic_spark.operators.assembly import DRIVER_WALK_ENTRY_BYTES
-
     n = 30
     rows = [(i, 4, "ACGT", i * 10, 0.5, [i + 1]) for i in range(1, n)] + [
         (n, 4, "ACGT", n * 10, 0.5, [])
@@ -245,19 +246,11 @@ def test_low_byte_budget_forces_doubling_high_budget_walks(spark):
     reads = make_reads(spark, rows)
     with_next = asm.with_next_id(reads, reads_to_edges(reads))
     # budget of exactly 1 row (< the 29 successor rows) -> doubling
-    doubled = sorted(
-        (r.pos, r.read_id)
-        for r in asm.extract_path(
-            with_next, 1, driver_walk_bytes=DRIVER_WALK_ENTRY_BYTES
-        ).collect()
-    )
-    # a GiB budget -> driver walk
-    walked = sorted(
-        (r.pos, r.read_id)
-        for r in asm.extract_path(
-            with_next, 1, driver_walk_bytes=1 << 30
-        ).collect()
-    )
+    driver_budget(1)
+    doubled = sorted((r.pos, r.read_id) for r in asm.extract_path(with_next, 1).collect())
+    # a budget of a million rows -> driver walk
+    driver_budget(1_000_000)
+    walked = sorted((r.pos, r.read_id) for r in asm.extract_path(with_next, 1).collect())
     expected = [(i, i + 1) for i in range(n)]
     assert doubled == walked == expected
 
@@ -469,8 +462,8 @@ def test_long_chain_5000_reads(spark):
     assert assembled.content == expected.content
 
 
-def test_long_chain_pointer_doubling_path(spark):
-    """Force the distributed pointer-doubling walk (threshold=0) on a
+def test_long_chain_pointer_doubling_path(spark, driver_budget):
+    """Force the distributed pointer-doubling walk (a 0-row budget) on a
     1,000-read chain: O(log n) rounds must recover the exact path order."""
     rng = random.Random(99)
     n = 1000
@@ -478,6 +471,7 @@ def test_long_chain_pointer_doubling_path(spark):
     reads = make_reads(spark, rows)
     edges = reads_to_edges(reads)
     with_next = asm.with_next_id(reads, edges)
-    path = asm.extract_path(with_next, 1, driver_walk_threshold=0)
+    driver_budget(0)
+    path = asm.extract_path(with_next, 1)
     got = [(r.pos, r.read_id) for r in path.orderBy("pos").collect()]
     assert got == [(i - 1, i) for i in range(1, n + 1)]

@@ -131,14 +131,6 @@ def test_cc_chain_and_islands(spark):
     assert {(1, 1), (4, 1), (5, 1), (11, 10), (12, 10), (20, 20)} <= got
 
 
-def _force_hash_min(monkeypatch):
-    """Send connected_components down its distributed loop: a row budget
-    below every count, the empty graph's 0 included."""
-    from bigdatagenomic_spark.operators import graph
-
-    monkeypatch.setattr(graph, "driver_walk_row_budget", lambda spark: -1)
-
-
 @pytest.mark.parametrize(
     "case",
     [
@@ -149,10 +141,10 @@ def _force_hash_min(monkeypatch):
     ],
     ids=lambda case: case.__name__,
 )
-def test_cc_cases_on_the_hash_min_loop(spark, monkeypatch, case):
+def test_cc_cases_on_the_hash_min_loop(spark, driver_budget, case):
     """The CC tests above label their small graphs on the driver; the
     same checks must hold on the hash-min loop that large graphs take."""
-    _force_hash_min(monkeypatch)
+    driver_budget(-1)
     case(spark)
 
 
@@ -161,11 +153,11 @@ def test_cc_cases_on_the_hash_min_loop(spark, monkeypatch, case):
     [[], [(5, 5), (7, 7)], [(1, None), (None, 2), (2, 3)]],
     ids=["empty", "self_loops", "null_ends"],
 )
-def test_cc_paths_return_identical_frames(spark, monkeypatch, pairs):
+def test_cc_paths_return_identical_frames(spark, driver_budget, pairs):
     """Driver union-find and hash-min loop: same schema, same rows."""
     e = _edges(spark, pairs)
     driver = connected_components(e)
-    _force_hash_min(monkeypatch)
+    driver_budget(-1)
     loop = connected_components(e)
     assert driver.schema.simpleString() == loop.schema.simpleString()
     assert sorted(driver.collect(), key=repr) == sorted(loop.collect(), key=repr)

@@ -502,46 +502,39 @@ def test_minhash_band_join_shuffles_narrow_rows(spark, qname):
         assert "shs" not in s, s
 
 
-def test_zipf_rank_window_is_partitioned(spark):
-    """q_text_zipf must never sort the whole vocabulary in one
-    partition (VERDICT r4 item 2): the rank is two-phase — a range
-    repartition plus a per-partition row_number over `pid`. Pin that
-    the plan's ONLY window is partitioned (windowspecdefinition lists
-    pid before the ordering spec, vs an unpartitioned spec that starts
-    with the sort column)."""
+def test_zipf_rank_window_is_partitioned(spark, driver_budget):
+    """Above the driver budget q_text_zipf must never sort the whole
+    vocabulary in one partition (VERDICT r4 item 2): the rank is
+    two-phase — a range repartition plus a per-partition row_number
+    over `pid`. Pin that the plan's ONLY window is partitioned
+    (windowspecdefinition lists pid before the ordering spec, vs an
+    unpartitioned spec that starts with the sort column)."""
+    driver_budget(-1)
     df = _df(spark, "q_text_zipf")
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert "windowspecdefinition(_pid" in opt, opt
     assert opt.count("windowspecdefinition") == 1, opt
 
 
-def _force_two_phase(monkeypatch):
-    """Plan the two-phase helpers' checkpoint_input callers as if their
-    input exceeded the driver budget (the path large corpora take)."""
-    from bigdatagenomic_spark.operators import scale
-
-    monkeypatch.setattr(scale, "driver_walk_row_budget", lambda spark: -1)
-
-
-def test_train_shards_rank_window_is_partitioned(spark, monkeypatch):
+def test_train_shards_rank_window_is_partitioned(spark, driver_budget):
     """q_x_train_shards must never rank a whole shard in one window
     task (VERDICT r5 item 6): above the driver budget the per-shard
     position is two-phase — range repartition + per-(pid, shard)
     row_number. Pin that the plan's ONLY window is partitioned on _pid
     (same guard as the zipf fix)."""
-    _force_two_phase(monkeypatch)
+    driver_budget(-1)
     df = _df(spark, "q_x_train_shards")
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert "windowspecdefinition(_pid" in opt, opt
     assert opt.count("windowspecdefinition") == 1, opt
 
 
-def test_token_budget_mix_window_is_partitioned(spark, monkeypatch):
+def test_token_budget_mix_window_is_partitioned(spark, driver_budget):
     """Above the driver budget q_x_token_budget_mix's running sum must
     be two-phase (range repartition + per-(pid, source) window) — never
     one unbounded per-source window task. Same guard as
     zipf/train_shards."""
-    _force_two_phase(monkeypatch)
+    driver_budget(-1)
     df = _df(spark, "q_x_token_budget_mix")
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert "windowspecdefinition(_pid" in opt, opt

@@ -120,9 +120,9 @@ def test_boilerplate_scrub_reassembly_identity(spark, seed):
 )
 @given(seed=st.integers(0, 10**6), length=st.integers(9, 40))
 @pytest.mark.slow  # round 15: driver-budget cut (see pytest.ini)
-def test_deep_pointer_doubling_and_pairwise_fold_agree(spark, seed, length):
+def test_deep_pointer_doubling_and_pairwise_fold_agree(spark, driver_budget, seed, length):
     """VERDICT r5 #7: exercise the pointer-doubling extraction at real
-    depth (length >= 9 -> >= 4 doubling rounds under a forced-tiny byte
+    depth (length >= 9 -> >= 4 doubling rounds under a forced-tiny row
     budget) and pin the documented equivalence class: on
     forward-extending chains (every read starts after its predecessor
     and extends past its end — cases B-ext/C/D),
@@ -132,7 +132,6 @@ def test_deep_pointer_doubling_and_pairwise_fold_agree(spark, seed, length):
     import random
 
     from bigdatagenomic_spark.operators import assembly as asm
-    from bigdatagenomic_spark.operators.assembly import DRIVER_WALK_ENTRY_BYTES
     from tests.assembly_oracle import Interval, merge_step
 
     rng = random.Random(seed)
@@ -156,11 +155,11 @@ def test_deep_pointer_doubling_and_pairwise_fold_agree(spark, seed, length):
         "next_id",
         F.when(F.col("read_id") < length, F.col("read_id") + 1).otherwise(F.lit(0)),
     )
-    # forced doubling (1-row budget) vs driver walk (GiB budget)
-    doubled = asm.extract_path(
-        with_next, 1, driver_walk_bytes=DRIVER_WALK_ENTRY_BYTES
-    ).localCheckpoint(eager=True)
-    walked = asm.extract_path(with_next, 1, driver_walk_bytes=1 << 30)
+    # forced doubling (1-row budget) vs driver walk (million-row budget)
+    driver_budget(1)
+    doubled = asm.extract_path(with_next, 1).localCheckpoint(eager=True)
+    driver_budget(1_000_000)
+    walked = asm.extract_path(with_next, 1)
     assert sorted((r.pos, r.read_id) for r in doubled.collect()) == sorted(
         (r.pos, r.read_id) for r in walked.collect()
     ) == [(i, i + 1) for i in range(length)]

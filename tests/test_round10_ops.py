@@ -22,17 +22,18 @@ def _md5_60(s: str) -> int:
 # range boundaries land
 # ---------------------------------------------------------------------------
 
-def test_two_phase_prefix_max_matches_single_window(spark):
+def test_two_phase_prefix_max_matches_single_window(spark, driver_budget, shuffle_partitions):
     from bigdatagenomic_spark.operators.scale import two_phase_prefix_max
 
     rows = [(i, (i * 37) % 19 - 9) for i in range(200)]
     df = spark.createDataFrame(rows, ["k", "v"])
+    driver_budget(-1)
+    shuffle_partitions(7)
     for inclusive in (False, True):
         got = {
             r["k"]: r["pm"]
             for r in two_phase_prefix_max(
-                df, "v", [F.col("k").asc()], n_parts=7,
-                out_col="pm", inclusive=inclusive,
+                df, "v", [F.col("k").asc()], out_col="pm", inclusive=inclusive
             ).collect()
         }
         end = 0 if inclusive else -1
@@ -270,13 +271,14 @@ def test_seasonal_decompose_broadcasts_dow_side(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_exact_median_keeps_row_number_partitioned(spark):
-    """two_phase_rank's window must stay partitioned on (_pid, grp) —
-    an unpartitioned row_number would serialize the whole table
-    through one task (the exact failure q_x_exact_median exists to
-    avoid)."""
+def test_exact_median_keeps_row_number_partitioned(spark, driver_budget):
+    """Above the driver budget two_phase_rank's window must stay
+    partitioned on (_pid, grp) — an unpartitioned row_number would
+    serialize the whole table through one task (the exact failure
+    q_x_exact_median exists to avoid)."""
     from bigdatagenomic_spark.operators.scale import q_x_exact_median
 
+    driver_budget(-1)
     plan = (
         q_x_exact_median(spark, SF_DIR)
         ._jdf.queryExecution()

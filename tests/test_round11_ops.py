@@ -14,12 +14,14 @@ SF_DIR = "/root/testdata/sf0.001"
 # gini: the two_phase_rank window must stay pid-partitioned
 # ---------------------------------------------------------------------------
 
-def test_gini_keeps_row_number_partitioned(spark):
-    """Same pin as q_x_exact_median: an unpartitioned row_number would
-    serialize each priority class through one task — the exact failure
-    two_phase_rank exists to avoid."""
+def test_gini_keeps_row_number_partitioned(spark, driver_budget):
+    """Same pin as q_x_exact_median: above the driver budget an
+    unpartitioned row_number would serialize each priority class
+    through one task — the exact failure two_phase_rank exists to
+    avoid."""
     from bigdatagenomic_spark.operators.relational_ext import q_x_gini
 
+    driver_budget(-1)
     plan = (
         q_x_gini(spark, SF_DIR)
         ._jdf.queryExecution()
@@ -180,14 +182,16 @@ def test_spearman_rank_tables_broadcast(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_trimmed_mean_is_grid_algebra_not_per_row_rank(spark):
+def test_trimmed_mean_is_grid_algebra_not_per_row_rank(spark, driver_budget):
     """Round-11 perf rewrite pin: the kept multiset comes from rank-
     interval overlap on the DISTINCT-CENTS grid — the plan must contain
     NO row_number at all (the per-row two_phase_rank formulation cost
-    20.6 s on a 6M-row replica; the grid form is ~flat), and every
-    window (the grid cumsum) must stay _pid-partitioned."""
+    20.6 s on a 6M-row replica; the grid form is ~flat), and above the
+    driver budget every window (the grid cumsum) must stay
+    _pid-partitioned."""
     from bigdatagenomic_spark.operators.scale import q_x_trimmed_mean
 
+    driver_budget(-1)
     plan = (
         q_x_trimmed_mean(spark, SF_DIR)
         ._jdf.queryExecution()
@@ -213,13 +217,15 @@ def test_welch_is_one_aggregate_pass(spark):
     assert row.mean1_micro > 0 and row.mean2_micro > 0
 
 
-def test_ks_and_mw_grid_not_fact_rows(spark):
+def test_ks_and_mw_grid_not_fact_rows(spark, driver_budget):
     """The KS/MW rank machinery must aggregate to the distinct-cent grid
-    BEFORE any cumsum/window work: every window in the plan orders by
-    the grid value over pre-aggregated counts (no window ever sees a raw
-    event column), and the single-row result is sane."""
+    BEFORE any cumsum/window work: above the driver budget every window
+    in the plan orders by the grid value over pre-aggregated counts (no
+    window ever sees a raw event column), and the single-row result is
+    sane."""
     from bigdatagenomic_spark.operators.stats import q_x_ks_test, q_x_mann_whitney
 
+    driver_budget(-1)
     for fn in (q_x_ks_test, q_x_mann_whitney):
         df = fn(spark, SF_DIR)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
@@ -272,11 +278,12 @@ def test_lift_rules_joins_are_equi(spark):
 # wave-5 ops: plan pins
 # ---------------------------------------------------------------------------
 
-def test_winsorize_is_grid_algebra_not_per_row_rank(spark):
-    """Same grid pin as trimmed_mean: no row_number anywhere; the grid
-    cumsum windows stay _pid-partitioned."""
+def test_winsorize_is_grid_algebra_not_per_row_rank(spark, driver_budget):
+    """Same grid pin as trimmed_mean: no row_number anywhere; above the
+    driver budget the grid cumsum windows stay _pid-partitioned."""
     from bigdatagenomic_spark.operators.scale import q_x_winsorize
 
+    driver_budget(-1)
     plan = (
         q_x_winsorize(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
     )

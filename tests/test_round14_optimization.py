@@ -88,10 +88,10 @@ def test_boilerplate_streaming_distinct_count_no_anti_join(spark):
     assert len(re.findall(r"\(\d+\) \w*HashJoin", plan)) == 1, plan
 
 
-def test_two_phase_lazy_checkpoint_rank_values_exact(spark):
+def test_two_phase_lazy_checkpoint_rank_values_exact(spark, driver_budget):
     """two_phase_rank's internal checkpoint turned lazy (pinned by the
-    offsets collect, one fewer job); ranks must still be exactly the
-    window row_number."""
+    offsets collect, one fewer job); on the two-phase path ranks must
+    still be exactly the window row_number."""
     from pyspark.sql import Window as W
 
     from bigdatagenomic_spark.operators.scale import two_phase_rank
@@ -99,6 +99,7 @@ def test_two_phase_lazy_checkpoint_rank_values_exact(spark):
     c = load_table(spark, SF_DIR, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
+    driver_budget(-1)
     got = two_phase_rank(
         c,
         [F.col("c_acctbal").asc(), F.col("c_custkey").asc()],

@@ -93,10 +93,10 @@ def test_lsh_band_index_zero_exchange_on_index_side_and_parity(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_lsh_band_index")
 
 
-def test_two_phase_cumsum_matches_window_sum(spark):
+def test_two_phase_cumsum_matches_window_sum(spark, driver_budget, shuffle_partitions):
     """two_phase_cumsum must reproduce the single-window inclusive
-    running sum exactly — global and per-group — at an n_parts that
-    forces multi-partition seams."""
+    running sum exactly — global and per-group — on the two-phase path
+    at a partition count that forces multi-partition seams."""
     import random
 
     from pyspark.sql import Window as W
@@ -111,6 +111,9 @@ def test_two_phase_cumsum_matches_window_sum(spark):
     d = spark.createDataFrame(rows, "id LONG, g STRING, v LONG")
     from pyspark.sql import functions as F
 
+    driver_budget(-1)
+    shuffle_partitions(7)
+
     win = (
         W.partitionBy("g").orderBy("id")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -122,7 +125,7 @@ def test_two_phase_cumsum_matches_window_sum(spark):
     got = {
         (r.g, r.id): r.cum
         for r in two_phase_cumsum(
-            d, "v", [F.asc("id")], group_cols=["g"], n_parts=7, out_col="cum"
+            d, "v", [F.asc("id")], group_cols=["g"], out_col="cum"
         ).collect()
     }
     assert got == want
@@ -131,33 +134,37 @@ def test_two_phase_cumsum_matches_window_sum(spark):
     want_g = {r.id: r.c for r in d.withColumn("c", F.sum("v").over(gwin)).collect()}
     got_g = {
         r.id: r.cum
-        for r in two_phase_cumsum(d, "v", [F.asc("id")], n_parts=7, out_col="cum").collect()
+        for r in two_phase_cumsum(d, "v", [F.asc("id")], out_col="cum").collect()
     }
     assert got_g == want_g
 
 
-def _force_two_phase(monkeypatch):
-    """Send checkpoint_input callers down the two-phase path: a row
-    budget below every count, the empty input's 0 included."""
-    from bigdatagenomic_spark.operators import scale
-
-    monkeypatch.setattr(scale, "driver_walk_row_budget", lambda spark: -1)
-
-
-@pytest.mark.parametrize("n_parts", [1, 7])
-@pytest.mark.parametrize("grouped", [False, True], ids=["global", "grouped"])
-@pytest.mark.parametrize("op", ["rank", "cumsum"])
-def test_two_phase_paths_match_plain_window(spark, monkeypatch, op, grouped, n_parts):
-    """With checkpoint_input, an input within the driver budget takes the
-    one-partition plain window and a larger one the two-phase path; both
-    must equal the plain window, schema and values. The values hold
-    nulls (the first ~60 rows in id order, so a whole range partition
-    can be null) and one group key is null; the empty input too."""
+@pytest.mark.parametrize("partitions", [1, 7])
+@pytest.mark.parametrize(
+    "op, grouped",
+    [("rank", False), ("rank", True), ("cumsum", False), ("cumsum", True),
+     ("prefix_max", False)],
+    ids=["rank-global", "rank-grouped", "cumsum-global", "cumsum-grouped",
+         "prefix_max-global"],
+)
+def test_two_phase_paths_match_plain_window(
+    spark, driver_budget, shuffle_partitions, op, grouped, partitions
+):
+    """An input within the driver budget takes the one-partition plain
+    window and a larger one the two-phase path over ``partitions`` range
+    slices; both must equal the plain window, schema and values. The
+    values hold nulls (the first ~60 rows in id order, so a whole range
+    partition can be null) and one group key is null; the empty input
+    too. The prefix max runs both its inclusive and exclusive frame."""
     import random
 
     from pyspark.sql import Window as W
 
-    from bigdatagenomic_spark.operators.scale import two_phase_cumsum, two_phase_rank
+    from bigdatagenomic_spark.operators.scale import (
+        two_phase_cumsum,
+        two_phase_prefix_max,
+        two_phase_rank,
+    )
 
     rng = random.Random(5)
     rows = [
@@ -166,29 +173,35 @@ def test_two_phase_paths_match_plain_window(spark, monkeypatch, op, grouped, n_p
     ]
     groups = ["g"] if grouped else []
     if op == "rank":
-        fn = F.row_number()
-        run = lambda d, **kw: two_phase_rank(  # noqa: E731
-            d, [F.asc("id")], group_cols=groups, n_parts=n_parts, rank_col="out", **kw
-        )
+        cases = [(F.row_number(), W.currentRow, lambda d: two_phase_rank(
+            d, [F.asc("id")], group_cols=groups, rank_col="out"
+        ))]
+    elif op == "cumsum":
+        cases = [(F.sum("v"), W.currentRow, lambda d: two_phase_cumsum(
+            d, "v", [F.asc("id")], group_cols=groups, out_col="out"
+        ))]
     else:
-        fn = F.sum("v")
-        run = lambda d, **kw: two_phase_cumsum(  # noqa: E731
-            d, "v", [F.asc("id")], group_cols=groups, n_parts=n_parts, out_col="out", **kw
-        )
-    win = W.partitionBy(*groups).orderBy("id").rowsBetween(W.unboundedPreceding, W.currentRow)
-    for data in (rows, []):
-        d = spark.createDataFrame(data, "id LONG, g STRING, v LONG")
-        want = d.withColumn("out", fn.over(win).cast("long"))
-        small = run(d, checkpoint_input=True)
-        with monkeypatch.context() as m:
-            _force_two_phase(m)
-            large = run(d, checkpoint_input=True)
-        plain_input = run(d)
-        expect = sorted(want.collect())
-        assert len(expect) == len(data)
-        for got in (small, large, plain_input):
-            assert got.schema == want.schema
-            assert sorted(got.collect()) == expect
+        cases = [
+            (F.max("v"), end, lambda d, inclusive=inclusive: two_phase_prefix_max(
+                d, "v", [F.asc("id")], out_col="out", inclusive=inclusive
+            ))
+            for inclusive, end in ((True, W.currentRow), (False, -1))
+        ]
+    shuffle_partitions(partitions)
+    for fn, end, run in cases:
+        win = W.partitionBy(*groups).orderBy("id").rowsBetween(W.unboundedPreceding, end)
+        for data in (rows, []):
+            d = spark.createDataFrame(data, "id LONG, g STRING, v LONG")
+            want = d.withColumn("out", fn.over(win).cast("long"))
+            small = run(d)
+            driver_budget(-1)
+            large = run(d)
+            driver_budget(None)
+            expect = sorted(want.collect())
+            assert len(expect) == len(data)
+            for got in (small, large):
+                assert got.schema == want.schema
+                assert sorted(got.collect()) == expect
 
 
 def test_salted_agg_is_two_phase(spark):
@@ -377,10 +390,11 @@ def test_write_zordered_clusters_both_columns(spark, tmp_path):
         assert sum(exts) < 0.75 * len(exts) * full[c], (c, exts, full[c])
 
 
-def test_two_phase_rank_matches_window_row_number(spark):
-    """two_phase_rank must reproduce row_number() exactly — global and
-    per-group — for any range-boundary placement (n_parts larger than
-    the data forces empty/tiny partitions, the degenerate layouts)."""
+def test_two_phase_rank_matches_window_row_number(spark, driver_budget, shuffle_partitions):
+    """two_phase_rank's two-phase path must reproduce row_number()
+    exactly — global and per-group — for any range-boundary placement
+    (more partitions than groups forces empty/tiny partitions, the
+    degenerate layouts)."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
@@ -391,10 +405,12 @@ def test_two_phase_rank_matches_window_row_number(spark):
         "doc_id", "source", "n_chars"
     )
     order = [F.desc("n_chars"), F.asc("doc_id")]
+    driver_budget(-1)
 
+    shuffle_partitions(7)
     got_global = {
         r.doc_id: r.rk
-        for r in two_phase_rank(d, order, n_parts=7, rank_col="rk").collect()
+        for r in two_phase_rank(d, order, rank_col="rk").collect()
     }
     want_global = {
         r.doc_id: r.rk
@@ -404,11 +420,10 @@ def test_two_phase_rank_matches_window_row_number(spark):
     }
     assert got_global == want_global
 
+    shuffle_partitions(5)
     got_grouped = {
         (r.source, r.doc_id): r.rk
-        for r in two_phase_rank(
-            d, order, group_cols=["source"], n_parts=5, rank_col="rk"
-        ).collect()
+        for r in two_phase_rank(d, order, group_cols=["source"], rank_col="rk").collect()
     }
     want_grouped = {
         (r.source, r.doc_id): r.rk

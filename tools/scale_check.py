@@ -5,7 +5,7 @@ headline plan families at 1x / 10x / 100x the sf0.1 documents corpus
 it instead times connected_components' two strategies on random graphs
 of 10k / 100k / 1M / 5M edges: the driver union-find (budget forced
 open) against the hash-min loop (budget forced shut). With
-``--two-phase`` it times ``two_phase_cumsum(checkpoint_input=True)`` on
+``--two-phase`` it times ``two_phase_cumsum`` on
 generated frames of 100k / 1M / 5M / 20M rows: the plain window over one
 partition (budget forced open) against the two-phase path (budget
 forced shut).
@@ -119,13 +119,21 @@ def random_edges(spark, n: int):
     )
 
 
-def crossover(module, budgets: dict, inputs: dict, call, label: str, unit: str) -> dict:
+def set_budget(rows: int) -> None:
+    """Force every fits-on-the-driver plan choice to a ``rows`` budget
+    by patching the rule's one home, ``sources.local``."""
+    from bigdatagenomic_spark.sources import local
+
+    local.driver_walk_row_budget = lambda spark: rows
+
+
+def crossover(budgets: dict, inputs: dict, call, label: str, unit: str) -> dict:
     """min-of-2 seconds of ``call`` per path and input size, each path
-    forced by patching ``module.driver_walk_row_budget`` to its budget,
-    after one untimed warm-up of each path on the first input."""
+    forced by :func:`set_budget`, after one untimed warm-up of each path
+    on the first input."""
     out: dict = {}
     for path, budget in budgets.items():
-        module.driver_walk_row_budget = lambda spark, _b=budget: _b
+        set_budget(budget)
         force(call(next(iter(inputs.values()))))
         per = {}
         for n, d in inputs.items():
@@ -140,7 +148,7 @@ def cc_crossover(spark) -> dict:
     from bigdatagenomic_spark.operators import graph
 
     graphs = {n: random_edges(spark, n).localCheckpoint(eager=True) for n in CC_EDGES}
-    return crossover(graph, {"driver": 1 << 62, "loop": -1}, graphs,
+    return crossover({"driver": 1 << 62, "loop": -1}, graphs,
                      graph.connected_components, "cc", "edges")
 
 
@@ -166,11 +174,9 @@ def two_phase_crossover(spark) -> dict:
     }
 
     def cumsum(d):
-        return scale.two_phase_cumsum(
-            d, "v", [F.desc("score"), F.asc("id")], checkpoint_input=True
-        )
+        return scale.two_phase_cumsum(d, "v", [F.desc("score"), F.asc("id")])
 
-    return crossover(scale, {"window": 1 << 62, "two_phase": -1}, frames,
+    return crossover({"window": 1 << 62, "two_phase": -1}, frames,
                      cumsum, "cumsum", "rows")
 
 
@@ -213,17 +219,14 @@ def main() -> int:
 
     from bigdatagenomic_spark.operators.assembly import extract_path
 
-    for strategy in ("doubling", "walk"):
+    # a shut budget forces pointer doubling, an open one the driver walk
+    for strategy, budget in (("doubling", 0), ("walk", 1 << 62)):
+        set_budget(budget)
         per = {}
         for n in CHAIN_SIZES:
             reads = chain_reads(spark, n).localCheckpoint(eager=True)
-            kw = (
-                {"driver_walk_threshold": 0}  # force pointer doubling
-                if strategy == "doubling"
-                else {"n_rows_hint": n}  # budget picks the driver walk
-            )
             t0 = time.time()
-            got = extract_path(reads, source=1, max_rounds=40, **kw).count()
+            got = extract_path(reads, source=1, max_rounds=40, n_rows_hint=n).count()
             sec = round(time.time() - t0, 3)
             assert got == n, (strategy, n, got)
             per[f"n{n}"] = sec
