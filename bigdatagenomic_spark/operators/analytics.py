@@ -586,8 +586,10 @@ def q_tpch_q18_shape(spark, sf_dir):
 
 def q18_limit_above_customer_join(spark, sf_dir):
     """The pre-round-9 q18 shape (limit after the customer join) — kept
-    ONLY as the 'before' arm of the Part-6 shuffle audit
-    (tools/audit_q18.py); not registered."""
+    ONLY as the 'before' arm of the Part-6 shuffle audit: at ×100 with
+    all joins shuffled it moved 885.7 MB / 74.35M rows against the
+    registered shape's 807.7 MB / 71.41M (SCALING.md Part 6; the audit
+    script is `git show 511d62e:tools/audit_q18.py`); not registered."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")

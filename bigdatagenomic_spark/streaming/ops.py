@@ -446,10 +446,10 @@ def run_lsh_index_maintenance(
     ``timings`` (optional): a list the handler appends
     ``{"batch_id", "wall_s"}`` dicts to — per-micro-batch wall clock
     for the whole handle body (probe join + pair append + index
-    append). Used by the state-at-scale sweep
-    (tools/scale_check_streaming_s11.py) to measure whether per-batch
-    cost stays flat as the stored index grows; no effect on the
-    pipeline itself.
+    append). The state-at-scale sweep read it to measure the flat
+    per-batch cost above (SCALING.md Part 11; the sweep is
+    `git show 511d62e:tools/scale_check_streaming_s11.py`); no effect
+    on the pipeline itself.
     """
     import time as _time
 

@@ -4,6 +4,9 @@ tie-breaks, and idle-after-exhaustion."""
 from bigdatagenomic_spark.operators.bpe import bpe_train
 
 
+SF_DIR = "/root/testdata/sf0.001"
+
+
 def _seg(spark, rows, n_merges):
     docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
     return {
@@ -89,3 +92,15 @@ def test_bpe_encode_counts_subword_units(spark):
     assert abs(out[0].compression - 2.0) < 1e-9
     # doc1: cd -> 'c d' (2) + abab -> 2 = 4 tokens
     assert out[1].n_words == 2 and out[1].n_bpe_tokens == 4
+
+
+def test_bpe_lazy_checkpoint_still_truncates_lineage(spark):
+    from bigdatagenomic_spark.operators.bpe import bpe_train
+    from bigdatagenomic_spark.sources.tables import load_table
+
+    out = bpe_train(load_table(spark, SF_DIR, "documents"), n_merges=2)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    # the returned plan roots at the last merge round's checkpoint —
+    # no parquet relation may remain in the lineage
+    assert "LogicalRDD" in plan
+    assert "parquet" not in plan.lower()

@@ -62,3 +62,17 @@ def test_grid_family_plans_root_at_checkpoint_no_fact_rescans(spark):
         "re-read parquet (the repartitionByRange sampling double-scan, "
         f"SCALING.md Part 14) or lost their checkpoint root: {bad}"
     )
+
+
+def test_q21_join_subtree_pinned_once(spark):
+    from bigdatagenomic_spark import queries as Q
+
+    df = Q.queries()["q_tpch_q21_shape"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n_parquet = plan.count("Scan parquet")
+    n_rdd = plan.count("Scan ExistingRDD")
+    # only the supplier dimension still reads parquet downstream of the
+    # pinned lineitem⋈orders subtree (before the pin: 2 lineitem +
+    # 2 orders + 1 supplier scans)
+    assert n_parquet == 1, f"expected 1 parquet scan (supplier), got {n_parquet}"
+    assert n_rdd >= 2, f"expected the pinned lo subtree on both sides, got {n_rdd}"

@@ -1,4 +1,6 @@
-"""Behavioral tests for dedup/similarity/text operators.
+"""Behavioral tests for dedup/similarity/text operators, and for the
+llm_prep and dedup registry entries (CDC chunking, fuzzy decontam, edit
+distance, KMV, single-pass span and boilerplate plans).
 
 Oracle parity (test_relational_oracle.py) proves Spark and DuckDB agree;
 these tests prove the operators actually *detect* what they claim, using
@@ -7,13 +9,41 @@ planted duplicates/near-duplicates in synthetic documents.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import duckdb
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from bigdatagenomic_spark import queries as Q
 from bigdatagenomic_spark.functions import md5_long, tokens, word_shingles
 from bigdatagenomic_spark.operators import dedup as D
 from bigdatagenomic_spark.operators import similarity as S
+from bigdatagenomic_spark.operators.dedup import (
+    EDIST_MAX_CHARS,
+    EDIST_MIN_SIM_MICRO,
+    KMV_K,
+    KMV_M,
+    PAIR_SAMPLE_DOCS,
+    Q_DEDUP_KMV_SQL,
+)
+from bigdatagenomic_spark.operators.llm_prep import (
+    CDC_B,
+    CDC_DIV,
+    CDC_M,
+    CDC_W,
+    Q_TEXT_CDC_CHUNKS_SQL,
+)
+from bigdatagenomic_spark.plans.inspect import formatted_plan, join_kinds
+
+from tests.helpers import SF, _TEXTS, _docs_con, _md5_60, _q, _tokens
+
+SF_DIR = "/root/testdata/sf0.001"
+
 
 BASE = (
     "the quick brown fox jumps over the lazy dog and runs far away "
@@ -1165,3 +1195,425 @@ def test_dsir_select_prefers_target_like_docs(spark):
     assert rows[2].sum_w_micro > rows[3].sum_w_micro
     assert rows[2].selected == 1
     assert rows[3].selected == 0
+
+
+def test_decontam_fuzzy_flags_planted_pair(spark):
+    rows = _q("q_x_decontam_fuzzy")(spark, SF).collect()
+    from bigdatagenomic_spark.operators.llm_prep import (
+        DECON_FUZZY_MOD,
+        DECON_FUZZY_THRESHOLD,
+    )
+
+    assert rows, "expected contaminated pairs in the planted-dup testdata"
+    # the known cross-split near-dups must be recovered (mod-19 split)
+    assert any(r.train_id == 50 and r.eval_id == 0 for r in rows)
+    assert any(r.train_id == 89 and r.eval_id == 114 for r in rows)
+    for r in rows:
+        assert r.train_id % DECON_FUZZY_MOD != 0  # train side only
+        assert r.eval_id % DECON_FUZZY_MOD == 0   # eval side only
+        assert r.jacc >= DECON_FUZZY_THRESHOLD
+
+
+def test_cdc_chunks_reassemble_and_dedupe(spark):
+    """CDC invariants: per-doc chunks tile the document exactly
+    (contiguous, full cover), and the planted near-dup docs share
+    chunk hashes (the dedupable-bytes signal)."""
+    rows = _q("q_text_cdc_chunks")(spark, SF).collect()
+    assert rows
+    by_doc: dict = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append(r)
+    from bigdatagenomic_spark.sources.tables import load_table
+
+    lens = {
+        r.doc_id: r.n
+        for r in load_table(spark, SF, "documents")
+        .where(F.col("text").isNotNull())
+        .select("doc_id", F.length("text").alias("n"))
+        .collect()
+    }
+    for doc_id, chunks in by_doc.items():
+        chunks.sort(key=lambda r: r.chunk_idx)
+        pos = 1
+        for c in chunks:
+            assert c.start == pos, (doc_id, c.chunk_idx)
+            assert c.clen >= 1
+            pos += c.clen
+        assert pos - 1 == lens[doc_id]  # full cover, no gaps/overlap
+    assert any(r.n_dup > 1 for r in rows)  # near-dups share chunks
+
+
+def test_cdc_boundaries_stable_under_prefix_edit(spark):
+    """THE content-defined-chunking guarantee (vs fixed-size blocks): an
+    edit only disturbs the chunks it touches. Prepending text to a
+    document must leave every chunk that starts after the edit's last
+    affected window with an IDENTICAL hash — that's why near-duplicate
+    docs share storage."""
+    from bigdatagenomic_spark.operators.llm_prep import CDC_W
+
+    base = (
+        "the quick brown fox jumps over the lazy dog while the merge "
+        "window stream sort join table scan batch value key part column "
+        "agg group row data line query fast slow small big customer "
+        "order filter hash spark dup error view click signup purchase"
+    )
+    edited = "PREFIX EDIT INSERTED HERE " + base
+    df = spark.createDataFrame(
+        [(0, base), (1, edited)], "doc_id long, text string"
+    )
+    # run the same chunking expressions via a temp view + the operator's
+    # internal pipeline (reuse the registered query's logic by pointing
+    # load_table at a temp dir would be heavier; instead replicate via
+    # the oracle on DuckDB AND spark expressions through a local table)
+    import duckdb
+
+    import bigdatagenomic_spark.operators.llm_prep as LP
+
+    con = duckdb.connect()
+    con.register("docs", df.toPandas())
+    sql = LP.Q_TEXT_CDC_CHUNKS_SQL.replace("FROM documents", "FROM docs")
+    rows = con.sql(sql).fetchall()
+    by_doc = {0: [], 1: []}
+    for doc_id, idx, start, clen, chash, _ in rows:
+        by_doc[doc_id].append((start, clen, chash))
+    h0 = {h for (_, _, h) in by_doc[0]}
+    h1 = {h for (_, _, h) in by_doc[1]}
+    shared = h0 & h1
+    # all chunks of the ORIGINAL doc that begin after the first cut
+    # must reappear verbatim in the edited doc (the prefix edit can
+    # only disturb chunks up to the first boundary after the edit)
+    tail_chunks = [h for (s, _, h) in by_doc[0] if s > CDC_W]
+    assert tail_chunks, "fixture must produce multiple chunks"
+    missing = [h for h in tail_chunks[1:] if h not in h1]
+    assert not missing, f"CDC stability violated: {len(missing)} lost"
+    assert shared, "edited doc shares no chunks with the original"
+
+
+def test_cdc_kernel_matches_sql_spec(spark):
+    """The Arrow-batched boundary kernel (_cdc_cuts_udf) and the
+    pure-SQL expression spec (CDC_CODES_EXPR + CDC_CUTS_EXPR) must
+    produce identical cut positions — on the real sf0.001 corpus AND
+    on strings that cross the BMP/astral codepoint seam, where
+    ascii(substring(...)) and the kernel's utf-32 decode could drift
+    apart."""
+    import bigdatagenomic_spark.operators.llm_prep as LP
+    from bigdatagenomic_spark.sources.tables import load_table
+
+    corpus = (
+        load_table(spark, SF, "documents")
+        .where(F.col("text").isNotNull())
+        .select("doc_id", "text")
+    )
+    extra = spark.createDataFrame(
+        [
+            (100001, "café naïve 中文 text mixed in " * 8),
+            (100002, "astral \U0001f680\U0001f9ec plane codepoints " * 10),
+            (100003, "x" * LP.CDC_W),  # minimum-length doc
+        ],
+        "doc_id long, text string",
+    )
+    both = corpus.unionByName(extra).withColumn("tlen", F.length("text"))
+    got = (
+        both.where(F.col("tlen") >= LP.CDC_W)
+        .withColumn("kernel_cuts", LP._cdc_cuts_udf()(F.col("text")))
+        .withColumn("codes", F.expr(LP.CDC_CODES_EXPR))
+        .withColumn("spec_cuts", F.expr(LP.CDC_CUTS_EXPR))
+        .select("doc_id", "kernel_cuts", "spec_cuts")
+        .collect()
+    )
+    assert got
+    for r in got:
+        assert list(r.kernel_cuts) == list(r.spec_cuts), r.doc_id
+
+
+def _cdc_python(text: str):
+    """Independent CDC reference: polynomial-window boundaries (naive
+    Horner evaluation, written without the precomputed CDC_POW table so
+    it does not share code with the engines), tiling chunks."""
+    n = len(text)
+    cuts = []
+    for p in range(1, n - CDC_W + 2):  # 1-based window starts
+        h = 0
+        for ch in text[p - 1 : p - 1 + CDC_W]:
+            h = (h * CDC_B + ord(ch)) % CDC_M
+        if h % CDC_DIV == 0:
+            cuts.append(p + CDC_W - 1)
+    ends = [c for c in cuts if c < n] + [n]
+    starts = [1] + [e + 1 for e in ends[:-1]]
+    return [
+        (i + 1, s, e - s + 1, hashlib.md5(text[s - 1 : e].encode()).hexdigest())
+        for i, (s, e) in enumerate(zip(starts, ends))
+    ]
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    # full-Unicode alphabet (minus surrogates): the polynomial boundary
+    # hash is codepoint-based, so the test must cover the BMP/astral
+    # seam where ascii()/substr()/ord() could disagree across engines
+    st.text(
+        alphabet=st.characters(
+            min_codepoint=32,
+            max_codepoint=0x10FFFF,
+            exclude_categories=("Cs",),
+        ),
+        min_size=CDC_W,
+        max_size=240,
+    )
+)
+def test_cdc_oracle_matches_python_reference(text):
+    con = duckdb.connect()
+    con.register(
+        "docs", pd.DataFrame({"doc_id": [0], "text": [text]})
+    )
+    sql = Q_TEXT_CDC_CHUNKS_SQL.replace("FROM documents", "FROM docs")
+    got = [
+        (idx, start, clen, chash)
+        for (_, idx, start, clen, chash, _) in con.sql(sql).fetchall()
+    ]
+    assert got == _cdc_python(text)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.text(
+        alphabet=st.characters(
+            min_codepoint=1,
+            max_codepoint=0x10FFFF,
+            exclude_categories=("Cs",),
+        ),
+        max_size=400,
+    )
+)
+def test_cdc_kernel_matches_python_reference(text):
+    """The numpy boundary kernel (sliding_window_view matmul over the
+    utf-32 codepoint array — the per-row unit of the Arrow pandas_udf)
+    must agree position-for-position with the naive-Horner reference on
+    arbitrary Unicode, INCLUDING below-window-length strings where the
+    kernel's [] contract applies. Together with
+    test_cdc_oracle_matches_python_reference (DuckDB vs the same
+    reference) and test_round9_ops.py::test_cdc_kernel_matches_sql_spec
+    (kernel vs the Spark SQL expression on real corpus), this closes
+    the 4-way agreement: kernel == Spark spec == DuckDB == Horner."""
+    from bigdatagenomic_spark.operators.llm_prep import _cdc_cut_positions
+
+    n = len(text)
+    expect = []
+    for p in range(1, n - CDC_W + 2):
+        h = 0
+        for ch in text[p - 1 : p - 1 + CDC_W]:
+            h = (h * CDC_B + ord(ch)) % CDC_M
+        if h % CDC_DIV == 0:
+            expect.append(p + CDC_W - 1)
+    assert _cdc_cut_positions(text) == expect
+
+
+# ---------------------------------------------------------------------------
+# edit distance: plan pins
+# ---------------------------------------------------------------------------
+
+def test_editdist_stays_jvm_side_and_pushes_filter(spark):
+    """Levenshtein must run as the built-in JVM expression (never a
+    Python UDF), and the n_chars length-contract predicate must reach
+    the parquet scan as a pushed filter."""
+    from bigdatagenomic_spark.operators.dedup import q_dedup_editdist
+
+    from bigdatagenomic_spark.plans import formatted_plan
+
+    df = q_dedup_editdist(spark, SF_DIR)
+    exec_plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "levenshtein" in exec_plan
+    assert "BatchEvalPython" not in exec_plan and "ArrowEvalPython" not in exec_plan
+    formatted = formatted_plan(df)
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", formatted)
+    assert any("n_chars" in p for p in pushed), formatted
+
+
+def _edist_oracle_sql():
+    import __spark_entry__ as entry
+
+    return entry.oracle_sql()["q_dedup_editdist"]
+
+
+def _py_levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i] + [0] * len(b)
+        for j, cb in enumerate(b, 1):
+            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
+        prev = cur
+    return prev[len(b)]
+
+
+def _py_shingles(text: str) -> set:
+    t = _tokens(text)
+    out = set()
+    for i in range(1, max(len(t) - 2, 1) + 1):
+        out.add(" ".join(t[i - 1 : i + 2]))
+    return out
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(
+        st.text(alphabet="abc d.e", min_size=0, max_size=30),
+        min_size=1,
+        max_size=8,
+    )
+)
+def test_editdist_oracle_matches_python(texts):
+    con = duckdb.connect()
+    con.register(
+        "documents",
+        pd.DataFrame(
+            {
+                "doc_id": range(len(texts)),
+                "text": texts,
+                "n_chars": [len(t) for t in texts],
+            }
+        ),
+    )
+    got = {
+        (r[0], r[1]): (r[2], r[3])
+        for r in con.sql(_edist_oracle_sql()).fetchall()
+    }
+    eligible = {
+        i: t
+        for i, t in enumerate(texts)
+        if i < PAIR_SAMPLE_DOCS and len(t) <= EDIST_MAX_CHARS
+    }
+    expect = {}
+    ids = sorted(eligible)
+    for x in range(len(ids)):
+        for y in range(x + 1, len(ids)):
+            a, b = ids[x], ids[y]
+            if not (_py_shingles(eligible[a]) & _py_shingles(eligible[b])):
+                continue
+            d = _py_levenshtein(eligible[a], eligible[b])
+            ml = max(len(eligible[a]), len(eligible[b]))
+            if ml == 0:
+                continue  # two empty texts: no shingle rows exist anyway
+            sim = (ml - d) * 1000000 // ml
+            if sim >= EDIST_MIN_SIM_MICRO:
+                expect[(a, b)] = (d, sim)
+    assert got == expect
+    con.close()
+
+
+def _word_shingles(t: list[str]) -> set[str]:
+    """Mirror functions.word_shingles: 3-gram joins with null-skip
+    partial shingles for docs shorter than 3 tokens; the zero-token
+    '' artifact is excluded (both engines filter it)."""
+    if not t:
+        return set()
+    n = max(len(t) - 2, 1)
+    return {" ".join(t[i : i + 3]) for i in range(n)}
+
+
+def _kmv_reference(texts, sources):
+    sketches: dict[str, list[int]] = {}
+    per_source: dict[str, set[int]] = {}
+    for text, src in zip(texts, sources):
+        if text is None:
+            continue
+        per_source.setdefault(src, set()).update(
+            _md5_60(s) for s in _word_shingles(_tokens(text))
+        )
+    est = {}
+    for src, hs in per_source.items():
+        if not hs:  # a source whose docs all tokenize empty has no rows
+            continue
+        sk = sorted(hs)[:KMV_K]
+        sketches[src] = sk
+        est[src] = (
+            len(sk) if len(sk) < KMV_K else (KMV_K - 1) * KMV_M // sk[-1]
+        )
+    rows = []
+    for sa in sorted(sketches):
+        for sb in sorted(sketches):
+            if sa >= sb:
+                continue
+            a, b = set(sketches[sa]), set(sketches[sb])
+            u = sorted(a | b)[:KMV_K]
+            n_common = sum(1 for h in u if h in a and h in b)
+            rows.append(
+                (
+                    sa,
+                    sb,
+                    est[sa],
+                    est[sb],
+                    len(u),
+                    n_common,
+                    n_common * 1000000 // len(u),
+                )
+            )
+    return rows
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(_TEXTS, min_size=1, max_size=8),
+    st.data(),
+)
+def test_kmv_oracle_matches_python(texts, data):
+    sources = [
+        data.draw(st.sampled_from(["s1", "s2", "s3"])) for _ in texts
+    ]
+    con = _docs_con(texts, sources)
+    got = con.sql(Q_DEDUP_KMV_SQL).fetchall()
+    assert got == _kmv_reference(texts, sources)
+
+
+def test_kmv_dense_corpus_exercises_estimator_branch():
+    """Deterministic hash-dense corpus: each source carries WAY more
+    than K distinct shingles, so this deterministically covers the
+    three paths the hypothesis inputs above rarely reach (a generated
+    source CAN exceed 128 distinct hashes — 8 docs x up to 28
+    shingles — but most draws stay under): the (K-1)*2^60 div h_k
+    cardinality-estimate branch, the per-(source, bucket) rn1 <= K
+    prune (whose union-of-bucket-minima must still contain the global
+    bottom-K), and the urn <= K truncation of the pair union rank."""
+    # two sources, ~600 distinct shingles each, ~50% overlap
+    texts, sources = [], []
+    for i in range(200):
+        texts.append(" ".join(f"tok{i}x{j}" for j in range(5)))
+        sources.append("sa")
+    for i in range(100, 300):
+        texts.append(" ".join(f"tok{i}x{j}" for j in range(5)))
+        sources.append("sb")
+    con = _docs_con(texts, sources)
+    got = con.sql(Q_DEDUP_KMV_SQL).fetchall()
+    expect = _kmv_reference(texts, sources)
+    assert got == expect
+    (sa, sb, est_a, est_b, union_k, n_common, jacc) = got[0]
+    # the estimator branch really ran: k_used == K, so est != k_used
+    assert union_k == KMV_K and est_a > KMV_K and est_b > KMV_K
+    # estimates within 3x of truth (~600) — sanity, not the contract
+    assert 200 < est_a < 1800 and 200 < est_b < 1800
+    assert 0 < n_common < KMV_K
+
+
+def test_dup_spans_single_pass_no_joins(spark):
+    """One posexplode of the span fingerprints, occurrence count via
+    window, per-doc fold in the same pass — no semi-join, no join-back,
+    no second tokenize."""
+    df = Q.queries()["q_text_dup_spans"](spark, SF_DIR)
+    plan = formatted_plan(df)
+    assert len(re.findall(r"\(\d+\) Generate", plan)) == 1, plan
+    assert join_kinds(df) == []
+    # one parquet scan total (no base-row re-tokenize branch)
+    assert plan.count("Location: InMemoryFileIndex") == 1, plan
+
+
+def test_boilerplate_streaming_distinct_count_no_anti_join(spark):
+    """count(DISTINCT doc_id) per fingerprint now comes from
+    max(dense_rank) windows (streaming, no per-row set state): the plan
+    must carry the two window functions and no anti-join; the only
+    join left is the final reassembly attach on doc_id."""
+    df = Q.queries()["q_text_boilerplate"](spark, SF_DIR)
+    plan = formatted_plan(df)
+    assert "dense_rank" in plan
+    assert "LeftAnti" not in plan
+    # exactly the reassembly join remains (formatted_plan prints each
+    # operator twice — tree + details — so count tree nodes)
+    assert len(re.findall(r"\(\d+\) \w*HashJoin", plan)) == 1, plan

@@ -2,20 +2,26 @@
 
 Oracle parity for q_mm_* runs in test_relational_oracle.py; here we test
 the parts the oracle can't see: the ASCII invariant the oracles rely on,
-the stubbed codec boundary, and fake-decoder determinism.
+the stubbed codec boundary, fake-decoder determinism, and pixel stats
+through the real BMP decoder. The q_mm_* property tests compare an
+oracle against a Python reference (see tests/helpers.py).
 """
 
 from __future__ import annotations
 
 import hashlib
 
+import duckdb
+import pandas as pd
 import pytest
-
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.operators.multimodal import (
     FRAME_BYTES,
     FRAME_STRIDE,
+    Q_MM_PAYLOAD_DEDUP_SQL,
     attach_payloads,
     decode_images,
     fake_image_decoder,
@@ -244,3 +250,116 @@ def test_shot_boundaries_planted_cut(spark):
         (7, 1, 10.0, 200.0, 190.0),
         (7, 2, 200.0, 10.0, 190.0),
     ]
+
+
+# ---------------------------------------------------------------------------
+# real BMP pixel decoder through the pixel_stats plan
+# ---------------------------------------------------------------------------
+
+def test_real_bmp_pixel_stats_through_plan(spark):
+    """The pixel-stats codec boundary exercised end-to-end with the
+    REAL BMP decoder: channel sums and the Rec.601 luma over actual
+    decoded pixel bytes (incl. padded-row widths)."""
+    from bigdatagenomic_spark.operators.multimodal import (
+        bmp_rgb_decoder,
+        encode_bmp,
+        pixel_stats,
+    )
+
+    rows = []
+    for doc_id, (w, h) in enumerate([(5, 3), (4, 7), (1, 1), (32, 2)]):
+        rgb = bytes(
+            (x * 7 + y * 13 + c * 29) % 256
+            for y in range(h)
+            for x in range(w)
+            for c in range(3)
+        )
+        rows.append((doc_id, w, h, rgb, encode_bmp(w, h, rgb)))
+    mm = spark.createDataFrame(
+        [(doc_id, payload) for doc_id, _w, _h, _rgb, payload in rows],
+        "doc_id LONG, payload BINARY",
+    )
+    got = {
+        r.doc_id: (r.n_px, r.sum_r, r.sum_g, r.sum_b, r.mean_lum_milli)
+        for r in pixel_stats(mm, decoder=bmp_rgb_decoder).collect()
+    }
+    for doc_id, w, h, rgb, _payload in rows:
+        sr, sg, sb = sum(rgb[0::3]), sum(rgb[1::3]), sum(rgb[2::3])
+        n_px = w * h
+        assert got[doc_id] == (
+            n_px, sr, sg, sb, (299 * sr + 587 * sg + 114 * sb) // n_px
+        )
+
+
+def test_pixel_stats_requires_decoder(spark):
+    import pytest
+
+    from bigdatagenomic_spark.operators.multimodal import pixel_stats
+
+    mm = spark.createDataFrame([(0, b"x")], "doc_id LONG, payload BINARY")
+    with pytest.raises(NotImplementedError):
+        pixel_stats(mm)
+
+
+# ---------------------------------------------------------------------------
+# pixel stats vs python fake-RGB reference
+# ---------------------------------------------------------------------------
+
+@settings(max_examples=40, deadline=None)
+@given(
+    st.lists(
+        st.text(
+            alphabet=st.characters(min_codepoint=32, max_codepoint=126),
+            min_size=0,
+            max_size=50,
+        ),
+        min_size=1,
+        max_size=8,
+    )
+)
+def test_pixel_stats_oracle_matches_fake_decoder(texts):
+    from bigdatagenomic_spark.operators.multimodal import (
+        Q_MM_PIXEL_STATS_SQL,
+        fake_rgb_decoder,
+    )
+
+    con = duckdb.connect()
+    con.register(
+        "documents",
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
+    )
+    got = {r[0]: r[1:] for r in con.sql(Q_MM_PIXEL_STATS_SQL).fetchall()}
+    for i, text in enumerate(texts):
+        n_px, sr, sg, sb = fake_rgb_decoder(text.encode("utf-8"))
+        if n_px == 0:
+            assert i not in got
+            continue
+        lum = (299 * sr + 587 * sg + 114 * sb) // n_px
+        assert got[i] == (n_px, sr, sg, sb, lum)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.sampled_from(["aaa", "bbb", "ccc", "dd", ""]),
+        min_size=1,
+        max_size=12,
+    )
+)
+def test_payload_dedup_oracle_matches_python(texts):
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    )
+    (got,) = con.sql(Q_MM_PAYLOAD_DEDUP_SQL).fetchall()
+    groups: dict[str, int] = {}
+    for t in texts:
+        groups[t] = groups.get(t, 0) + 1
+    n_payloads = len(texts)
+    n_distinct = len(groups)
+    n_dup = sum(1 for c in groups.values() if c >= 2)
+    n_red = sum(c - 1 for c in groups.values())
+    wasted = sum((c - 1) * len(t.encode()) for t, c in groups.items())
+    total = sum(c * len(t.encode()) for t, c in groups.items())
+    assert got == (n_payloads, n_distinct, n_dup, n_red, wasted, total)
+    con.close()

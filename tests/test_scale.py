@@ -1,5 +1,8 @@
 """Scale-utility tests: bucketed co-located joins, salted aggregation,
-approx-distinct tolerance (SURVEY.md Q10's declared check).
+approx-distinct tolerance (SURVEY.md Q10's declared check), the
+two-phase rank / running sum / prefix max helpers, the bloom join and
+join-size sketch, and the grid-algebra median, trimmed mean, winsorize
+and weighted median (plan pins plus oracle-vs-Python properties).
 
 The salted-agg value parity runs in test_relational_oracle.py via
 q_x_salted_agg's plain GROUP BY oracle; here we pin its plan shape.
@@ -7,11 +10,24 @@ q_x_salted_agg's plain GROUP BY oracle; here we pin its plan shape.
 
 from __future__ import annotations
 
-import pytest
+import re
 
+import duckdb
+import pandas as pd
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from bigdatagenomic_spark.operators.scale import salted_agg, write_bucketed
+from bigdatagenomic_spark.operators.scale import (
+    Q_X_JOIN_SIZE_SQL,
+    Q_X_TRIMMED_MEAN_SQL,
+    Q_X_WEIGHTED_MEDIAN_SQL,
+    Q_X_WINSORIZE_SQL,
+    salted_agg,
+    write_bucketed,
+)
 from bigdatagenomic_spark.plans import exchange_count, formatted_plan, join_kinds
 from bigdatagenomic_spark.sources.tables import load_table
 
@@ -475,3 +491,362 @@ def test_aqe_splits_skewed_join(spark):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+# ---------------------------------------------------------------------------
+# two_phase_prefix_max == the single-partition window, wherever the
+# range boundaries land
+# ---------------------------------------------------------------------------
+
+def test_two_phase_prefix_max_matches_single_window(spark, driver_budget, shuffle_partitions):
+    from bigdatagenomic_spark.operators.scale import two_phase_prefix_max
+
+    rows = [(i, (i * 37) % 19 - 9) for i in range(200)]
+    df = spark.createDataFrame(rows, ["k", "v"])
+    driver_budget(-1)
+    shuffle_partitions(7)
+    for inclusive in (False, True):
+        got = {
+            r["k"]: r["pm"]
+            for r in two_phase_prefix_max(
+                df, "v", [F.col("k").asc()], out_col="pm", inclusive=inclusive
+            ).collect()
+        }
+        end = 0 if inclusive else -1
+        ref = {
+            r["k"]: r["pm"]
+            for r in df.withColumn(
+                "pm",
+                F.max("v").over(
+                    W.orderBy("k").rowsBetween(W.unboundedPreceding, end)
+                ),
+            ).collect()
+        }
+        assert got == ref
+
+
+# ---------------------------------------------------------------------------
+# bloom join: plan shape (broadcast left-semi prefilters) + bounded sketch
+# ---------------------------------------------------------------------------
+
+def test_bloom_join_plan_prefilters_fact_with_broadcast_semis(spark):
+    from bigdatagenomic_spark.operators.scale import BJ_M, q_x_bloom_join
+
+    df = q_x_bloom_join(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # round-11 shape: the sketch is an InSet literal filter inside the
+    # fact scan's codegen — no semi-join exchanges, no BNLJ, no fact
+    # shuffle before the single exact broadcast join
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "LeftSemi" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert "INSET" in plan or " IN (" in plan, plan
+
+
+def test_bloom_sketch_is_bounded(spark):
+    from bigdatagenomic_spark.operators.scale import (
+        BJ_K,
+        BJ_M,
+        BJ_NATION,
+        _bj_positions,
+    )
+    from bigdatagenomic_spark.sources.tables import load_table
+
+    sup = (
+        load_table(spark, SF_DIR, "supplier")
+        .where(F.col("s_nationkey") == BJ_NATION)
+        .select("s_suppkey")
+    )
+    n_keys = sup.count()
+    bits = None
+    for i in range(BJ_K):
+        p = sup.select(_bj_positions(F.col("s_suppkey"))[i].alias("pos"))
+        bits = p if bits is None else bits.unionByName(p)
+    n_bits = bits.distinct().count()
+    assert 0 < n_bits <= min(BJ_K * n_keys, BJ_M)
+
+
+# ---------------------------------------------------------------------------
+# join-size estimate == the actual join's output cardinality
+# ---------------------------------------------------------------------------
+
+def test_join_size_matches_actual_join(spark):
+    from bigdatagenomic_spark.operators.scale import q_x_join_size
+    from bigdatagenomic_spark.sources.tables import load_table
+
+    row = q_x_join_size(spark, SF_DIR).collect()[0]
+    ev = load_table(spark, SF_DIR, "events").where(
+        F.col("user_id").isNotNull()
+    )
+    a = ev.select(F.col("user_id").alias("u"))
+    actual = a.join(a.withColumnRenamed("u", "u2"), F.col("u") == F.col("u2")).count()
+    assert row["est_rows"] == actual
+
+
+def test_exact_median_keeps_row_number_partitioned(spark, driver_budget):
+    """Above the driver budget two_phase_rank's window must stay
+    partitioned on (_pid, grp) — an unpartitioned row_number would
+    serialize the whole table through one task (the exact failure
+    q_x_exact_median exists to avoid)."""
+    from bigdatagenomic_spark.operators.scale import q_x_exact_median
+
+    driver_budget(-1)
+    plan = (
+        q_x_exact_median(spark, SF_DIR)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    import re
+
+    for m in re.finditer(r"row_number\(\) windowspecdefinition\(([^)]*)\)", plan):
+        spec = m.group(1)
+        assert "_pid" in spec, plan
+
+
+# ---------------------------------------------------------------------------
+# join-size estimation vs exact python self-join count
+# ---------------------------------------------------------------------------
+
+@settings(max_examples=50, deadline=None)
+@given(st.lists(st.integers(0, 6), min_size=1, max_size=40))
+def test_join_size_oracle_matches_exact_count(users):
+    ev = pd.DataFrame({"event_id": range(len(users)), "user_id": users})
+    con = duckdb.connect()
+    con.register("events", ev)
+    ((n_keys, est_rows, top_user, top_pairs),) = con.sql(
+        Q_X_JOIN_SIZE_SQL
+    ).fetchall()
+    exact = sum(1 for a in users for b in users if a == b)
+    counts: dict[int, int] = {}
+    for u in users:
+        counts[u] = counts.get(u, 0) + 1
+    assert n_keys == len(counts)
+    assert est_rows == exact
+    ref_top = max(counts, key=lambda u: (counts[u] * counts[u], u))
+    assert (top_user, top_pairs) == (
+        ref_top,
+        counts[ref_top] * counts[ref_top],
+    )
+
+
+# ---------------------------------------------------------------------------
+# exact median vs python statistics
+# ---------------------------------------------------------------------------
+
+@settings(max_examples=40, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.sampled_from(["A", "B"]), st.integers(-400, 400)),
+        min_size=1,
+        max_size=50,
+    )
+)
+def test_exact_median_oracle_matches_python(rows):
+    from bigdatagenomic_spark.operators.scale import Q_X_EXACT_MEDIAN_SQL
+
+    cust = pd.DataFrame(
+        {
+            "c_custkey": range(len(rows)),
+            "c_mktsegment": [g for g, _ in rows],
+            "c_acctbal": [cents / 100.0 for _, cents in rows],
+        }
+    )
+    con = duckdb.connect()
+    con.register("customer", cust)
+    got = {r[0]: r[1:] for r in con.sql(Q_X_EXACT_MEDIAN_SQL).fetchall()}
+    for grp in sorted({g for g, _ in rows}):
+        vals = sorted(cents for g, cents in rows if g == grp)
+        n = len(vals)
+        lo, hi = vals[(n - 1) // 2], vals[n // 2]
+        assert got[grp] == (n, lo + hi)
+
+
+def test_trimmed_mean_is_grid_algebra_not_per_row_rank(spark, driver_budget):
+    """Round-11 perf rewrite pin: the kept multiset comes from rank-
+    interval overlap on the DISTINCT-CENTS grid — the plan must contain
+    NO row_number at all (the per-row two_phase_rank formulation cost
+    20.6 s on a 6M-row replica; the grid form is ~flat), and above the
+    driver budget every window (the grid cumsum) must stay
+    _pid-partitioned."""
+    from bigdatagenomic_spark.operators.scale import q_x_trimmed_mean
+
+    driver_budget(-1)
+    plan = (
+        q_x_trimmed_mean(spark, SF_DIR)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert "row_number" not in plan, plan
+    for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
+        assert "_pid" in m.group(1), plan
+
+
+# ---------------------------------------------------------------------------
+# winsorize: plan pins
+# ---------------------------------------------------------------------------
+
+def test_winsorize_is_grid_algebra_not_per_row_rank(spark, driver_budget):
+    """Same grid pin as trimmed_mean: no row_number anywhere; above the
+    driver budget the grid cumsum windows stay _pid-partitioned."""
+    from bigdatagenomic_spark.operators.scale import q_x_winsorize
+
+    driver_budget(-1)
+    plan = (
+        q_x_winsorize(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert "row_number" not in plan, plan
+    for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
+        assert "_pid" in m.group(1), plan
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["A", "N"]),
+            st.integers(min_value=1, max_value=10**7),
+        ),
+        min_size=1,
+        max_size=80,
+    )
+)
+def test_trimmed_mean_oracle_matches_python(rows):
+    con = duckdb.connect()
+    con.register(
+        "lineitem",
+        pd.DataFrame(
+            {
+                "l_returnflag": [r[0] for r in rows],
+                "l_extendedprice": [r[1] / 100.0 for r in rows],
+                "l_orderkey": range(len(rows)),
+                "l_linenumber": [1] * len(rows),
+            }
+        ),
+    )
+    got = {r[0]: r[1:] for r in con.sql(Q_X_TRIMMED_MEAN_SQL).fetchall()}
+    by_grp: dict[str, list] = {}
+    for g, c in rows:
+        by_grp.setdefault(g, []).append(c)
+    assert set(got) == set(by_grp)
+    for g, cs in by_grp.items():
+        n, t = len(cs), len(cs) // 20
+        kept = sorted(cs)[t : n - t]
+        assert got[g] == (n, len(kept), sum(kept) * 1000000 // len(kept))
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["A", "N"]),
+            st.integers(min_value=1, max_value=10**6),
+        ),
+        min_size=1,
+        max_size=80,
+    )
+)
+def test_winsorize_oracle_matches_python(rows):
+    con = duckdb.connect()
+    con.register(
+        "lineitem",
+        pd.DataFrame(
+            {
+                "l_returnflag": [r[0] for r in rows],
+                "l_extendedprice": [r[1] / 100.0 for r in rows],
+                "l_orderkey": range(len(rows)),
+                "l_linenumber": [1] * len(rows),
+            }
+        ),
+    )
+    got = {r[0]: r[1:] for r in con.sql(Q_X_WINSORIZE_SQL).fetchall()}
+    by_grp: dict[str, list] = {}
+    for g, c in rows:
+        by_grp.setdefault(g, []).append(c)
+    for g, cs in by_grp.items():
+        n, t = len(cs), len(cs) // 20
+        sv = sorted(cs)
+        lo, hi = sv[t], sv[n - t - 1]
+        clamped = [max(min(c, hi), lo) for c in cs]
+        assert got[g] == (n, lo, hi, sum(clamped) * 1000000 // n)
+    con.close()
+
+
+# ---------------------------------------------------------------------------
+# weighted exact median
+# ---------------------------------------------------------------------------
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["A", "N", "R"]),
+            st.integers(min_value=1, max_value=9999).map(
+                lambda c: c / 100.0
+            ),
+            st.integers(min_value=1, max_value=50),
+        ),
+        min_size=1,
+        max_size=60,
+    )
+)
+def test_weighted_median_oracle_matches_python(rows):
+    df = pd.DataFrame(
+        {
+            "l_returnflag": [r[0] for r in rows],
+            "l_extendedprice": [r[1] for r in rows],
+            "l_quantity": [float(r[2]) for r in rows],
+            "l_orderkey": range(len(rows)),
+            "l_linenumber": [1] * len(rows),
+        }
+    )
+    con = duckdb.connect()
+    con.register("lineitem", df)
+    got = con.sql(Q_X_WEIGHTED_MEDIAN_SQL).fetchall()
+    expect = []
+    for g in sorted({r[0] for r in rows}):
+        cells: dict[float, int] = {}
+        for f, p, w in rows:
+            if f == g:
+                cells[p] = cells.get(p, 0) + w
+        tot = sum(cells.values())
+        cum = 0
+        for p in sorted(cells):
+            cum += cells[p]
+            if 2 * cum >= tot:
+                expect.append((g, p, cum, tot))
+                break
+    assert got == expect
+
+
+def test_two_phase_lazy_checkpoint_rank_values_exact(spark, driver_budget):
+    """two_phase_rank's internal checkpoint turned lazy (pinned by the
+    offsets collect, one fewer job); on the two-phase path ranks must
+    still be exactly the window row_number."""
+    from pyspark.sql import Window as W
+
+    from bigdatagenomic_spark.operators.scale import two_phase_rank
+
+    c = load_table(spark, SF_DIR, "customer").select(
+        "c_custkey", "c_mktsegment", "c_acctbal"
+    )
+    driver_budget(-1)
+    got = two_phase_rank(
+        c,
+        [F.col("c_acctbal").asc(), F.col("c_custkey").asc()],
+        group_cols=["c_mktsegment"],
+        rank_col="r",
+    ).select("c_custkey", "r")
+    want = c.select(
+        "c_custkey",
+        F.row_number()
+        .over(
+            W.partitionBy("c_mktsegment").orderBy(
+                F.col("c_acctbal").asc(), F.col("c_custkey").asc()
+            )
+        )
+        .alias("r"),
+    )
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()

@@ -1,18 +1,24 @@
 """Source/sink round-trips: CSV and JSON interchange vs the parquet base.
 
 The graphlab text reader (R1) is covered in test_assembly.py; this file
-covers the general-format surface in sources.files.
+covers the general-format surface in sources.files, and the
+``sources.tables.fan_out`` repartition rule.
 """
 
 from __future__ import annotations
 
+import re
+
+from pyspark.sql import functions as F
+
+from bigdatagenomic_spark.plans.inspect import formatted_plan
 from bigdatagenomic_spark.sources.files import (
     read_csv,
     read_json,
     write_csv,
     write_json,
 )
-from bigdatagenomic_spark.sources.tables import load_table
+from bigdatagenomic_spark.sources.tables import fan_out, load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -269,3 +275,30 @@ def test_write_training_shards_layout_and_replay(spark, tmp_path):
         .collect()
     ]
     assert got == want and len(got) > 0
+
+
+def test_fan_out_fires_only_below_default_parallelism(spark):
+    target = spark.sparkContext.defaultParallelism
+    d = load_table(spark, SF_DIR, "documents")
+    assert d.rdd.getNumPartitions() < target  # single-row-group testdata
+    fanned = fan_out(d)
+    assert fanned.rdd.getNumPartitions() == target
+    # already-wide input: identity, no exchange added
+    wide = d.repartition(target + 4)
+    assert fan_out(wide) is wide
+
+
+def test_fan_out_keeps_pushdown_and_pruning(spark):
+    d = fan_out(load_table(spark, SF_DIR, "documents"))
+    q = d.where(F.col("text").isNotNull()).select("doc_id")
+    plan = formatted_plan(q)
+    # filter still reaches the parquet scan below the fan-out exchange
+    assert "PushedFilters: [IsNotNull(text)]" in plan
+    # and the scan reads only the two needed columns
+    m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
+    assert m and set(m.group(1).split(",")) <= {"doc_id:bigint", "text:string"}
+
+
+def test_fan_out_preserves_rows(spark):
+    d = load_table(spark, SF_DIR, "documents")
+    assert fan_out(d).count() == d.count()
