@@ -1401,7 +1401,7 @@ CDC_POW = [pow(CDC_B, CDC_W - 1 - i, CDC_M) for i in range(CDC_W)]
 
 # The boundary rule as a pure Spark-SQL expression pair — the
 # executable SPEC for the Arrow kernel below (pinned equal by
-# tests/test_round9_ops.py::test_cdc_kernel_matches_sql_spec). The
+# tests/test_llm_ops.py::test_cdc_kernel_matches_sql_spec). The
 # kernel exists because Spark evaluates higher-order-function lambdas
 # interpreted, ~2 µs/position regardless of the hash inside (md5 and
 # this 16-term polynomial both measured ~3.1 s for the sf0.1 corpus's

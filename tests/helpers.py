@@ -1,4 +1,4 @@
-"""Helpers shared by the operator-family test files.
+"""Helpers shared by the operator-family and property test files.
 
 Most property tests pit an operator's DuckDB oracle SQL against a
 from-scratch Python reference on hypothesis inputs. The Spark side is

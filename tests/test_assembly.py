@@ -4,35 +4,22 @@ Fixture plan follows FIXTURES.md §A: the 3-read smoke input, one 2-read
 fixture per merge case (A1/A2/A3/B/B'/C/D), a generated multi-case chain
 with decoy branches (argmax + exempt coverage), and randomized chains
 checked against the independent Python oracle in assembly_oracle.py.
-
-The read-analytics registry entries (q_asm_*: k-mer entropy, GC skew,
-Mash distance, codon usage, dinucleotide bias, ORFs, BWT) get property
-tests that compare their oracle against a Python reference (see
-tests/helpers.py).
 """
 
 from __future__ import annotations
 
-import math
 import os
 import random
-import re
 import shutil
 
-import duckdb
-import pandas as pd
 import pytest
-from hypothesis import example, given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.operators import assembly as asm
-from bigdatagenomic_spark.queries import BWT_MAX_READ, BWT_MIN_READ, Q_ASM_BWT_SQL
 from bigdatagenomic_spark.sources.graphlab_text import read_graphlab_text, reads_to_edges
 from bigdatagenomic_spark.sources.writers import write_best_path_text
 
 from tests.assembly_oracle import Interval, fold_chain, merge_step
-from tests.helpers import _docs_con
 
 DATA = os.path.join(os.path.dirname(__file__), "data")
 
@@ -488,301 +475,3 @@ def test_long_chain_pointer_doubling_path(spark, driver_budget):
     path = asm.extract_path(with_next, 1)
     got = [(r.pos, r.read_id) for r in path.orderBy("pos").collect()]
     assert got == [(i - 1, i) for i in range(1, n + 1)]
-
-
-# ---------------------------------------------------------------------------
-# k-mer entropy vs python reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ACGTx ", min_size=0, max_size=40),
-        min_size=1,
-        max_size=10,
-    )
-)
-def test_kmer_entropy_oracle_matches_python(texts):
-    from bigdatagenomic_spark.queries import _REGISTRY
-
-    sql = _REGISTRY["q_asm_kmer_entropy"][1]
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = {r[0]: r[1:] for r in con.sql(sql).fetchall()}
-    for i, text in enumerate(texts):
-        if i >= 60:
-            continue
-        cleaned = re.sub("[^ACGT]", "", text.upper())
-        length = 13 + (i % 3) * 2
-        content = (cleaned + "A" * 17)[:length]
-        kmers = [content[j : j + 3] for j in range(len(content) - 2)]
-        n = len(kmers)
-        counts = [kmers.count(k) for k in sorted(set(kmers))]
-        ent = math.log(n) - sum(c * math.log(c) for c in counts) / n
-        ref_ent = math.floor(ent * 10000 + 0.5) / 10000
-        n_k, n_d, got_ent = got[i]
-        assert (n_k, n_d) == (n, len(counts))
-        assert abs(got_ent - ref_ent) < 1.5e-4
-
-
-# ---------------------------------------------------------------------------
-# GC skew vs python reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ACGTu", min_size=0, max_size=30),
-        min_size=1,
-        max_size=10,
-    )
-)
-def test_gc_skew_oracle_matches_python(texts):
-    from bigdatagenomic_spark.queries import _REGISTRY
-
-    sql = _REGISTRY["q_asm_gc_skew"][1]
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = con.sql(sql).fetchall()
-    ref = []
-    cum = 0
-    for i, text in enumerate(texts):
-        if i >= 60:
-            continue
-        cleaned = re.sub("[^ACGT]", "", text.upper())
-        content = (cleaned + "A" * 17)[: 13 + (i % 3) * 2]
-        g, c = content.count("G"), content.count("C")
-        cum += g - c
-        skew = (g - c) * 1000000 // (g + c) if g + c > 0 else 0
-        # DuckDB/Spark integer division truncates; python floors
-        if g + c > 0 and (g - c) < 0 and (g - c) * 1000000 % (g + c) != 0:
-            skew += 1
-        ref.append((i, g, c, skew, cum))
-    assert got == ref
-
-
-# ---------------------------------------------------------------------------
-# Mash distance vs python reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@example(["AAAATT", "", "AAACTC", "", "AAAAGAAACG", "", "AAAACAAACC"])
-@given(
-    st.lists(
-        st.text(alphabet="ACGT", min_size=0, max_size=30),
-        min_size=4,
-        max_size=24,
-    )
-)
-def test_mash_oracle_matches_python(texts):
-    from bigdatagenomic_spark.queries import MASH_GROUPS, MASH_K, _REGISTRY
-
-    sql = _REGISTRY["q_asm_mash_distance"][1]
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = {(r[0], r[1]): r[2:] for r in con.sql(sql).fetchall()}
-
-    def revcomp(s: str) -> str:
-        return s[::-1].translate(str.maketrans("ACGT", "TGCA"))
-
-    sets: dict[int, set[str]] = {g: set() for g in range(MASH_GROUPS)}
-    for i, text in enumerate(texts):
-        content = (text.upper() + "A" * 17)[: 13 + (i % 3) * 2]
-        for j in range(len(content) - MASH_K + 1):
-            km = content[j : j + MASH_K]
-            sets[i % MASH_GROUPS].add(min(km, revcomp(km)))
-    for ga in range(MASH_GROUPS):
-        for gb in range(ga + 1, MASH_GROUPS):
-            na, nb = len(sets[ga]), len(sets[gb])
-            ncommon = len(sets[ga] & sets[gb])
-            if ncommon == 0:
-                assert (ga, gb) not in got
-                continue
-            j = ncommon / (na + nb - ncommon)
-            mash = math.floor(
-                (-math.log(2 * j / (1 + j)) / MASH_K) * 10000 + 0.5
-            ) / 10000
-            g = got[(ga, gb)]
-            assert g[:3] == (na, nb, ncommon)
-            # integer-exact convention: no float-rounding legs to disagree
-            assert g[3] == (ncommon * 1000000) // (na + nb - ncommon)
-            assert abs(g[4] - mash) < 1.5e-4
-
-
-# ---------------------------------------------------------------------------
-# genomics: codon usage, dinucleotide odds
-# ---------------------------------------------------------------------------
-
-def _codon_oracle(name):
-    import __spark_entry__ as entry
-
-    return entry.oracle_sql()[name]
-
-
-def _derived_reads(texts):
-    out = []
-    for i, t in enumerate(texts):
-        cleaned = re.sub("[^ACGT]", "", t.upper())
-        content = (cleaned + "A" * 17)[: 13 + (i % 3) * 2]
-        out.append(content)
-    return out
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ACGTxn ", min_size=0, max_size=25),
-        min_size=1,
-        max_size=10,
-    )
-)
-def test_codon_usage_oracle_matches_python(texts):
-    con = duckdb.connect()
-    con.register(
-        "documents", pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    )
-    got = {r[0]: r[1:] for r in con.sql(_codon_oracle("q_asm_codon_usage")).fetchall()}
-    counts: dict[str, int] = {}
-    for content in _derived_reads(texts):
-        for i in range(len(content) // 3):
-            c = content[i * 3 : i * 3 + 3]
-            counts[c] = counts.get(c, 0) + 1
-    tot = sum(counts.values())
-    expect = {c: (n, n * 1000000 // tot) for c, n in counts.items()}
-    assert got == expect
-    con.close()
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ACGTxn ", min_size=0, max_size=25),
-        min_size=1,
-        max_size=10,
-    )
-)
-@pytest.mark.slow  # round 15: driver-budget cut (see pytest.ini)
-def test_dinuc_bias_oracle_matches_python(texts):
-    con = duckdb.connect()
-    con.register(
-        "documents", pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    )
-    got = {r[0]: r[1:] for r in con.sql(_codon_oracle("q_asm_dinuc_bias")).fetchall()}
-    di: dict[str, int] = {}
-    mono: dict[str, int] = {}
-    for content in _derived_reads(texts):
-        for i in range(len(content) - 1):
-            d = content[i : i + 2]
-            di[d] = di.get(d, 0) + 1
-        for b in content:
-            mono[b] = mono.get(b, 0) + 1
-    ndi = sum(di.values())
-    nmono = sum(mono.values())
-    expect = {}
-    for d, nxy in di.items():
-        nx, ny = mono[d[0]], mono[d[1]]
-        expect[d] = (nxy, nx, ny, nxy * nmono * nmono * 1000000 // (ndi * nx * ny))
-    assert got == expect
-    con.close()
-
-
-# ---------------------------------------------------------------------------
-# ORF finder
-# ---------------------------------------------------------------------------
-
-_ORF_RE = re.compile(r"ATG(?:[ACGT]{3})*?(?:TAA|TAG|TGA)")
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ACGTacgt xy", min_size=0, max_size=120),
-        min_size=1,
-        max_size=6,
-    )
-)
-def test_orf_oracle_matches_python(texts):
-    con = _docs_con(texts)
-    sql = __import__("__spark_entry__").oracle_sql()["q_asm_orf"]
-    got = {r[0]: r[1:] for r in con.sql(sql).fetchall()}
-    for i, text in enumerate(texts):
-        content = re.sub("[^ACGT]", "", text.upper())
-        if len(content) < 30:
-            assert i not in got
-            continue
-        orfs = _ORF_RE.findall(content)
-        lens = [len(o) for o in orfs]
-        assert got[i] == (
-            len(content),
-            len(orfs),
-            max(lens) if lens else 0,
-            sum(lens),
-        )
-
-
-# ---------------------------------------------------------------------------
-# q_asm_bwt
-# ---------------------------------------------------------------------------
-
-def _bwt_reference(s: str) -> str:
-    t = s + "$"
-    rots = sorted(t[i:] + t[:i] for i in range(len(t)))
-    return "".join(r[-1] for r in rots)
-
-
-def _inverse_bwt(bwt: str) -> str:
-    """Standard last-first inversion: proves the reference transform is
-    a real BWT (round-trips to the input), anchoring the test to the
-    defining property."""
-    n = len(bwt)
-    first = sorted(range(n), key=lambda i: (bwt[i], i))
-    out = []
-    row = bwt.index("$")
-    for _ in range(n):
-        row = first[row]
-        out.append(bwt[row])
-    return "".join(out)
-
-
-def _runs(s: str) -> int:
-    return 1 + sum(1 for i in range(1, len(s)) if s[i] != s[i - 1])
-
-
-_BASES = st.sampled_from("ACGT")
-
-
-_READ = st.lists(_BASES, min_size=0, max_size=40).map("".join)
-
-
-# noise chars exercise the [^ACGT] cleaning path
-_NOISY = st.tuples(_READ, st.sampled_from(["", "x", "n ", "-"])).map(
-    lambda t: t[1].join([t[0][: len(t[0]) // 2], t[0][len(t[0]) // 2 :]])
-)
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(_NOISY, min_size=1, max_size=6))
-def test_bwt_oracle_matches_python(texts):
-    con = duckdb.connect()
-    con.register(
-        "documents", pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_ASM_BWT_SQL).fetchall()}
-    for i, text in enumerate(texts):
-        cleaned = "".join(c for c in text.upper() if c in "ACGT")
-        if not (BWT_MIN_READ <= len(cleaned) <= BWT_MAX_READ):
-            assert i not in got
-            continue
-        bwt = _bwt_reference(cleaned)
-        # the reference proves itself: inversion recovers content + '$'
-        assert _inverse_bwt(bwt) == cleaned + "$"
-        assert got[i] == (len(cleaned), bwt, _runs(cleaned), _runs(bwt))

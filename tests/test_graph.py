@@ -1,27 +1,16 @@
 """Graph operator tests: aggregate_messages, degrees, connected
 components (vs a Python union-find ground truth), the iterative loops,
-and the graph registry entries. Property tests compare each graph
-oracle (PPR, link prediction, walks, motifs, Katz, ...) against a
-Python reference (see tests/helpers.py)."""
+and the graph registry entries. The property tests that compare each
+graph oracle (walks, motifs, Katz, ...) against a Python reference are
+in tests/test_round*_properties.py."""
 
 from __future__ import annotations
 
-import math
 
-import duckdb
-import pandas as pd
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.operators.graph import (
-    NEIGHBOR_AGG_MAX_ORDERKEY,
-    Q_GRAPH_DEGREE_ASSORTATIVITY_SQL,
-    Q_GRAPH_NEIGHBOR_AGG_SQL,
-    Q_GRAPH_WALKS_SQL,
-    WALK_N_STARTS,
-    WALK_STEPS,
     aggregate_messages,
     connected_components,
     in_degrees,
@@ -887,124 +876,6 @@ def test_linkpred_scores_are_valid_jaccards(spark):
         assert 0 < r.jacc <= 1.0
 
 
-def _ppr_python(edges, n_sources, n_iter, damping):
-    verts = sorted({a for a, _ in edges} | {b for _, b in edges})
-    srcs = verts[:n_sources]
-    ns = float(len(srcs))
-    p = {v: (1.0 / ns if v in srcs else 0.0) for v in verts}
-    outd = {}
-    for a, _ in edges:
-        outd[a] = outd.get(a, 0) + 1
-    rank = dict(p)
-    for _ in range(n_iter):
-        recv = {v: 0.0 for v in verts}
-        for a, b in edges:
-            recv[b] += rank[a] / outd[a]
-        dmass = sum(rank[v] for v in verts if v not in outd)
-        rank = {
-            v: (1.0 - damping) * p[v]
-            + damping * (recv[v] + dmass * p[v])
-            for v in verts
-        }
-    return {
-        v: math.floor(r * 10000 + 0.5) / 10000 for v, r in rank.items()
-    }
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 12), st.integers(0, 12)),
-        min_size=2,
-        max_size=40,
-    )
-)
-def test_ppr_oracle_matches_python_power_iteration(raw_edges):
-    from bigdatagenomic_spark.operators.graph import (
-        PPR_N_SOURCES,
-        _ppr_oracle_sql,
-    )
-
-    edges = sorted({(a, b) for a, b in raw_edges if a != b})
-    if not edges:
-        return
-    # feed the oracle a synthetic orders table that reproduces exactly
-    # these edges through its own (o_orderkey, o_custkey) chain: row k
-    # has custkey=src_k, row k+1000000 unreachable — instead rebuild the
-    # oracle's edge CTE by injecting a literal edge relation
-    sql = _ppr_oracle_sql()
-    edge_rows = ", ".join(f"({a}, {b})" for a, b in edges)
-    inject = (
-        "  edges AS (SELECT * FROM (VALUES " + edge_rows
-        + ") AS t(src, dst)),"
-    )
-    # drop the o/nxt/edges CTEs, splice the literal edges in
-    head, rest = sql.split("  edges AS (SELECT DISTINCT src, dst FROM nxt"
-                           " WHERE src <> dst),")
-    head = head.split("  o AS")[0]
-    sql2 = head + inject + rest
-    con = duckdb.connect()
-    got = dict((v, r) for v, r in con.sql(sql2).fetchall())
-    want = _ppr_python(edges, PPR_N_SOURCES, 8, 0.85)
-    # float-sum order differs python vs SQL; compare at the rounded grid
-    # with a 1-ulp-at-1e-4 tolerance
-    assert set(got) == set(want)
-    for v in got:
-        assert abs(got[v] - want[v]) <= 1e-4 + 1e-9
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 10), st.integers(0, 8)),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_linkpred_oracle_matches_python_reference(raw):
-    from bigdatagenomic_spark.operators.graph import (
-        LINKPRED_MAX_POSTING,
-        Q_GRAPH_LINKPRED_SQL,
-    )
-
-    edges = sorted({(o, p) for o, p in raw})
-    con = duckdb.connect()
-    con.register(
-        "li",
-        pd.DataFrame(
-            {
-                "l_orderkey": [o for o, _ in edges],
-                "l_partkey": [p for _, p in edges],
-            }
-        ),
-    )
-    con.sql("CREATE VIEW lineitem AS SELECT * FROM li")
-    got = con.sql(Q_GRAPH_LINKPRED_SQL).fetchall()
-    # reference: cap hub parts, jaccard of kept neighborhoods
-    from collections import Counter, defaultdict
-
-    posting = Counter(p for _, p in edges)
-    kept = [(o, p) for o, p in edges if posting[p] <= LINKPRED_MAX_POSTING]
-    nbr = defaultdict(set)
-    for o, p in kept:
-        nbr[o].add(p)
-    want = []
-    orders = sorted(nbr)
-    for i, a in enumerate(orders):
-        for b in orders[i + 1 :]:
-            c = len(nbr[a] & nbr[b])
-            if c:
-                j = c / (len(nbr[a]) + len(nbr[b]) - c)
-                want.append((a, b, c, _round4_like_sql(j)))
-    assert got == want
-
-
-def _round4_like_sql(x: float) -> float:
-    # DuckDB round(): half away from zero on the same double
-    s = 1 if x >= 0 else -1
-    return s * math.floor(abs(x) * 10000 + 0.5) / 10000
-
-
 # ---------------------------------------------------------------------------
 # walks: every hop is a real edge chosen by the hash-argmin rule
 # ---------------------------------------------------------------------------
@@ -1044,211 +915,6 @@ def test_walks_follow_hash_argmin_edges(spark):
             )
             assert nxt == want
             cur = nxt
-
-
-# ---------------------------------------------------------------------------
-# neighbor aggregation vs python reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(
-    st.lists(st.integers(0, 8), min_size=2, max_size=30),
-    st.data(),
-)
-def test_neighbor_agg_oracle_matches_python_reference(custs, data):
-    cents = {
-        c: data.draw(st.integers(-5000, 5000), label=f"bal{c}")
-        for c in set(custs)
-    }
-    orders = pd.DataFrame(
-        {
-            "o_orderkey": range(len(custs)),
-            "o_custkey": custs,
-        }
-    )
-    customer = pd.DataFrame(
-        {
-            "c_custkey": list(cents),
-            "c_acctbal": [v / 100.0 for v in cents.values()],
-        }
-    )
-    assert len(custs) < NEIGHBOR_AGG_MAX_ORDERKEY
-    con = duckdb.connect()
-    con.register("orders", orders)
-    con.register("customer", customer)
-    got = con.sql(Q_GRAPH_NEIGHBOR_AGG_SQL).fetchall()
-
-    nbrs: dict[int, set[int]] = {}
-    for a, b in zip(custs, custs[1:]):
-        if a != b:
-            nbrs.setdefault(a, set()).add(b)
-            nbrs.setdefault(b, set()).add(a)
-    h1 = {
-        v: (sum(cents[u] for u in ns), len(ns)) for v, ns in nbrs.items()
-    }
-    def tdiv(a: int, b: int) -> int:
-        # SQL integer division truncates toward zero (Spark `div`,
-        # DuckDB `//`); Python `//` floors — adjust for negatives
-        if b == 0:
-            return 0
-        q = abs(a) // abs(b)
-        return -q if (a < 0) != (b < 0) else q
-
-    ref = []
-    for v in sorted(h1):
-        s1, d = h1[v]
-        s2 = sum(h1[u][0] for u in nbrs[v] if u in h1)
-        w2 = sum(h1[u][1] for u in nbrs[v] if u in h1)
-        ref.append((v, d, s1, tdiv(1000 * s1, d), s2, w2, tdiv(1000 * s2, w2)))
-    assert got == ref
-
-
-# ---------------------------------------------------------------------------
-# deterministic walks vs python hash-argmin simulation
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(st.lists(st.integers(0, 9), min_size=2, max_size=40))
-def test_walks_oracle_matches_python_reference(custs):
-    orders = pd.DataFrame(
-        {"o_orderkey": range(len(custs)), "o_custkey": custs}
-    )
-    con = duckdb.connect()
-    con.register("orders", orders)
-    got = con.sql(Q_GRAPH_WALKS_SQL).fetchall()
-
-    edges: dict[int, set[int]] = {}
-    for a, b in zip(custs, custs[1:]):
-        if a != b:
-            edges.setdefault(a, set()).add(b)
-    starts = sorted(edges)[:WALK_N_STARTS]
-    ref = []
-    for w in starts:
-        walk = [w]
-        cur = w
-        for s in range(1, WALK_STEPS + 1):
-            if cur is None or cur not in edges:
-                walk.append(None)
-                cur = None
-                continue
-            src = cur
-            cur = min(
-                edges[src],
-                key=lambda d: (_md5_60(f"{s}:{src}:{d}"), d),
-            )
-            walk.append(cur)
-        ref.append((w, *walk))
-    assert got == ref
-
-
-# ---------------------------------------------------------------------------
-# directed motif census vs brute-force python
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(st.lists(st.integers(0, 7), min_size=2, max_size=40))
-def test_motifs_oracle_matches_brute_force(custs):
-    from bigdatagenomic_spark.operators.graph import Q_GRAPH_MOTIFS_SQL
-
-    orders = pd.DataFrame(
-        {"o_orderkey": range(len(custs)), "o_custkey": custs}
-    )
-    con = duckdb.connect()
-    con.register("orders", orders)
-    ((n_wedges, n_ffl, n_cycles),) = con.sql(Q_GRAPH_MOTIFS_SQL).fetchall()
-
-    edges = {
-        (a, b) for a, b in zip(custs, custs[1:]) if a != b
-    }
-    wedges = [
-        (a, b, c)
-        for (a, b) in edges
-        for (b2, c) in edges
-        if b2 == b and c != a
-    ]
-    ref_ffl = sum(1 for (a, b, c) in wedges if (a, c) in edges)
-    ref_cyc = sum(1 for (a, b, c) in wedges if (c, a) in edges)
-    assert ref_cyc % 3 == 0
-    assert (n_wedges, n_ffl, n_cycles) == (
-        len(wedges),
-        ref_ffl,
-        ref_cyc // 3,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Katz centrality vs python path counting
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(st.lists(st.integers(0, 7), min_size=2, max_size=30))
-def test_katz_oracle_matches_python_path_counts(custs):
-    from bigdatagenomic_spark.operators.graph import (
-        KATZ_ROUNDS,
-        Q_GRAPH_KATZ_SQL,
-    )
-
-    orders = pd.DataFrame(
-        {"o_orderkey": range(len(custs)), "o_custkey": custs}
-    )
-    con = duckdb.connect()
-    con.register("orders", orders)
-    got = dict(con.sql(Q_GRAPH_KATZ_SQL).fetchall())
-
-    edges = {(a, b) for a, b in zip(custs, custs[1:]) if a != b}
-    verts = {v for e in edges for v in e}
-    p = {v: 1 for v in verts}
-    score = {v: 0 for v in verts}
-    for k in range(1, KATZ_ROUNDS + 1):
-        nxt: dict[int, int] = {}
-        for a, b in edges:
-            if a in p:
-                nxt[b] = nxt.get(b, 0) + p[a]
-        p = nxt
-        w = 1 << (KATZ_ROUNDS - k)
-        for v, c in p.items():
-            score[v] += c * w
-    assert got == score
-
-
-# ---------------------------------------------------------------------------
-# clustering coefficient vs brute-force python
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(st.lists(st.integers(0, 7), min_size=2, max_size=40))
-def test_clustering_coeff_oracle_matches_brute_force(custs):
-    from bigdatagenomic_spark.operators.graph import (
-        Q_GRAPH_CLUSTERING_COEFF_SQL,
-    )
-
-    orders = pd.DataFrame(
-        {"o_orderkey": range(len(custs)), "o_custkey": custs}
-    )
-    con = duckdb.connect()
-    con.register("orders", orders)
-    got = {r[0]: r[1:] for r in con.sql(Q_GRAPH_CLUSTERING_COEFF_SQL).fetchall()}
-
-    und = {
-        (min(a, b), max(a, b))
-        for a, b in zip(custs, custs[1:])
-        if a != b
-    }
-    nbrs: dict[int, set[int]] = {}
-    for a, b in und:
-        nbrs.setdefault(a, set()).add(b)
-        nbrs.setdefault(b, set()).add(a)
-    for v, ns in nbrs.items():
-        deg = len(ns)
-        tri = sum(
-            1
-            for u in ns
-            for w in ns
-            if u < w and (min(u, w), max(u, w)) in und
-        )
-        cc = 2 * tri * 1000000 // (deg * (deg - 1)) if deg >= 2 else 0
-        assert got[v] == (deg, tri, cc)
-    assert set(got) == set(nbrs)
 
 
 # ---------------------------------------------------------------------------
@@ -1311,106 +977,3 @@ def test_two_hop_excludes_direct_neighbors(spark, tmp_path):
     assert rows[1].degree == 1 and rows[1].n_2hop == 1
     assert rows[2].degree == 2 and rows[2].n_2hop == 0
     assert rows[3].degree == 1 and rows[3].n_2hop == 1
-
-
-# ---------------------------------------------------------------------------
-# degree assortativity
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 12), st.integers(0, 6)),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_assortativity_oracle_matches_python(rows):
-    li = pd.DataFrame(
-        {
-            "l_orderkey": [o for o, _ in rows],
-            "l_partkey": [p for _, p in rows],
-        }
-    )
-    con = duckdb.connect()
-    con.register("lineitem", li)
-    (got,) = con.sql(Q_GRAPH_DEGREE_ASSORTATIVITY_SQL).fetchall()
-
-    items = sorted({(o, p) for o, p in rows if o < 200})
-    edges = set()
-    by_part: dict[int, list[int]] = {}
-    for o, p in items:
-        by_part.setdefault(p, []).append(o)
-    for orders in by_part.values():
-        for i, a in enumerate(orders):
-            for b in orders[i + 1 :]:
-                edges.add((min(a, b), max(a, b)))
-    deg: dict[int, int] = {}
-    for a, b in edges:
-        deg[a] = deg.get(a, 0) + 1
-        deg[b] = deg.get(b, 0) + 1
-    m = len(edges)
-    if m == 0:
-        # empty edge set: count 0, SQL sums are NULL
-        assert got == (0, None, None)
-        return
-    sx = sum(deg[a] + deg[b] for a, b in edges)
-    sxy = sum(2 * deg[a] * deg[b] for a, b in edges)
-    sxx = sum(deg[a] ** 2 + deg[b] ** 2 for a, b in edges)
-    assert got[0] == m
-    assert got[1] == sx
-    var = 2 * m * sxx - sx * sx
-    if var == 0:
-        assert got[2] is None
-    else:
-        r = (2 * m * sxy - sx * sx) / var
-        assert abs(got[2] - r) < 2e-6
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=8),
-            st.integers(min_value=1, max_value=6),
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-@pytest.mark.slow  # round 15: driver-budget cut (see pytest.ini)
-def test_two_hop_oracle_matches_python(pairs):
-    from bigdatagenomic_spark.operators.graph import Q_GRAPH_TWO_HOP_SQL
-
-    con = duckdb.connect()
-    con.register(
-        "lineitem",
-        pd.DataFrame(
-            {
-                "l_orderkey": [p[0] for p in pairs],
-                "l_partkey": [p[1] for p in pairs],
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_GRAPH_TWO_HOP_SQL).fetchall()}
-    items = set(pairs)
-    by_part: dict[int, set] = {}
-    for o, p in items:
-        by_part.setdefault(p, set()).add(o)
-    adj: dict[int, set] = {}
-    for p, os_ in by_part.items():
-        for a in os_:
-            for b in os_:
-                if a != b:
-                    adj.setdefault(a, set()).add(b)
-    expect = {}
-    for a, nbrs in adj.items():
-        two = set()
-        for m in nbrs:
-            two |= adj.get(m, set())
-        two.discard(a)
-        exactly2 = two - nbrs
-        deg = len(nbrs)
-        expect[a] = (deg, len(exactly2), len(exactly2) * 1000000 // deg)
-    assert got == expect
-    con.close()

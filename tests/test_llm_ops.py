@@ -9,38 +9,19 @@ planted duplicates/near-duplicates in synthetic documents.
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 import duckdb
-import pandas as pd
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark import queries as Q
 from bigdatagenomic_spark.functions import md5_long, tokens, word_shingles
 from bigdatagenomic_spark.operators import dedup as D
 from bigdatagenomic_spark.operators import similarity as S
-from bigdatagenomic_spark.operators.dedup import (
-    EDIST_MAX_CHARS,
-    EDIST_MIN_SIM_MICRO,
-    KMV_K,
-    KMV_M,
-    PAIR_SAMPLE_DOCS,
-    Q_DEDUP_KMV_SQL,
-)
-from bigdatagenomic_spark.operators.llm_prep import (
-    CDC_B,
-    CDC_DIV,
-    CDC_M,
-    CDC_W,
-    Q_TEXT_CDC_CHUNKS_SQL,
-)
 from bigdatagenomic_spark.plans.inspect import formatted_plan, join_kinds
 
-from tests.helpers import SF, _TEXTS, _docs_con, _md5_60, _q, _tokens
+from tests.helpers import SF, _q
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -1326,88 +1307,6 @@ def test_cdc_kernel_matches_sql_spec(spark):
         assert list(r.kernel_cuts) == list(r.spec_cuts), r.doc_id
 
 
-def _cdc_python(text: str):
-    """Independent CDC reference: polynomial-window boundaries (naive
-    Horner evaluation, written without the precomputed CDC_POW table so
-    it does not share code with the engines), tiling chunks."""
-    n = len(text)
-    cuts = []
-    for p in range(1, n - CDC_W + 2):  # 1-based window starts
-        h = 0
-        for ch in text[p - 1 : p - 1 + CDC_W]:
-            h = (h * CDC_B + ord(ch)) % CDC_M
-        if h % CDC_DIV == 0:
-            cuts.append(p + CDC_W - 1)
-    ends = [c for c in cuts if c < n] + [n]
-    starts = [1] + [e + 1 for e in ends[:-1]]
-    return [
-        (i + 1, s, e - s + 1, hashlib.md5(text[s - 1 : e].encode()).hexdigest())
-        for i, (s, e) in enumerate(zip(starts, ends))
-    ]
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    # full-Unicode alphabet (minus surrogates): the polynomial boundary
-    # hash is codepoint-based, so the test must cover the BMP/astral
-    # seam where ascii()/substr()/ord() could disagree across engines
-    st.text(
-        alphabet=st.characters(
-            min_codepoint=32,
-            max_codepoint=0x10FFFF,
-            exclude_categories=("Cs",),
-        ),
-        min_size=CDC_W,
-        max_size=240,
-    )
-)
-def test_cdc_oracle_matches_python_reference(text):
-    con = duckdb.connect()
-    con.register(
-        "docs", pd.DataFrame({"doc_id": [0], "text": [text]})
-    )
-    sql = Q_TEXT_CDC_CHUNKS_SQL.replace("FROM documents", "FROM docs")
-    got = [
-        (idx, start, clen, chash)
-        for (_, idx, start, clen, chash, _) in con.sql(sql).fetchall()
-    ]
-    assert got == _cdc_python(text)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.text(
-        alphabet=st.characters(
-            min_codepoint=1,
-            max_codepoint=0x10FFFF,
-            exclude_categories=("Cs",),
-        ),
-        max_size=400,
-    )
-)
-def test_cdc_kernel_matches_python_reference(text):
-    """The numpy boundary kernel (sliding_window_view matmul over the
-    utf-32 codepoint array — the per-row unit of the Arrow pandas_udf)
-    must agree position-for-position with the naive-Horner reference on
-    arbitrary Unicode, INCLUDING below-window-length strings where the
-    kernel's [] contract applies. Together with
-    test_cdc_oracle_matches_python_reference (DuckDB vs the same
-    reference) and test_round9_ops.py::test_cdc_kernel_matches_sql_spec
-    (kernel vs the Spark SQL expression on real corpus), this closes
-    the 4-way agreement: kernel == Spark spec == DuckDB == Horner."""
-    from bigdatagenomic_spark.operators.llm_prep import _cdc_cut_positions
-
-    n = len(text)
-    expect = []
-    for p in range(1, n - CDC_W + 2):
-        h = 0
-        for ch in text[p - 1 : p - 1 + CDC_W]:
-            h = (h * CDC_B + ord(ch)) % CDC_M
-        if h % CDC_DIV == 0:
-            expect.append(p + CDC_W - 1)
-    assert _cdc_cut_positions(text) == expect
-
-
 # ---------------------------------------------------------------------------
 # edit distance: plan pins
 # ---------------------------------------------------------------------------
@@ -1427,170 +1326,6 @@ def test_editdist_stays_jvm_side_and_pushes_filter(spark):
     formatted = formatted_plan(df)
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", formatted)
     assert any("n_chars" in p for p in pushed), formatted
-
-
-def _edist_oracle_sql():
-    import __spark_entry__ as entry
-
-    return entry.oracle_sql()["q_dedup_editdist"]
-
-
-def _py_levenshtein(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i] + [0] * len(b)
-        for j, cb in enumerate(b, 1):
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-        prev = cur
-    return prev[len(b)]
-
-
-def _py_shingles(text: str) -> set:
-    t = _tokens(text)
-    out = set()
-    for i in range(1, max(len(t) - 2, 1) + 1):
-        out.add(" ".join(t[i - 1 : i + 2]))
-    return out
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="abc d.e", min_size=0, max_size=30),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_editdist_oracle_matches_python(texts):
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame(
-            {
-                "doc_id": range(len(texts)),
-                "text": texts,
-                "n_chars": [len(t) for t in texts],
-            }
-        ),
-    )
-    got = {
-        (r[0], r[1]): (r[2], r[3])
-        for r in con.sql(_edist_oracle_sql()).fetchall()
-    }
-    eligible = {
-        i: t
-        for i, t in enumerate(texts)
-        if i < PAIR_SAMPLE_DOCS and len(t) <= EDIST_MAX_CHARS
-    }
-    expect = {}
-    ids = sorted(eligible)
-    for x in range(len(ids)):
-        for y in range(x + 1, len(ids)):
-            a, b = ids[x], ids[y]
-            if not (_py_shingles(eligible[a]) & _py_shingles(eligible[b])):
-                continue
-            d = _py_levenshtein(eligible[a], eligible[b])
-            ml = max(len(eligible[a]), len(eligible[b]))
-            if ml == 0:
-                continue  # two empty texts: no shingle rows exist anyway
-            sim = (ml - d) * 1000000 // ml
-            if sim >= EDIST_MIN_SIM_MICRO:
-                expect[(a, b)] = (d, sim)
-    assert got == expect
-    con.close()
-
-
-def _word_shingles(t: list[str]) -> set[str]:
-    """Mirror functions.word_shingles: 3-gram joins with null-skip
-    partial shingles for docs shorter than 3 tokens; the zero-token
-    '' artifact is excluded (both engines filter it)."""
-    if not t:
-        return set()
-    n = max(len(t) - 2, 1)
-    return {" ".join(t[i : i + 3]) for i in range(n)}
-
-
-def _kmv_reference(texts, sources):
-    sketches: dict[str, list[int]] = {}
-    per_source: dict[str, set[int]] = {}
-    for text, src in zip(texts, sources):
-        if text is None:
-            continue
-        per_source.setdefault(src, set()).update(
-            _md5_60(s) for s in _word_shingles(_tokens(text))
-        )
-    est = {}
-    for src, hs in per_source.items():
-        if not hs:  # a source whose docs all tokenize empty has no rows
-            continue
-        sk = sorted(hs)[:KMV_K]
-        sketches[src] = sk
-        est[src] = (
-            len(sk) if len(sk) < KMV_K else (KMV_K - 1) * KMV_M // sk[-1]
-        )
-    rows = []
-    for sa in sorted(sketches):
-        for sb in sorted(sketches):
-            if sa >= sb:
-                continue
-            a, b = set(sketches[sa]), set(sketches[sb])
-            u = sorted(a | b)[:KMV_K]
-            n_common = sum(1 for h in u if h in a and h in b)
-            rows.append(
-                (
-                    sa,
-                    sb,
-                    est[sa],
-                    est[sb],
-                    len(u),
-                    n_common,
-                    n_common * 1000000 // len(u),
-                )
-            )
-    return rows
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(_TEXTS, min_size=1, max_size=8),
-    st.data(),
-)
-def test_kmv_oracle_matches_python(texts, data):
-    sources = [
-        data.draw(st.sampled_from(["s1", "s2", "s3"])) for _ in texts
-    ]
-    con = _docs_con(texts, sources)
-    got = con.sql(Q_DEDUP_KMV_SQL).fetchall()
-    assert got == _kmv_reference(texts, sources)
-
-
-def test_kmv_dense_corpus_exercises_estimator_branch():
-    """Deterministic hash-dense corpus: each source carries WAY more
-    than K distinct shingles, so this deterministically covers the
-    three paths the hypothesis inputs above rarely reach (a generated
-    source CAN exceed 128 distinct hashes — 8 docs x up to 28
-    shingles — but most draws stay under): the (K-1)*2^60 div h_k
-    cardinality-estimate branch, the per-(source, bucket) rn1 <= K
-    prune (whose union-of-bucket-minima must still contain the global
-    bottom-K), and the urn <= K truncation of the pair union rank."""
-    # two sources, ~600 distinct shingles each, ~50% overlap
-    texts, sources = [], []
-    for i in range(200):
-        texts.append(" ".join(f"tok{i}x{j}" for j in range(5)))
-        sources.append("sa")
-    for i in range(100, 300):
-        texts.append(" ".join(f"tok{i}x{j}" for j in range(5)))
-        sources.append("sb")
-    con = _docs_con(texts, sources)
-    got = con.sql(Q_DEDUP_KMV_SQL).fetchall()
-    expect = _kmv_reference(texts, sources)
-    assert got == expect
-    (sa, sb, est_a, est_b, union_k, n_common, jacc) = got[0]
-    # the estimator branch really ran: k_used == K, so est != k_used
-    assert union_k == KMV_K and est_a > KMV_K and est_b > KMV_K
-    # estimates within 3x of truth (~600) — sanity, not the contract
-    assert 200 < est_a < 1800 and 200 < est_b < 1800
-    assert 0 < n_common < KMV_K
 
 
 def test_dup_spans_single_pass_no_joins(spark):

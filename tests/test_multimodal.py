@@ -3,25 +3,19 @@
 Oracle parity for q_mm_* runs in test_relational_oracle.py; here we test
 the parts the oracle can't see: the ASCII invariant the oracles rely on,
 the stubbed codec boundary, fake-decoder determinism, and pixel stats
-through the real BMP decoder. The q_mm_* property tests compare an
-oracle against a Python reference (see tests/helpers.py).
+through the real BMP decoder.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import duckdb
-import pandas as pd
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.operators.multimodal import (
     FRAME_BYTES,
     FRAME_STRIDE,
-    Q_MM_PAYLOAD_DEDUP_SQL,
     attach_payloads,
     decode_images,
     fake_image_decoder,
@@ -299,67 +293,3 @@ def test_pixel_stats_requires_decoder(spark):
     mm = spark.createDataFrame([(0, b"x")], "doc_id LONG, payload BINARY")
     with pytest.raises(NotImplementedError):
         pixel_stats(mm)
-
-
-# ---------------------------------------------------------------------------
-# pixel stats vs python fake-RGB reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.text(
-            alphabet=st.characters(min_codepoint=32, max_codepoint=126),
-            min_size=0,
-            max_size=50,
-        ),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_pixel_stats_oracle_matches_fake_decoder(texts):
-    from bigdatagenomic_spark.operators.multimodal import (
-        Q_MM_PIXEL_STATS_SQL,
-        fake_rgb_decoder,
-    )
-
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_MM_PIXEL_STATS_SQL).fetchall()}
-    for i, text in enumerate(texts):
-        n_px, sr, sg, sb = fake_rgb_decoder(text.encode("utf-8"))
-        if n_px == 0:
-            assert i not in got
-            continue
-        lum = (299 * sr + 587 * sg + 114 * sb) // n_px
-        assert got[i] == (n_px, sr, sg, sb, lum)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.sampled_from(["aaa", "bbb", "ccc", "dd", ""]),
-        min_size=1,
-        max_size=12,
-    )
-)
-def test_payload_dedup_oracle_matches_python(texts):
-    con = duckdb.connect()
-    con.register(
-        "documents", pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    )
-    (got,) = con.sql(Q_MM_PAYLOAD_DEDUP_SQL).fetchall()
-    groups: dict[str, int] = {}
-    for t in texts:
-        groups[t] = groups.get(t, 0) + 1
-    n_payloads = len(texts)
-    n_distinct = len(groups)
-    n_dup = sum(1 for c in groups.values() if c >= 2)
-    n_red = sum(c - 1 for c in groups.values())
-    wasted = sum((c - 1) * len(t.encode()) for t, c in groups.items())
-    total = sum(c * len(t.encode()) for t, c in groups.items())
-    assert got == (n_payloads, n_distinct, n_dup, n_red, wasted, total)
-    con.close()

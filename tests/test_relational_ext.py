@@ -3,30 +3,16 @@ lift rules, item cosine, rolling correlation and sequence patterns.
 
 Spark-side pins check brute-force agreement on testdata, plan shape
 (equi joins, partitioned row numbers) and degenerate inputs (constant
-series, large decimal moments). The property tests compare each oracle
-against a Python reference (see tests/helpers.py).
+series, large decimal moments). The property tests that compare each
+oracle against a Python reference are in tests/test_round*_properties.py.
 """
 
 from __future__ import annotations
 
-import datetime
-import math
 import re
 
-import duckdb
-import pandas as pd
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
-from bigdatagenomic_spark.operators.relational_ext import (
-    LIFT_MIN_PAIR_SUPPORT,
-    Q_X_GINI_SQL,
-    Q_X_LIFT_RULES_SQL,
-    Q_X_SEQ_PATTERNS_SQL,
-    Q_X_SKYLINE_SQL,
-)
-
-from tests.helpers import SF, _q, _round_half_away
+from tests.helpers import SF, _q
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -47,93 +33,6 @@ def test_attribution_credits_within_lookback(spark):
         assert 0 <= r.secs_since_touch <= ATTR_LOOKBACK_SEC
     for r in unattributed:
         assert r.touch_event_id is None and r.secs_since_touch is None
-
-
-def _attr_python(events, touch_types, convert, lookback):
-    rows = []
-    by_user: dict = {}
-    for e in events:
-        by_user.setdefault(e["user_id"], []).append(e)
-    for _, evs in by_user.items():
-        evs.sort(key=lambda e: (e["ts"], e["event_id"]))
-        last = None
-        for e in evs:
-            if e["event_type"] == convert:
-                ok = (
-                    last is not None
-                    and e["ts"] - last["ts"] <= lookback
-                )
-                rows.append(
-                    (
-                        e["event_id"],
-                        e["user_id"],
-                        last["event_id"] if ok else None,
-                        last["event_type"] if ok else None,
-                        e["ts"] - last["ts"] if ok else None,
-                        ok,
-                    )
-                )
-            if e["event_type"] in touch_types:
-                last = e
-    rows.sort(key=lambda r: r[0])
-    return rows
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 5),  # user
-            st.integers(0, 100000),  # ts seconds
-            st.sampled_from(["click", "view", "signup", "purchase", "error"]),
-        ),
-        min_size=1,
-        max_size=50,
-    )
-)
-def test_attribution_oracle_matches_python_reference(raw):
-    from bigdatagenomic_spark.operators.relational_ext import (
-        ATTR_CONVERT_TYPE,
-        ATTR_LOOKBACK_SEC,
-        ATTR_TOUCH_TYPES,
-        Q_X_ATTRIBUTION_SQL,
-    )
-
-    events = [
-        {
-            "event_id": i,
-            "user_id": u,
-            "ts": ts,
-            "event_type": et,
-        }
-        for i, (u, ts, et) in enumerate(raw)
-    ]
-    con = duckdb.connect()
-    con.register(
-        "ev",
-        pd.DataFrame(
-            {
-                "event_id": [e["event_id"] for e in events],
-                "user_id": [e["user_id"] for e in events],
-                "event_type": [e["event_type"] for e in events],
-                "value": [1.0] * len(events),
-                "ts": pd.to_datetime(
-                    [e["ts"] for e in events], unit="s"
-                ),
-            }
-        ),
-    )
-    con.sql("CREATE VIEW events AS SELECT * FROM ev")
-    got = [
-        (eid, uid, tid, ttype, secs, attr)
-        for (eid, uid, _v, tid, ttype, secs, attr) in con.sql(
-            Q_X_ATTRIBUTION_SQL
-        ).fetchall()
-    ]
-    want = _attr_python(
-        events, set(ATTR_TOUCH_TYPES), ATTR_CONVERT_TYPE, ATTR_LOOKBACK_SEC
-    )
-    assert got == want
 
 
 # ---------------------------------------------------------------------------
@@ -193,153 +92,6 @@ def test_rolling_corr_constant_series_yields_null_not_crash(spark, tmp_path):
     assert len(out) == 3  # days 14..16 have a full window
     assert all(r.roll_corr is None for r in out)
     assert all(r.n_click == 3 for r in out)
-
-
-# ---------------------------------------------------------------------------
-# skyline vs brute-force NOT-EXISTS dominance
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 12), st.integers(0, 12)),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_skyline_oracle_matches_brute_force(points):
-    # price on a coarse decimal grid to exercise ties in both coords
-    rows = [
-        (i, p / 4.0, s) for i, (p, s) in enumerate(points)
-    ]
-    ref = sorted(
-        k
-        for k, price, size in rows
-        if not any(
-            (p2 <= price and s2 >= size and (p2 < price or s2 > size))
-            for _, p2, s2 in rows
-        )
-    )
-    con = duckdb.connect()
-    con.register(
-        "part",
-        pd.DataFrame(
-            rows, columns=["p_partkey", "p_retailprice", "p_size"]
-        ),
-    )
-    got = [r[0] for r in con.sql(Q_X_SKYLINE_SQL).fetchall()]
-    assert got == ref
-
-
-# ---------------------------------------------------------------------------
-# item-item cosine vs python reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 10), st.integers(0, 6)),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_item_cosine_oracle_matches_python(rows):
-    from bigdatagenomic_spark.operators.relational_ext import (
-        ITEM_COS_MIN_PAIRS,
-        ITEM_COS_TOP,
-        Q_X_ITEM_COSINE_SQL,
-    )
-
-    li = pd.DataFrame(
-        {
-            "l_orderkey": [o for o, _ in rows],
-            "l_partkey": [p for _, p in rows],
-        }
-    )
-    con = duckdb.connect()
-    con.register("lineitem", li)
-    got = [tuple(r) for r in con.sql(Q_X_ITEM_COSINE_SQL).fetchall()]
-
-    items = sorted({(o, p) for o, p in rows})
-    support: dict[int, int] = {}
-    for _, p in items:
-        support[p] = support.get(p, 0) + 1
-    pair_n: dict[tuple[int, int], int] = {}
-    baskets: dict[int, list[int]] = {}
-    for o, p in items:
-        baskets.setdefault(o, []).append(p)
-    for parts in baskets.values():
-        for i, a in enumerate(parts):
-            for b in parts[i + 1 :]:
-                k = (min(a, b), max(a, b))
-                pair_n[k] = pair_n.get(k, 0) + 1
-    ref = []
-    for (a, b), n_ab in pair_n.items():
-        if n_ab < ITEM_COS_MIN_PAIRS:
-            continue
-        na, nb = support[a], support[b]
-        ref.append(
-            (a, b, n_ab, na, nb, _round_half_away(n_ab / math.sqrt(na * nb), 4))
-        )
-    ref.sort(key=lambda t: (-t[5], t[0], t[1]))
-    assert got == ref[:ITEM_COS_TOP]
-
-
-# ---------------------------------------------------------------------------
-# rolling correlation vs python reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 30), st.sampled_from(["click", "purchase"])),
-        min_size=1,
-        max_size=150,
-    )
-)
-def test_rolling_corr_oracle_matches_python(raw):
-    from bigdatagenomic_spark.operators.relational_ext import (
-        ROLL_CORR_W,
-        Q_X_ROLLING_CORR_SQL,
-    )
-
-    ev = pd.DataFrame(
-        {
-            "event_id": range(len(raw)),
-            "ts": [
-                datetime.datetime(2024, 1, 1) + datetime.timedelta(days=d)
-                for d, _ in raw
-            ],
-            "event_type": [t for _, t in raw],
-        }
-    )
-    con = duckdb.connect()
-    con.register("events", ev)
-    got = {r[0]: r[1:] for r in con.sql(Q_X_ROLLING_CORR_SQL).fetchall()}
-
-    daily: dict[int, list[int]] = {}
-    for d, t in raw:
-        n = daily.setdefault(d, [0, 0])
-        n[0 if t == "click" else 1] += 1
-    days = sorted(daily)
-    for i, d in enumerate(days):
-        day = (datetime.datetime(2024, 1, 1) + datetime.timedelta(days=d)).date()
-        if i + 1 < ROLL_CORR_W:
-            assert day not in got
-            continue
-        win = [daily[x] for x in days[i + 1 - ROLL_CORR_W : i + 1]]
-        xs = [w[0] for w in win]
-        ys = [w[1] for w in win]
-        mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-        sxx = sum((x - mx) ** 2 for x in xs)
-        syy = sum((y - my) ** 2 for y in ys)
-        sxy = sum((x - mx) * (y - my) for x, y in zip(xs, ys))
-        nc, np_, corr = got[day]
-        assert (nc, np_) == tuple(daily[d])
-        if sxx == 0 or syy == 0:
-            assert corr is None
-        else:
-            assert abs(corr - round(sxy / math.sqrt(sxx * syy), 6)) < 2e-6
 
 
 # ---------------------------------------------------------------------------
@@ -405,149 +157,3 @@ def test_lift_rules_joins_are_equi(spark):
     for r in rows:
         assert r.cnt_ab <= min(r.cnt_a, r.cnt_b)
         assert 0 < r.conf_a2b_micro <= 1000000
-
-
-# ---------------------------------------------------------------------------
-# Gini concentration (integer-exact — equality, no tolerance)
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 2), st.integers(1, 500)),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_gini_oracle_matches_python(rows):
-    orders = pd.DataFrame(
-        {
-            "o_orderkey": range(len(rows)),
-            "o_orderpriority": [f"{p}-P" for p, _ in rows],
-            "o_totalprice": [cents / 100.0 for _, cents in rows],
-        }
-    )
-    con = duckdb.connect()
-    con.register("orders", orders)
-    got = {r[0]: r[1:] for r in con.sql(Q_X_GINI_SQL).fetchall()}
-    for p in sorted({f"{p}-P" for p, _ in rows}):
-        vals = sorted(c for pr, c in rows if f"{pr}-P" == p)
-        n = len(vals)
-        sx = sum(vals)
-        six = sum((i + 1) * x for i, x in enumerate(vals))
-        gini = (2 * six - (n + 1) * sx) * 1000000 // (n * sx)
-        assert got[p] == (n, sx, gini)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=8),
-            st.integers(min_value=1, max_value=6),
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_lift_rules_oracle_matches_python(pairs):
-    con = duckdb.connect()
-    con.register(
-        "lineitem",
-        pd.DataFrame(
-            {
-                "l_orderkey": [p[0] for p in pairs],
-                "l_partkey": [p[1] for p in pairs],
-            }
-        ),
-    )
-    got = {(r[0], r[1]): r[2:] for r in con.sql(Q_X_LIFT_RULES_SQL).fetchall()}
-    items = set(pairs)
-    baskets: dict[int, set] = {}
-    for o, p in items:
-        baskets.setdefault(o, set()).add(p)
-    nb = len(baskets)
-    supp: dict[int, int] = {}
-    for o, ps in baskets.items():
-        for p in ps:
-            supp[p] = supp.get(p, 0) + 1
-    pair_cnt: dict[tuple, int] = {}
-    for o, ps in baskets.items():
-        sp = sorted(ps)
-        for x in range(len(sp)):
-            for y in range(x + 1, len(sp)):
-                pair_cnt[(sp[x], sp[y])] = pair_cnt.get((sp[x], sp[y]), 0) + 1
-    expect = {}
-    for (a, b), cab in pair_cnt.items():
-        if cab < LIFT_MIN_PAIR_SUPPORT:
-            continue
-        expect[(a, b)] = (
-            cab,
-            supp[a],
-            supp[b],
-            cab * 1000000 // supp[a],
-            cab * 1000000 // supp[b],
-            cab * nb * 1000000 // (supp[a] * supp[b]),
-        )
-    assert got == expect
-    con.close()
-
-
-# ---------------------------------------------------------------------------
-# q_x_seq_patterns
-# ---------------------------------------------------------------------------
-
-_TYPES = ["view", "click", "purchase"]
-
-
-_EVENT = st.tuples(
-    st.integers(min_value=0, max_value=4),            # user_id
-    st.sampled_from(_TYPES),                          # event_type
-    st.integers(min_value=0, max_value=6),            # coarse ts → ties
-)
-
-
-def _seq_reference(events):
-    spans: dict[tuple[int, str], tuple[int, int]] = {}
-    for u, ty, ts in events:
-        lo, hi = spans.get((u, ty), (ts, ts))
-        spans[(u, ty)] = (min(lo, ts), max(hi, ts))
-    supp: dict[tuple[str, str], int] = {}
-    for (u, a), (lo_a, _) in spans.items():
-        for (u2, b), (_, hi_b) in spans.items():
-            if u2 == u and lo_a < hi_b:
-                supp[(a, b)] = supp.get((a, b), 0) + 1
-    users_a: dict[str, int] = {}
-    for (_, ty) in spans:
-        users_a[ty] = users_a.get(ty, 0) + 1
-    n_total = len({u for u, _ in spans})
-    rows = []
-    for (a, b), n in sorted(supp.items()):
-        rows.append(
-            (
-                a,
-                b,
-                n,
-                users_a[a],
-                n * 1_000_000 // users_a[a],
-                n * 1_000_000 // n_total,
-            )
-        )
-    return rows
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(_EVENT, min_size=1, max_size=40))
-def test_seq_patterns_oracle_matches_python(events):
-    base = datetime.datetime(2024, 1, 1)
-    df = pd.DataFrame(
-        {
-            "user_id": [u for u, _, _ in events],
-            "event_type": [ty for _, ty, _ in events],
-            "ts": [base + datetime.timedelta(hours=ts) for _, _, ts in events],
-        }
-    )
-    con = duckdb.connect()
-    con.register("events", df)
-    got = con.sql(Q_X_SEQ_PATTERNS_SQL).fetchall()
-    assert [tuple(r) for r in got] == _seq_reference(events)

@@ -8,7 +8,6 @@ transitively validates both engines. DuckDB-only — no SparkSession."""
 from __future__ import annotations
 
 import datetime
-import hashlib
 import math
 import re
 
@@ -41,21 +40,7 @@ from bigdatagenomic_spark.operators.text import (
     Q_TEXT_NOVELTY_SQL,
 )
 
-
-def _round_half_away(x: float, p: int) -> float:
-    """Round half away from zero, matching Spark/DuckDB round() — NOT
-    CPython round(), whose banker's rounding disagrees on representable
-    ties (the round-10 mash 1/32 failure)."""
-    m = 10**p
-    return math.copysign(math.floor(abs(x) * m + 0.5), x) / m
-
-
-def _md5_60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _tokens(text: str) -> list[str]:
-    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t != ""]
+from tests.helpers import _md5_60, _round_half_away, _tokens
 
 
 # ---------------------------------------------------------------------------

@@ -45,9 +45,7 @@ from bigdatagenomic_spark.operators.text import (
     Q_TEXT_READABILITY_SQL,
 )
 
-
-def _tokens(text: str) -> list[str]:
-    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
+from tests.helpers import _tokens
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,6 @@ dropped to 30 this round (SURVEY §5.2.7); @example pins kept.
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 import duckdb
@@ -37,24 +36,7 @@ from bigdatagenomic_spark.operators.text import (
     RAKE_TOP_K,
 )
 
-
-def _tokens(text: str) -> list[str]:
-    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
-
-
-def _docs_con(texts, sources=None):
-    con = duckdb.connect()
-    df = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    if sources is not None:
-        df["source"] = sources
-    con.register("documents", df)
-    return con
-
-
-_WORDS = st.sampled_from(
-    ["the", "a", "fast", "key", "sort", "merge", "spark", "x1"]
-)
-_TEXTS = st.lists(_WORDS, min_size=0, max_size=30).map(" ".join)
+from tests.helpers import _TEXTS, _docs_con, _md5_60, _tokens
 
 
 # ---------------------------------------------------------------------------
@@ -137,10 +119,6 @@ def test_rake_oracle_matches_python(texts):
 # KMV bottom-k sketch
 # ---------------------------------------------------------------------------
 
-def _h60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
 def _word_shingles(t: list[str]) -> set[str]:
     """Mirror functions.word_shingles: 3-gram joins with null-skip
     partial shingles for docs shorter than 3 tokens; the zero-token
@@ -158,7 +136,7 @@ def _kmv_reference(texts, sources):
         if text is None:
             continue
         per_source.setdefault(src, set()).update(
-            _h60(s) for s in _word_shingles(_tokens(text))
+            _md5_60(s) for s in _word_shingles(_tokens(text))
         )
     est = {}
     for src, hs in per_source.items():

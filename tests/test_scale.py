@@ -1,8 +1,9 @@
 """Scale-utility tests: bucketed co-located joins, salted aggregation,
 approx-distinct tolerance (SURVEY.md Q10's declared check), the
 two-phase rank / running sum / prefix max helpers, the bloom join and
-join-size sketch, and the grid-algebra median, trimmed mean, winsorize
-and weighted median (plan pins plus oracle-vs-Python properties).
+join-size sketch, and the plan pins of the grid-algebra median, trimmed
+mean and winsorize (their oracle-vs-Python properties are in
+tests/test_round*_properties.py).
 
 The salted-agg value parity runs in test_relational_oracle.py via
 q_x_salted_agg's plain GROUP BY oracle; here we pin its plan shape.
@@ -12,19 +13,11 @@ from __future__ import annotations
 
 import re
 
-import duckdb
-import pandas as pd
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.operators.scale import (
-    Q_X_JOIN_SIZE_SQL,
-    Q_X_TRIMMED_MEAN_SQL,
-    Q_X_WEIGHTED_MEDIAN_SQL,
-    Q_X_WINSORIZE_SQL,
     salted_agg,
     write_bucketed,
 )
@@ -606,61 +599,8 @@ def test_exact_median_keeps_row_number_partitioned(spark, driver_budget):
 
 
 # ---------------------------------------------------------------------------
-# join-size estimation vs exact python self-join count
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(st.lists(st.integers(0, 6), min_size=1, max_size=40))
-def test_join_size_oracle_matches_exact_count(users):
-    ev = pd.DataFrame({"event_id": range(len(users)), "user_id": users})
-    con = duckdb.connect()
-    con.register("events", ev)
-    ((n_keys, est_rows, top_user, top_pairs),) = con.sql(
-        Q_X_JOIN_SIZE_SQL
-    ).fetchall()
-    exact = sum(1 for a in users for b in users if a == b)
-    counts: dict[int, int] = {}
-    for u in users:
-        counts[u] = counts.get(u, 0) + 1
-    assert n_keys == len(counts)
-    assert est_rows == exact
-    ref_top = max(counts, key=lambda u: (counts[u] * counts[u], u))
-    assert (top_user, top_pairs) == (
-        ref_top,
-        counts[ref_top] * counts[ref_top],
-    )
-
-
-# ---------------------------------------------------------------------------
 # exact median vs python statistics
 # ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["A", "B"]), st.integers(-400, 400)),
-        min_size=1,
-        max_size=50,
-    )
-)
-def test_exact_median_oracle_matches_python(rows):
-    from bigdatagenomic_spark.operators.scale import Q_X_EXACT_MEDIAN_SQL
-
-    cust = pd.DataFrame(
-        {
-            "c_custkey": range(len(rows)),
-            "c_mktsegment": [g for g, _ in rows],
-            "c_acctbal": [cents / 100.0 for _, cents in rows],
-        }
-    )
-    con = duckdb.connect()
-    con.register("customer", cust)
-    got = {r[0]: r[1:] for r in con.sql(Q_X_EXACT_MEDIAN_SQL).fetchall()}
-    for grp in sorted({g for g, _ in rows}):
-        vals = sorted(cents for g, cents in rows if g == grp)
-        n = len(vals)
-        lo, hi = vals[(n - 1) // 2], vals[n // 2]
-        assert got[grp] == (n, lo + hi)
 
 
 def test_trimmed_mean_is_grid_algebra_not_per_row_rank(spark, driver_budget):
@@ -702,123 +642,9 @@ def test_winsorize_is_grid_algebra_not_per_row_rank(spark, driver_budget):
         assert "_pid" in m.group(1), plan
 
 
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["A", "N"]),
-            st.integers(min_value=1, max_value=10**7),
-        ),
-        min_size=1,
-        max_size=80,
-    )
-)
-def test_trimmed_mean_oracle_matches_python(rows):
-    con = duckdb.connect()
-    con.register(
-        "lineitem",
-        pd.DataFrame(
-            {
-                "l_returnflag": [r[0] for r in rows],
-                "l_extendedprice": [r[1] / 100.0 for r in rows],
-                "l_orderkey": range(len(rows)),
-                "l_linenumber": [1] * len(rows),
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_TRIMMED_MEAN_SQL).fetchall()}
-    by_grp: dict[str, list] = {}
-    for g, c in rows:
-        by_grp.setdefault(g, []).append(c)
-    assert set(got) == set(by_grp)
-    for g, cs in by_grp.items():
-        n, t = len(cs), len(cs) // 20
-        kept = sorted(cs)[t : n - t]
-        assert got[g] == (n, len(kept), sum(kept) * 1000000 // len(kept))
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["A", "N"]),
-            st.integers(min_value=1, max_value=10**6),
-        ),
-        min_size=1,
-        max_size=80,
-    )
-)
-def test_winsorize_oracle_matches_python(rows):
-    con = duckdb.connect()
-    con.register(
-        "lineitem",
-        pd.DataFrame(
-            {
-                "l_returnflag": [r[0] for r in rows],
-                "l_extendedprice": [r[1] / 100.0 for r in rows],
-                "l_orderkey": range(len(rows)),
-                "l_linenumber": [1] * len(rows),
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_WINSORIZE_SQL).fetchall()}
-    by_grp: dict[str, list] = {}
-    for g, c in rows:
-        by_grp.setdefault(g, []).append(c)
-    for g, cs in by_grp.items():
-        n, t = len(cs), len(cs) // 20
-        sv = sorted(cs)
-        lo, hi = sv[t], sv[n - t - 1]
-        clamped = [max(min(c, hi), lo) for c in cs]
-        assert got[g] == (n, lo, hi, sum(clamped) * 1000000 // n)
-    con.close()
-
-
 # ---------------------------------------------------------------------------
 # weighted exact median
 # ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["A", "N", "R"]),
-            st.integers(min_value=1, max_value=9999).map(
-                lambda c: c / 100.0
-            ),
-            st.integers(min_value=1, max_value=50),
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_weighted_median_oracle_matches_python(rows):
-    df = pd.DataFrame(
-        {
-            "l_returnflag": [r[0] for r in rows],
-            "l_extendedprice": [r[1] for r in rows],
-            "l_quantity": [float(r[2]) for r in rows],
-            "l_orderkey": range(len(rows)),
-            "l_linenumber": [1] * len(rows),
-        }
-    )
-    con = duckdb.connect()
-    con.register("lineitem", df)
-    got = con.sql(Q_X_WEIGHTED_MEDIAN_SQL).fetchall()
-    expect = []
-    for g in sorted({r[0] for r in rows}):
-        cells: dict[float, int] = {}
-        for f, p, w in rows:
-            if f == g:
-                cells[p] = cells.get(p, 0) + w
-        tot = sum(cells.values())
-        cum = 0
-        for p in sorted(cells):
-            cum += cells[p]
-            if 2 * cum >= tot:
-                expect.append((g, p, cum, tot))
-                break
-    assert got == expect
 
 
 def test_two_phase_lazy_checkpoint_rank_values_exact(spark, driver_budget):

@@ -6,21 +6,16 @@ is the relevance argmax and its set differs from the pure top-k, range
 search agrees with top-k, IVF recall stays in bounds, the query side
 broadcasts, and the joint multi-span trainer and the literal IVF
 assignment equal their per-slice and crossJoin forms. The property
-tests compare each oracle against a Python reference (see
-tests/helpers.py).
+tests that compare each oracle against a Python reference are in
+tests/test_round*_properties.py.
 """
 
 from __future__ import annotations
 
-import math
 
-import duckdb
-import pandas as pd
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tests.helpers import SF, _q, _round_half_away
+from tests.helpers import SF, _q
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -109,94 +104,6 @@ def test_ivf_recall_bounds_and_agreement(spark):
     assert sum(r.n_hit for r in rows) / sum(r.n_exact for r in rows) >= 0.5
 
 
-def _half_away_micro(x: float) -> int:
-    s = 1 if x >= 0 else -1
-    return s * int(abs(x) * 10000 + 0.5)
-
-
-def _mmr_python(vecs, n_queries, shortlist, k, w_rel, w_red):
-    """Greedy MMR reference on the integer micro-sim grid."""
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb)
-
-    out = []
-    ids = sorted(vecs)
-    for qid in ids[:n_queries]:
-        rel = {
-            v: _half_away_micro(cos(vecs[qid], vecs[v]))
-            for v in ids
-            if v != qid
-        }
-        short = sorted(rel, key=lambda v: (-rel[v], v))[:shortlist]
-        pair = {
-            (a, b): _half_away_micro(cos(vecs[a], vecs[b]))
-            for a in short
-            for b in short
-            if a != b
-        }
-        sel = []
-        first = min(short, key=lambda v: (-rel[v], v))
-        sel.append((qid, first, 1, w_rel * rel[first]))
-        chosen = {first}
-        for t in range(2, k + 1):
-            best = None
-            for c in short:
-                if c in chosen:
-                    continue
-                red = max(pair[(c, s)] for (_, s, _, _) in sel)
-                score = w_rel * rel[c] - w_red * red
-                key = (-score, c)
-                if best is None or key < best[0]:
-                    best = (key, c, score)
-            _, c, score = best
-            sel.append((qid, c, t, score))
-            chosen.add(c)
-        out.extend(sel)
-    return out
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(-9, 9), st.integers(-9, 9), st.integers(1, 9)
-        ),
-        min_size=8,
-        max_size=16,
-        unique=True,
-    )
-)
-def test_mmr_oracle_matches_python_reference(coords):
-    import bigdatagenomic_spark.operators.similarity as S
-    from bigdatagenomic_spark.queries import _mmr_oracle_sql
-
-    vecs = {i: list(map(float, c)) for i, c in enumerate(coords)}
-    con = duckdb.connect()
-    con.register(
-        "emb",
-        pd.DataFrame(
-            {
-                "vec_id": list(vecs),
-                "embedding": [vecs[i] for i in vecs],
-                "label": [0] * len(vecs),
-            }
-        ),
-    )
-    con.sql("CREATE VIEW embeddings AS SELECT * FROM emb")
-    got = [
-        (q, v, p, m) for (q, v, p, m) in con.sql(_mmr_oracle_sql()).fetchall()
-    ]
-    want = _mmr_python(
-        vecs, S.MMR_N_QUERIES, S.MMR_SHORTLIST, S.MMR_K, S.MMR_W_REL,
-        S.MMR_W_RED,
-    )
-    assert got == want
-
-
 # ---------------------------------------------------------------------------
 # plan pins for the round-10 join shapes
 # ---------------------------------------------------------------------------
@@ -219,62 +126,6 @@ def test_filtered_topk_broadcasts_query_side(spark):
 # ---------------------------------------------------------------------------
 # filtered top-k vs python brute force
 # ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 2),  # label
-            st.lists(
-                st.integers(-4, 4), min_size=3, max_size=3
-            ),  # embedding
-        ),
-        min_size=2,
-        max_size=20,
-    )
-)
-def test_filtered_topk_oracle_matches_python(rows):
-    from bigdatagenomic_spark.operators.similarity import N_QUERIES, TOP_K
-    from bigdatagenomic_spark.queries import _REGISTRY
-
-    sql = _REGISTRY["q_sim_filtered_topk"][1]
-    emb = pd.DataFrame(
-        {
-            "vec_id": range(len(rows)),
-            "embedding": [[float(x) for x in v] for _, v in rows],
-            "label": [lbl for lbl, _ in rows],
-        }
-    )
-    con = duckdb.connect()
-    con.register("embeddings", emb)
-    got = [tuple(r) for r in con.sql(sql).fetchall()]
-
-    def cos(a, b):
-        num = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        if na == 0 or nb == 0:
-            return None
-        return _round_half_away(num / (na * nb), 4)
-
-    ref = []
-    for qid in range(min(N_QUERIES, len(rows))):
-        qlbl, qv = rows[qid]
-        cands = []
-        for cid, (clbl, cv) in enumerate(rows):
-            if cid == qid or clbl != qlbl:
-                continue
-            cands.append((cos(qv, cv), cid))
-        cands.sort(key=lambda t: (-(t[0] if t[0] is not None else -9e9), t[1]))
-        for rn, (sim, cid) in enumerate(cands[:TOP_K], start=1):
-            ref.append((qid, qlbl, cid, sim, rn))
-    # NULL sims (zero vectors) sort engine-specifically; restrict the
-    # comparison to runs with no zero vector among scored pairs
-    if any(s is None for (_, _, _, s, _) in ref) or any(
-        s is None for (_, _, _, s, _) in got
-    ):
-        return
-    assert got == ref
 
 
 def _vecs(spark):

@@ -4,56 +4,18 @@ time-series and drift operators.
 Spark-side pins check what the DuckDB oracle cannot see: plan shape
 (broadcast tie and seasonal tables, one aggregate pass, grids rather
 than per-row ranks) and ANSI edge cases (a constant series yields
-NULL, not a divide-by-zero). The property tests compare each oracle
-against a Python reference (see tests/helpers.py); the Kendall,
-Theil-Sen and Mann-Kendall references are brute-force O(n^2) pair loops,
-deliberately not the grid algebra the engines use.
+NULL, not a divide-by-zero). The property tests that compare each
+oracle against a Python reference are in tests/test_round*_properties.py.
 """
 
 from __future__ import annotations
 
-import datetime
-import math
 import re
-from fractions import Fraction
 
-import duckdb
-import pandas as pd
 import pytest
-from hypothesis import example, given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from bigdatagenomic_spark.operators.stats import (
-    CALIB_N_BINS,
-    LEVEL_SHIFT_W,
-    Q_X_ANOVA_DECOMP_SQL,
-    Q_X_CALIBRATION_SQL,
-    Q_X_CHI2_INDEPENDENCE_SQL,
-    Q_X_COHENS_KAPPA_SQL,
-    Q_X_CRAMERS_V_SQL,
-    Q_X_CUSUM_SQL,
-    Q_X_DECAY_AGG_SQL,
-    Q_X_HHI_SQL,
-    Q_X_KENDALL_TAU_SQL,
-    Q_X_KS_TEST_SQL,
-    Q_X_LEVEL_SHIFT_SQL,
-    Q_X_MANN_KENDALL_SQL,
-    Q_X_MANN_WHITNEY_SQL,
-    Q_X_MIX_ENTROPY_SQL,
-    Q_X_MUTUAL_INFO_SQL,
-    Q_X_PSI_DRIFT_SQL,
-    Q_X_RUNS_TEST_SQL,
-    Q_X_SAX_SQL,
-    Q_X_SPEARMAN_CORR_SQL,
-    Q_X_SURVIVAL_SQL,
-    Q_X_THEIL_SEN_SQL,
-    Q_X_WELCH_TTEST_SQL,
-    SAX_ALPHABET,
-    SAX_WEEK_DAYS,
-)
-
-from tests.helpers import SF, _md5_60, _q
+from tests.helpers import SF, _q
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -86,60 +48,6 @@ def test_linreg_recovers_planted_line(spark):
     # and the registered query is sane on testdata: one row per priority
     out = _q("q_x_linreg")(spark, SF).collect()
     assert len(out) == 5 and all(o.n > 0 for o in out)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(-2000, 2000), st.integers(0, 10**7)),
-        min_size=3,
-        max_size=60,
-    )
-)
-def test_linreg_oracle_matches_exact_fractions(points):
-    """The OLS oracle's HUGEINT algebra must equal exact Fraction math
-    (then the shared double division + 1e-6 floor-round)."""
-    xs = [x for x, _ in points]
-    if len(set(xs)) < 2:
-        return  # degenerate: denominator 0 -> NULL by contract
-    n = len(points)
-    sx = sum(x for x, _ in points)
-    sy = sum(y for _, y in points)
-    sxx = sum(x * x for x, _ in points)
-    sxy = sum(x * y for x, y in points)
-    den = n * sxx - sx * sx
-    slope = math.floor(
-        float(Fraction(n * sxy - sx * sy)) / float(Fraction(den)) * 1_000_000
-        + 0.5
-    ) / 1_000_000
-    icept = math.floor(
-        float(Fraction(sy * sxx - sx * sxy)) / float(Fraction(den))
-        * 1_000_000
-        + 0.5
-    ) / 1_000_000
-    con = duckdb.connect()
-    con.register(
-        "pts", pd.DataFrame({"x": xs, "y": [y for _, y in points]})
-    )
-    row = con.sql(
-        """
-        WITH s AS (
-          SELECT CAST(count(*) AS HUGEINT) AS n,
-                 CAST(sum(x) AS HUGEINT) AS sx,
-                 CAST(sum(y) AS HUGEINT) AS sy,
-                 CAST(sum(x * x) AS HUGEINT) AS sxx,
-                 CAST(sum(x * y) AS HUGEINT) AS sxy
-          FROM pts)
-        SELECT floor(CAST(n*sxy - sx*sy AS DOUBLE)
-                     / nullif(CAST(n*sxx - sx*sx AS DOUBLE), 0.0)
-                     * 1000000 + 0.5) / 1000000,
-               floor(CAST(sy*sxx - sx*sxy AS DOUBLE)
-                     / nullif(CAST(n*sxx - sx*sx AS DOUBLE), 0.0)
-                     * 1000000 + 0.5) / 1000000
-        FROM s
-        """
-    ).fetchone()
-    assert row == (slope, icept)
 
 
 def test_seasonal_decompose_broadcasts_dow_side(spark):
@@ -177,244 +85,6 @@ def test_acf_constant_series_yields_null_not_crash(spark, tmp_path):
     assert [r.lag for r in out] == list(range(1, ACF_MAX_LAG + 1))
     assert all(r.acf is None for r in out)
     assert [r.n_pairs for r in out] == [20 - L for L in range(1, ACF_MAX_LAG + 1)]
-
-
-# ---------------------------------------------------------------------------
-# level-shift screen vs python rolling sums
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 24), st.sampled_from(["a", "b"])),
-        min_size=1,
-        max_size=120,
-    )
-)
-def test_level_shift_oracle_matches_python_reference(raw):
-    ev = pd.DataFrame(
-        {
-            "event_id": range(len(raw)),
-            "ts": [
-                datetime.datetime(2024, 1, 1) + datetime.timedelta(days=d)
-                for d, _ in raw
-            ],
-            "event_type": [t for _, t in raw],
-        }
-    )
-    con = duckdb.connect()
-    con.register("events", ev)
-    got = con.sql(Q_X_LEVEL_SHIFT_SQL).fetchall()
-
-    ref = []
-    for typ in sorted({t for _, t in raw}):
-        daily: dict[int, int] = {}
-        for d, t in raw:
-            if t == typ:
-                daily[d] = daily.get(d, 0) + 1
-        days = sorted(daily)
-        for i, d in enumerate(days):
-            if i < LEVEL_SHIFT_W or i + LEVEL_SHIFT_W > len(days):
-                continue
-            prev = sum(daily[x] for x in days[i - LEVEL_SHIFT_W : i])
-            nxt = sum(daily[x] for x in days[i : i + LEVEL_SHIFT_W])
-            ref.append(
-                (
-                    typ,
-                    (datetime.datetime(2024, 1, 1)
-                     + datetime.timedelta(days=d)).date(),
-                    daily[d],
-                    prev,
-                    nxt,
-                    nxt - prev,
-                    abs(nxt - prev) * 20 >= 3 * (prev + nxt),
-                )
-            )
-    assert got == ref
-
-
-# ---------------------------------------------------------------------------
-# calibration bins vs python md5 reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 10**6),
-            st.sampled_from(["purchase", "click", "view"]),
-        ),
-        min_size=1,
-        max_size=80,
-        unique_by=lambda r: r[0],
-    )
-)
-def test_calibration_oracle_matches_python_reference(rows):
-    ev = pd.DataFrame(
-        {
-            "event_id": [i for i, _ in rows],
-            "event_type": [t for _, t in rows],
-        }
-    )
-    con = duckdb.connect()
-    con.register("events", ev)
-    got = con.sql(Q_X_CALIBRATION_SQL).fetchall()
-
-    bins: dict[int, list[int]] = {}
-    for i, t in rows:
-        sm = _md5_60(str(i)) % 1000
-        b = sm * CALIB_N_BINS // 1000
-        n, pos, ssm = bins.get(b, [0, 0, 0])
-        bins[b] = [n + 1, pos + (1 if t == "purchase" else 0), ssm + sm]
-    ref = [
-        (b, n, pos, ssm, abs(1000 * pos - ssm))
-        for b, (n, pos, ssm) in sorted(bins.items())
-    ]
-    assert got == ref
-
-
-# ---------------------------------------------------------------------------
-# SAX symbolization vs python ntile reference
-# ---------------------------------------------------------------------------
-
-def _ntile(n_buckets: int, n_rows: int) -> list[int]:
-    """Bucket id (1-based) per row position, SQL NTILE semantics."""
-    base, extra = divmod(n_rows, n_buckets)
-    out = []
-    for b in range(1, n_buckets + 1):
-        out.extend([b] * (base + (1 if b <= extra else 0)))
-    return out
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.integers(0, 400), min_size=1, max_size=120))
-def test_sax_oracle_matches_python_reference(day_offsets):
-    base = datetime.datetime(1995, 1, 1)
-    orders = pd.DataFrame(
-        {
-            "o_orderkey": range(len(day_offsets)),
-            "o_orderdate": [
-                base + datetime.timedelta(days=d) for d in day_offsets
-            ],
-        }
-    )
-    con = duckdb.connect()
-    con.register("orders", orders)
-    got = con.sql(Q_X_SAX_SQL).fetchall()
-
-    epoch = datetime.datetime(1970, 1, 1)
-    weekly: dict[int, int] = {}
-    for d in day_offsets:
-        week = ((base + datetime.timedelta(days=d)) - epoch).days // SAX_WEEK_DAYS
-        weekly[week] = weekly.get(week, 0) + 1
-    order = sorted(weekly, key=lambda w: (weekly[w], w))
-    tiles = _ntile(SAX_ALPHABET, len(order))
-    q_of = {w: tiles[i] for i, w in enumerate(order)}
-    ref = [
-        (w, weekly[w], q_of[w], "abcd"[q_of[w] - 1]) for w in sorted(weekly)
-    ]
-    assert got == ref
-
-
-# ---------------------------------------------------------------------------
-# seasonal decomposition vs python reference
-# ---------------------------------------------------------------------------
-
-def _tdiv(a: int, b: int) -> int:
-    if b == 0:
-        return 0
-    q = abs(a) // abs(b)
-    return -q if (a < 0) != (b < 0) else q
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.integers(0, 60), min_size=1, max_size=80))
-def test_seasonal_decompose_oracle_matches_python(day_offsets):
-    from bigdatagenomic_spark.operators.stats import Q_X_SEASONAL_DECOMPOSE_SQL
-
-    base = datetime.datetime(2024, 1, 1)  # a Monday
-    orders = pd.DataFrame(
-        {
-            "o_orderkey": range(len(day_offsets)),
-            "o_orderdate": [
-                base + datetime.timedelta(days=d) for d in day_offsets
-            ],
-        }
-    )
-    con = duckdb.connect()
-    con.register("orders", orders)
-    got = con.sql(Q_X_SEASONAL_DECOMPOSE_SQL).fetchall()
-
-    daily: dict[int, int] = {}
-    for d in day_offsets:
-        daily[d] = daily.get(d, 0) + 1
-    by_dow: dict[int, list[int]] = {}
-    for d, n in daily.items():
-        by_dow.setdefault(d % 7 + 1, []).append(n)  # Jan 1 2024 = Monday
-    dow_mean = {
-        w: _tdiv(1000 * sum(ns), len(ns)) for w, ns in by_dow.items()
-    }
-    ref = [
-        (
-            (base + datetime.timedelta(days=d)).date(),
-            d % 7 + 1,
-            daily[d],
-            dow_mean[d % 7 + 1],
-            1000 * daily[d] - dow_mean[d % 7 + 1],
-        )
-        for d in sorted(daily)
-    ]
-    assert got == ref
-
-
-# ---------------------------------------------------------------------------
-# ACF vs python Pearson reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 40), st.integers(1, 5)),
-        min_size=2,
-        max_size=60,
-        unique_by=lambda r: r[0],
-    )
-)
-def test_acf_oracle_matches_python_reference(day_counts):
-    from bigdatagenomic_spark.operators.stats import ACF_MAX_LAG, Q_X_ACF_SQL
-
-    base = datetime.datetime(2020, 3, 1)
-    rows = []
-    next_id = 0
-    for d, n in day_counts:
-        for _ in range(n):
-            rows.append((next_id, base + datetime.timedelta(days=d)))
-            next_id += 1
-    orders = pd.DataFrame(rows, columns=["o_orderkey", "o_orderdate"])
-    con = duckdb.connect()
-    con.register("orders", orders)
-    got = {r[0]: r[1:] for r in con.sql(Q_X_ACF_SQL).fetchall()}
-
-    daily = sorted(day_counts)
-    series = [n for _, n in daily]
-    for lag in range(1, ACF_MAX_LAG + 1):
-        xs = series[lag:]
-        ys = series[:-lag] if lag < len(series) else []
-        n_pairs, acf = got[lag]
-        assert n_pairs == len(xs) if lag < len(series) else n_pairs == 0
-        if len(xs) < 2:
-            assert acf is None
-            continue
-        mx = sum(xs) / len(xs)
-        my = sum(ys) / len(ys)
-        sxx = sum((x - mx) ** 2 for x in xs)
-        syy = sum((y - my) ** 2 for y in ys)
-        sxy = sum((x - mx) * (y - my) for x, y in zip(xs, ys))
-        if sxx == 0 or syy == 0:
-            assert acf is None
-            continue
-        ref = sxy / math.sqrt(sxx * syy)
-        assert abs(acf - round(ref, 6)) < 2e-6
 
 
 # ---------------------------------------------------------------------------
@@ -528,864 +198,3 @@ def test_decay_agg_is_exact_integer_and_bounded(spark):
         assert row.n == 3 and row.sum_cents == 600
         # 200*1e6 + 200*500000 + 200*0
         assert row.decayed_microcents == 200 * 1000000 + 200 * 500000
-
-
-# ---------------------------------------------------------------------------
-# PSI drift
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 20), st.sampled_from(["a", "b", "c"])),
-        min_size=1,
-        max_size=80,
-    )
-)
-def test_psi_drift_oracle_matches_python(raw):
-    ev = pd.DataFrame(
-        {
-            "event_id": range(len(raw)),
-            "ts": [
-                datetime.datetime(2024, 1, 1) + datetime.timedelta(days=d)
-                for d, _ in raw
-            ],
-            "event_type": [t for _, t in raw],
-        }
-    )
-    con = duckdb.connect()
-    con.register("events", ev)
-    got = {r[0]: r[1:] for r in con.sql(Q_X_PSI_DRIFT_SQL).fetchall()}
-
-    days = [d for d, _ in raw]
-    lo, hi = min(days), max(days)
-    per: dict[str, list[int]] = {}
-    for d, t in raw:
-        n = per.setdefault(t, [0, 0])
-        n[0 if (d - lo) * 2 < (hi - lo) else 1] += 1
-    k = len(per)
-    tot_ref = sum(v[0] for v in per.values())
-    tot_cur = sum(v[1] for v in per.values())
-    assert set(got) == set(per)
-    for t, (n_ref, n_cur) in per.items():
-        p_ref = (n_ref + 1) / (tot_ref + k)
-        p_cur = (n_cur + 1) / (tot_cur + k)
-        term = (p_cur - p_ref) * math.log(p_cur / p_ref)
-        g_ref, g_cur, g_term = got[t]
-        assert (g_ref, g_cur) == (n_ref, n_cur)
-        assert abs(g_term - math.floor(term * 1000000 + 0.5)) <= 1
-
-
-# ---------------------------------------------------------------------------
-# chi-squared independence cells
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 13), st.sampled_from(["a", "b", "c"])),
-        min_size=1,
-        max_size=80,
-    )
-)
-def test_chi2_cells_oracle_matches_python(raw):
-    ev = pd.DataFrame(
-        {
-            "event_id": range(len(raw)),
-            "ts": [
-                datetime.datetime(2024, 1, 1) + datetime.timedelta(days=d)
-                for d, _ in raw
-            ],
-            "event_type": [t for _, t in raw],
-        }
-    )
-    con = duckdb.connect()
-    con.register("events", ev)
-    got = {
-        (r[0], r[1]): r[2:]
-        for r in con.sql(Q_X_CHI2_INDEPENDENCE_SQL).fetchall()
-    }
-
-    obs: dict[tuple[str, int], int] = {}
-    for d, t in raw:
-        dow = (datetime.date(2024, 1, 1) + datetime.timedelta(days=d)).isoweekday()
-        obs[(t, dow)] = obs.get((t, dow), 0) + 1
-    types = sorted({t for t, _ in obs})
-    dows = sorted({d for _, d in obs})
-    row_tot = {t: sum(v for (tt, _), v in obs.items() if tt == t) for t in types}
-    col_tot = {d: sum(v for (_, dd), v in obs.items() if dd == d) for d in dows}
-    n = sum(obs.values())
-    assert set(got) == {(t, d) for t in types for d in dows}
-    for t in types:
-        for d in dows:
-            o = obs.get((t, d), 0)
-            e = (row_tot[t] * col_tot[d]) / n
-            cell = (o - e) * (o - e) / e
-            g_o, g_rt, g_ct, g_e, g_cell = got[(t, d)]
-            assert (g_o, g_rt, g_ct) == (o, row_tot[t], col_tot[d])
-            assert abs(g_e - math.floor(e * 1000000 + 0.5)) <= 1
-            assert abs(g_cell - math.floor(cell * 1000000 + 0.5)) <= 1
-
-
-def _double_ranks(vals):
-    """dr = 2*average_rank per value, as exact ints (ties averaged)."""
-    order = sorted(range(len(vals)), key=lambda i: vals[i])
-    dr = [0] * len(vals)
-    i = 0
-    while i < len(order):
-        j = i
-        while j < len(order) and vals[order[j]] == vals[order[i]]:
-            j += 1
-        # ranks i+1 .. j (1-based); 2*avg = (i+1) + j
-        for k in range(i, j):
-            dr[order[k]] = (i + 1) + j
-        i = j
-    return dr
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["A", "N", "R"]),
-            st.integers(min_value=1, max_value=50),
-            st.integers(min_value=0, max_value=10),
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_spearman_oracle_matches_python(rows):
-    con = duckdb.connect()
-    con.register(
-        "lineitem",
-        pd.DataFrame(
-            {
-                "l_returnflag": [r[0] for r in rows],
-                "l_quantity": [float(r[1]) for r in rows],
-                "l_discount": [r[2] / 100.0 for r in rows],
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_SPEARMAN_CORR_SQL).fetchall()}
-    by_grp: dict[str, list] = {}
-    for g, q, d in rows:
-        by_grp.setdefault(g, []).append((q, d))
-    assert set(got) == set(by_grp)
-    for g, pts in by_grp.items():
-        n = len(pts)
-        drx = _double_ranks([p[0] for p in pts])
-        dry = _double_ranks([p[1] for p in pts])
-        sx, sy = sum(drx), sum(dry)
-        sxy = sum(a * b for a, b in zip(drx, dry))
-        sxx = sum(a * a for a in drx)
-        syy = sum(b * b for b in dry)
-        d1, d2 = n * sxx - sx * sx, n * syy - sy * sy
-        g_n, g_rho = got[g]
-        assert g_n == n
-        if d1 > 0 and d2 > 0:
-            ref = (n * sxy - sx * sy) / math.sqrt(float(d1) * float(d2))
-            ref_micro = math.floor(ref * 1000000 + 0.5)
-            assert g_rho is not None and abs(g_rho - ref_micro) <= 1
-        else:
-            assert g_rho is None
-
-
-def _mw_events_frame(clicks, purchases):
-    vals = [c / 100.0 for c in clicks] + [p / 100.0 for p in purchases]
-    types = ["click"] * len(clicks) + ["purchase"] * len(purchases)
-    return pd.DataFrame({"event_type": types, "value": vals})
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=40), min_size=1, max_size=50),
-    st.lists(st.integers(min_value=1, max_value=40), min_size=1, max_size=50),
-)
-def test_mann_whitney_oracle_matches_python(clicks, purchases):
-    con = duckdb.connect()
-    con.register("events", _mw_events_frame(clicks, purchases))
-    (row,) = con.sql(Q_X_MANN_WHITNEY_SQL).fetchall()
-    n1, n2 = len(clicks), len(purchases)
-    combined = clicks + purchases
-    dr = _double_ranks(combined)
-    r1x2 = sum(dr[:n1])  # 2*R1, exact int
-    u2 = r1x2 - n1 * (n1 + 1)
-    assert row[0] == n1 and row[1] == n2
-    assert row[2] == u2
-    assert row[3] == u2 * 1000000 // (2 * n1 * n2)
-    n = n1 + n2
-    ties_sum = 0
-    for v in set(combined):
-        t = combined.count(v)
-        ties_sum += t * t * t - t
-    if n > 1:
-        tie_corr = (n + 1) - ties_sum / (n * (n - 1))
-        if tie_corr > 0:
-            z = (u2 - n1 * n2) / math.sqrt(n1 * n2 / 3.0 * tie_corr)
-            z_micro = math.floor(z * 1000000 + 0.5)
-            assert row[4] is not None and abs(row[4] - z_micro) <= 1
-        else:
-            assert row[4] is None
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=30), min_size=1, max_size=50),
-    st.lists(st.integers(min_value=1, max_value=30), min_size=1, max_size=50),
-)
-def test_ks_oracle_matches_python(clicks, purchases):
-    con = duckdb.connect()
-    con.register("events", _mw_events_frame(clicks, purchases))
-    (row,) = con.sql(Q_X_KS_TEST_SQL).fetchall()
-    n1, n2 = len(clicks), len(purchases)
-    grid = sorted(set(clicks) | set(purchases))
-    d_num = 0
-    for v in grid:
-        c1 = sum(1 for x in clicks if x <= v)
-        c2 = sum(1 for x in purchases if x <= v)
-        d_num = max(d_num, abs(c1 * n2 - c2 * n1))
-    assert row == (n1, n2, d_num * 1000000 // (n1 * n2))
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=10**6), min_size=2, max_size=40),
-    st.lists(st.integers(min_value=1, max_value=10**6), min_size=2, max_size=40),
-)
-def test_welch_oracle_matches_python(clicks, purchases):
-    con = duckdb.connect()
-    con.register("events", _mw_events_frame(clicks, purchases))
-    (row,) = con.sql(Q_X_WELCH_TTEST_SQL).fetchall()
-    n1, n2 = len(clicks), len(purchases)
-    s1, s2 = sum(clicks), sum(purchases)
-    ss1 = sum(v * v for v in clicks)
-    ss2 = sum(v * v for v in purchases)
-    assert row[0] == n1 and row[1] == n2
-    assert row[2] == s1 * 1000000 // n1
-    assert row[3] == s2 * 1000000 // n2
-    var1 = (n1 * ss1 - s1 * s1) / (n1 * (n1 - 1))
-    var2 = (n2 * ss2 - s2 * s2) / (n2 * (n2 - 1))
-    se2 = var1 / n1 + var2 / n2
-    if se2 > 0:
-        t = (s1 / n1 - s2 / n2) / math.sqrt(se2)
-        df = se2 * se2 / (
-            (var1 / n1) * (var1 / n1) / (n1 - 1)
-            + (var2 / n2) * (var2 / n2) / (n2 - 1)
-        )
-        assert row[4] is not None
-        assert abs(row[4] - math.floor(t * 1000000 + 0.5)) <= 1
-        assert row[5] is not None
-        assert abs(row[5] - math.floor(df * 1000000 + 0.5)) <= max(
-            1, abs(df) * 1e-3
-        )
-    else:
-        assert row[4] is None and row[5] is None
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["1-URGENT", "2-HIGH", "3-MEDIUM"]),
-            st.integers(min_value=1, max_value=10**7),
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_anova_decomp_oracle_matches_python(rows):
-    con = duckdb.connect()
-    con.register(
-        "orders",
-        pd.DataFrame(
-            {
-                "o_orderpriority": [r[0] for r in rows],
-                "o_totalprice": [r[1] / 100.0 for r in rows],
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_ANOVA_DECOMP_SQL).fetchall()}
-    by_grp: dict[str, list] = {}
-    for g, c in rows:
-        by_grp.setdefault(g, []).append(c)
-    nn = len(rows)
-    st_tot = sum(c for _, c in rows)
-    assert set(got) == set(by_grp)
-    for g, cs in by_grp.items():
-        n, s, ss = len(cs), sum(cs), sum(c * c for c in cs)
-        mean_micro = s * 1000000 // n
-        d = s / n - st_tot / nn
-        ssb = math.floor(n * d * d / 10000 + 0.5)
-        ssw = math.floor((ss - s / n * s) / 10000 + 0.5)
-        g_n, g_mean, g_ssb, g_ssw = got[g]
-        assert (g_n, g_mean) == (n, mean_micro)
-        assert abs(g_ssb - ssb) <= 1
-        assert abs(g_ssw - ssw) <= 1
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["click", "view", "purchase"]),
-            st.integers(min_value=0, max_value=13),
-        ),
-        min_size=1,
-        max_size=80,
-    )
-)
-def test_mutual_info_oracle_matches_python(rows):
-    base = datetime.datetime(2024, 1, 1)  # a Monday
-    con = duckdb.connect()
-    con.register(
-        "events",
-        pd.DataFrame(
-            {
-                "event_type": [r[0] for r in rows],
-                "ts": [base + datetime.timedelta(days=r[1]) for r in rows],
-            }
-        ),
-    )
-    got = {(r[0], r[1]): r[2:] for r in con.sql(Q_X_MUTUAL_INFO_SQL).fetchall()}
-    cells: dict[tuple, int] = {}
-    rowm: dict[str, int] = {}
-    colm: dict[int, int] = {}
-    for t, d in rows:
-        dow = d % 7 + 1
-        cells[(t, dow)] = cells.get((t, dow), 0) + 1
-        rowm[t] = rowm.get(t, 0) + 1
-        colm[dow] = colm.get(dow, 0) + 1
-    n = len(rows)
-    assert set(got) == set(cells)
-    for (t, dow), o in cells.items():
-        term = (o / n) * math.log(o * n / (rowm[t] * colm[dow]))
-        ref = math.floor(term * 1000000 + 0.5)
-        g_o, g_row, g_col, g_mi = got[(t, dow)]
-        assert (g_o, g_row, g_col) == (o, rowm[t], colm[dow])
-        assert abs(g_mi - ref) <= 1  # ln() may differ by 1 ulp across libms
-    con.close()
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["click", "purchase"]),
-            st.integers(min_value=0, max_value=400),  # age days before max
-            st.integers(min_value=1, max_value=10**6),  # cents
-        ),
-        min_size=1,
-        max_size=50,
-    )
-)
-def test_decay_agg_oracle_matches_python(rows):
-    base = datetime.datetime(2025, 6, 1, 10)
-    # the newest event pins the calendar max: force age 0 to exist
-    rows = [(rows[0][0], 0, rows[0][2])] + rows[1:]
-    con = duckdb.connect()
-    con.register(
-        "events",
-        pd.DataFrame(
-            {
-                "event_type": [r[0] for r in rows],
-                "ts": [base - datetime.timedelta(days=r[1]) for r in rows],
-                "value": [r[2] / 100.0 for r in rows],
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_DECAY_AGG_SQL).fetchall()}
-    expect: dict[str, list] = {}
-    for t, age, cents in rows:
-        expect.setdefault(t, []).append((age, cents))
-    for t, vs in expect.items():
-        n = len(vs)
-        s = sum(c for _, c in vs)
-        dec = sum(c * (1000000 // (1 << min(age // 30, 62))) for age, c in vs)
-        assert got[t] == (n, s, dec)
-    con.close()
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["click", "view", "purchase"]),
-            st.integers(min_value=0, max_value=13),
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_cramers_v_oracle_matches_python(rows):
-    base = datetime.datetime(2024, 1, 1)  # Monday
-    con = duckdb.connect()
-    con.register(
-        "events",
-        pd.DataFrame(
-            {
-                "event_type": [r[0] for r in rows],
-                "ts": [base + datetime.timedelta(days=r[1]) for r in rows],
-            }
-        ),
-    )
-    (got,) = con.sql(Q_X_CRAMERS_V_SQL).fetchall()
-    cells: dict[tuple, int] = {}
-    rowm: dict[str, int] = {}
-    colm: dict[int, int] = {}
-    for t, d in rows:
-        dow = d % 7 + 1
-        cells[(t, dow)] = cells.get((t, dow), 0) + 1
-        rowm[t] = rowm.get(t, 0) + 1
-        colm[dow] = colm.get(dow, 0) + 1
-    n = len(rows)
-    # fold the FULL grid (incl. zero cells) in (event_type, iso_dow) order
-    chi2 = 0.0
-    for t in sorted(rowm):
-        for dow in sorted(colm):
-            o = cells.get((t, dow), 0)
-            e = rowm[t] * colm[dow] / n
-            chi2 += (o - e) * (o - e) / e
-    r, c = len(rowm), len(colm)
-    assert got[0] == n and got[1] == r and got[2] == c
-    assert abs(got[3] - math.floor(chi2 * 1000000 + 0.5)) <= 2
-    if min(r, c) > 1:
-        v = math.sqrt(chi2 / (n * (min(r, c) - 1)))
-        assert got[4] is not None
-        assert abs(got[4] - math.floor(v * 1000000 + 0.5)) <= 1
-    else:
-        assert got[4] is None
-    con.close()
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=50), min_size=1, max_size=40)
-)
-def test_cusum_oracle_matches_python(day_counts):
-    base = datetime.datetime(2024, 3, 1, 9)
-    rows = []
-    for d, cnt in enumerate(day_counts):
-        rows += [(base + datetime.timedelta(days=d),)] * cnt
-    con = duckdb.connect()
-    con.register("events", pd.DataFrame({"ts": [r[0] for r in rows]}))
-    got = {r[0]: r[1:] for r in con.sql(Q_X_CUSUM_SQL).fetchall()}
-    tot, days = sum(day_counts), len(day_counts)
-    mean_milli = 1000 * tot // days
-    cum = 0
-    s = 0
-    for d, cnt in enumerate(day_counts):
-        dev = 1000 * cnt - mean_milli
-        cum += dev
-        s = max(0, s + dev)
-        day = (base + datetime.timedelta(days=d)).date()
-        assert got[day] == (cnt, cum, s)
-    con.close()
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=20), min_size=2, max_size=40)
-)
-def test_runs_test_oracle_matches_python(day_counts):
-    base = datetime.datetime(2024, 3, 1, 9)
-    rows = []
-    for d, cnt in enumerate(day_counts):
-        rows += [(base + datetime.timedelta(days=d),)] * cnt
-    con = duckdb.connect()
-    con.register("events", pd.DataFrame({"ts": [r[0] for r in rows]}))
-    (got,) = con.sql(Q_X_RUNS_TEST_SQL).fetchall()
-    tot, days = sum(day_counts), len(day_counts)
-    labels = [
-        1 if cnt * days > tot else 0
-        for cnt in day_counts
-        if cnt * days != tot
-    ]
-    n1 = sum(labels)
-    n2 = len(labels) - n1
-    runs = 0
-    prev = None
-    for b in labels:
-        if prev is None or b != prev:
-            runs += 1
-        prev = b
-    assert got[0] == n1 and got[1] == n2 and got[2] == runs
-    n = n1 + n2
-    if n1 > 0 and n2 > 0 and n > 1 and 2 * n1 * n2 * (2 * n1 * n2 - n) > 0:
-        mu = 2.0 * n1 * n2 / n + 1
-        var = 2.0 * n1 * n2 * (2.0 * n1 * n2 - n) / (float(n) * n * (n - 1))
-        z = (runs - mu) / math.sqrt(var)
-        assert got[3] is not None
-        assert abs(got[3] - math.floor(z * 1000000 + 0.5)) <= 1
-    else:
-        assert got[3] is None
-    con.close()
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=12),  # user
-            st.integers(min_value=0, max_value=30),  # active day offset
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_survival_oracle_matches_python(rows):
-    base = datetime.datetime(2024, 2, 1, 8)
-    con = duckdb.connect()
-    con.register(
-        "events",
-        pd.DataFrame(
-            {
-                "user_id": [r[0] for r in rows],
-                "ts": [base + datetime.timedelta(days=r[1]) for r in rows],
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_SURVIVAL_SQL).fetchall()}
-    spans: dict[int, list] = {}
-    for u, d in rows:
-        spans.setdefault(u, []).append(d)
-    lts = sorted(max(ds) - min(ds) for ds in spans.values())
-    n = len(lts)
-    grid: dict[int, int] = {}
-    for lt in lts:
-        grid[lt] = grid.get(lt, 0) + 1
-    cum = 0
-    hz = 0
-    for lt in sorted(grid):
-        d = grid[lt]
-        cum += d
-        at_risk = n - cum + d
-        hz += d * 1000000 // at_risk
-        assert got[lt] == (d, at_risk, hz)
-    assert len(got) == len(grid)
-    con.close()
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=6),   # part
-            st.integers(min_value=1, max_value=4),   # supplier
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_hhi_oracle_matches_python(rows):
-    con = duckdb.connect()
-    con.register(
-        "lineitem",
-        pd.DataFrame(
-            {
-                "l_partkey": [r[0] for r in rows],
-                "l_suppkey": [r[1] for r in rows],
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_HHI_SQL).fetchall()}
-    parts: dict[int, dict] = {}
-    for p, sup in rows:
-        parts.setdefault(p, {})
-        parts[p][sup] = parts[p].get(sup, 0) + 1
-    expect = {}
-    for p, sups in parts.items():
-        n = sum(sups.values())
-        if n < 5:
-            continue
-        ss = sum(c * c for c in sups.values())
-        expect[p] = (n, len(sups), ss * 1000000 // (n * n))
-    assert got == expect
-    con.close()
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=5),  # day offset
-            st.sampled_from(["click", "view", "purchase", "error"]),
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_mix_entropy_oracle_matches_python(rows):
-    base = datetime.datetime(2024, 4, 1, 7)
-    con = duckdb.connect()
-    con.register(
-        "events",
-        pd.DataFrame(
-            {
-                "ts": [base + datetime.timedelta(days=r[0]) for r in rows],
-                "event_type": [r[1] for r in rows],
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_MIX_ENTROPY_SQL).fetchall()}
-    days: dict = {}
-    for d, t in rows:
-        day = (base + datetime.timedelta(days=d)).date()
-        days.setdefault(day, {})
-        days[day][t] = days[day].get(t, 0) + 1
-    for day, mix in days.items():
-        n = sum(mix.values())
-        k = len(mix)
-        h = 0.0
-        for t in sorted(mix):  # sorted fold, same order as both engines
-            c = mix[t]
-            h += -(c / n) * math.log(c / n)
-        e = math.floor(h / math.log(k) * 1000000 + 0.5) if k > 1 else 0
-        g = got[day]
-        assert g[0] == n and g[1] == k
-        assert abs(g[2] - math.floor(h * 1000000 + 0.5)) <= 1
-        assert abs(g[3] - e) <= 1
-    assert len(got) == len(days)
-    con.close()
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["A", "N", "R"]),
-            st.integers(min_value=1, max_value=12),
-            st.integers(min_value=0, max_value=5),
-        ),
-        min_size=1,
-        max_size=50,
-    )
-)
-def test_kendall_tau_oracle_matches_python(rows):
-    con = duckdb.connect()
-    con.register(
-        "lineitem",
-        pd.DataFrame(
-            {
-                "l_returnflag": [r[0] for r in rows],
-                "l_quantity": [float(r[1]) for r in rows],
-                "l_discount": [r[2] / 100.0 for r in rows],
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_KENDALL_TAU_SQL).fetchall()}
-    by_grp: dict[str, list] = {}
-    for g, q, d in rows:
-        by_grp.setdefault(g, []).append((q, d))
-    # groups where EVERY row pair is x-tied or y-tied emit NULL tau but
-    # still appear (cd row exists only if some qv2>qv1 pair exists) —
-    # mirror the oracle's join semantics: a group with no concordance-
-    # eligible pair has no cd row and is absent entirely
-    for g, pts in by_grp.items():
-        n = len(pts)
-        c_minus_d = 0
-        eligible = False
-        for i in range(n):
-            for j in range(n):
-                if pts[j][0] > pts[i][0] and pts[j][1] != pts[i][1]:
-                    eligible = True
-                    c_minus_d += 1 if pts[j][1] > pts[i][1] else -1
-        if not eligible:
-            assert g not in got
-            continue
-        tx2 = 0
-        for q in {p[0] for p in pts}:
-            cq = sum(1 for p in pts if p[0] == q)
-            tx2 += cq * (cq - 1)
-        ty2 = 0
-        for d in {p[1] for p in pts}:
-            cd2 = sum(1 for p in pts if p[1] == d)
-            ty2 += cd2 * (cd2 - 1)
-        g_n, g_tau = got[g]
-        assert g_n == n
-        den_x = n * (n - 1) - tx2
-        den_y = n * (n - 1) - ty2
-        if den_x > 0 and den_y > 0:
-            ref = 2.0 * c_minus_d / math.sqrt(float(den_x) * float(den_y))
-            ref_micro = math.floor(ref * 1000000 + 0.5)
-            assert g_tau is not None and abs(g_tau - ref_micro) <= 1
-        else:
-            assert g_tau is None
-    assert set(got) <= set(by_grp)
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["click", "view"]),
-            st.integers(min_value=0, max_value=40),  # day offset
-            st.integers(min_value=1, max_value=30),  # events that day
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_theil_sen_oracle_matches_python(day_specs):
-    # expand (type, day, count) specs into individual event rows so the
-    # oracle's daily-count aggregate is itself under test
-    types, tss = [], []
-    for typ, day, cnt in day_specs:
-        for k in range(cnt):
-            types.append(typ)
-            tss.append(
-                pd.Timestamp("2024-01-01")
-                + pd.Timedelta(days=day, minutes=k)
-            )
-    con = duckdb.connect()
-    con.register("events", pd.DataFrame({"event_type": types, "ts": tss}))
-    got = {r[0]: r[1:] for r in con.sql(Q_X_THEIL_SEN_SQL).fetchall()}
-
-    daily: dict[str, dict[int, int]] = {}
-    for typ, day, cnt in day_specs:
-        daily.setdefault(typ, {})
-        daily[typ][day] = daily[typ].get(day, 0) + cnt
-    for typ, dmap in daily.items():
-        days = sorted(dmap)
-        slopes = []
-        for i in range(len(days)):
-            for j in range(i + 1, len(days)):
-                slopes.append(
-                    (dmap[days[j]] - dmap[days[i]]) / (days[j] - days[i])
-                )
-        if not slopes:
-            # single-day groups have no pairs -> no med row -> absent
-            assert typ not in got
-            continue
-        slopes.sort()
-        m = len(slopes)
-        if m % 2:
-            med = slopes[m // 2]
-        else:
-            med = (slopes[m // 2 - 1] + slopes[m // 2]) / 2
-        ref_micro = math.floor(med * 1000000 + 0.5)
-        g_days, g_pairs, g_slope = got[typ]
-        assert g_days == len(days)
-        assert g_pairs == m
-        assert abs(g_slope - ref_micro) <= 1
-    assert set(got) <= set(daily)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["click", "view"]),
-            st.integers(min_value=0, max_value=40),  # day offset
-            st.integers(min_value=1, max_value=30),  # events that day
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-# discovered pin (round 14): two days sharing a count collapsed to one
-# tie group; n_days must be sum(t), not the tie-group count
-@example(day_specs=[("click", 0, 1), ("click", 1, 1)])
-@pytest.mark.slow  # round 15: driver-budget cut (see pytest.ini)
-def test_mann_kendall_oracle_matches_python(day_specs):
-    # expand (type, day, count) specs into individual event rows so the
-    # oracle's daily-count aggregate is itself under test
-    types, tss = [], []
-    for typ, day, cnt in day_specs:
-        for k in range(cnt):
-            types.append(typ)
-            tss.append(
-                pd.Timestamp("2024-01-01")
-                + pd.Timedelta(days=day, minutes=k)
-            )
-    con = duckdb.connect()
-    con.register("events", pd.DataFrame({"event_type": types, "ts": tss}))
-    got = {r[0]: r[1:] for r in con.sql(Q_X_MANN_KENDALL_SQL).fetchall()}
-
-    daily: dict[str, dict[int, int]] = {}
-    for typ, day, cnt in day_specs:
-        daily.setdefault(typ, {})
-        daily[typ][day] = daily[typ].get(day, 0) + cnt
-    for typ, dmap in daily.items():
-        days = sorted(dmap)
-        n = len(days)
-        if n < 2:
-            # single-day groups have no pairs -> no s_tab row -> absent
-            assert typ not in got
-            continue
-        s = 0
-        for i in range(n):
-            for j in range(i + 1, n):
-                diff = dmap[days[j]] - dmap[days[i]]
-                s += (diff > 0) - (diff < 0)
-        tie_term = 0
-        for v in set(dmap.values()):
-            t = sum(1 for d in days if dmap[d] == v)
-            tie_term += t * (t - 1) * (2 * t + 5)
-        vs_num = n * (n - 1) * (2 * n + 5) - tie_term
-        g_days, g_pairs, g_s, g_vs, g_z = got[typ]
-        assert g_days == n
-        assert g_pairs == n * (n - 1) // 2
-        assert g_s == s
-        assert g_vs == vs_num
-        if s == 0:
-            assert g_z == 0
-        else:
-            num = float(s - 1 if s > 0 else s + 1)
-            ref = num / math.sqrt(vs_num / 18.0)
-            ref_micro = math.floor(ref * 1000000 + 0.5)
-            assert abs(g_z - ref_micro) <= 1
-    assert set(got) <= set(daily)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["s1", "s2", "s3"]),
-            st.integers(min_value=0, max_value=400),  # n_chars
-            st.integers(min_value=0, max_value=80),  # spaces in text
-        ),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_cohens_kappa_oracle_matches_python(doc_specs):
-    # build a text with exactly `spaces` spaces; n_chars is independent
-    # metadata (the raters read different columns BY DESIGN)
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame(
-            {
-                "source": [d[0] for d in doc_specs],
-                "n_chars": [d[1] for d in doc_specs],
-                "text": ["x" + " x" * d[2] for d in doc_specs],
-            }
-        ),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_X_COHENS_KAPPA_SQL).fetchall()}
-
-    by_src: dict[str, list] = {}
-    for src, nc, sp in doc_specs:
-        by_src.setdefault(src, []).append((1 if nc >= 200 else 0,
-                                           1 if sp >= 39 else 0))
-    for src, bits in by_src.items():
-        n = len(bits)
-        agree = sum(1 for a, b in bits if a == b)
-        r1 = sum(a for a, _ in bits)
-        c1 = sum(b for _, b in bits)
-        chance = r1 * c1 + (n - r1) * (n - c1)
-        num = n * agree - chance
-        den = n * n - chance
-        g_n, g_agree, g_num, g_den, g_micro = got[src]
-        assert g_n == n
-        assert g_agree == agree
-        assert g_num == num
-        assert g_den == den
-        if den > 0:
-            ref_micro = math.floor(num / den * 1000000 + 0.5)
-            assert g_micro is not None and abs(g_micro - ref_micro) <= 1
-        else:
-            assert g_micro is None
-    assert set(got) == set(by_src)

@@ -3,40 +3,20 @@ and keyword extraction over the documents corpus.
 
 Spark-side pins check planted behaviour (BM25 top-n, TTR bounds),
 degenerate documents (token-less and very long ones) and plan shape
-(entropy is map-only, novelty tokenizes once). The property tests
-compare each oracle against a Python reference (see tests/helpers.py).
+(entropy is map-only, novelty tokenizes once). The property tests that
+compare each oracle against a Python reference are in
+tests/test_round*_properties.py.
 """
 
 from __future__ import annotations
 
-import math
 import re
 
-import duckdb
-import pandas as pd
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from bigdatagenomic_spark import queries as Q
-from bigdatagenomic_spark.operators.text import (
-    BURST_MIN_DF,
-    HEAPS_CHECKPOINT_EVERY,
-    NOVELTY_N,
-    Q_TEXT_BURSTINESS_SQL,
-    Q_TEXT_ENTROPY_SQL,
-    Q_TEXT_GOPHER_REPETITION_SQL,
-    Q_TEXT_HAPAX_SQL,
-    Q_TEXT_HEAPS_CURVE_SQL,
-    Q_TEXT_NOVELTY_SQL,
-    Q_TEXT_RAKE_SQL,
-    Q_TEXT_READABILITY_SQL,
-    Q_TEXT_WORDLEN_PROFILE_SQL,
-    RAKE_STOPWORDS,
-    RAKE_TOP_K,
-)
 from bigdatagenomic_spark.plans.inspect import formatted_plan, join_kinds
 
-from tests.helpers import SF, _TEXTS, _docs_con, _md5_60, _q, _tokens
+from tests.helpers import SF, _q
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -59,94 +39,6 @@ def test_ttr_bounds(spark):
         assert 0 < r.n_types <= r.n_tokens
         assert 0 < r.ttr_micro <= 1_000_000
         assert r.ttr_micro == r.n_types * 1_000_000 // r.n_tokens
-
-
-def _bm25_python(docs, terms, k1, b, top_n):
-    import re
-
-    tok = {
-        d: [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
-        for d, text in docs.items()
-    }
-    perdoc = {d: t for d, t in tok.items() if len(t) > 0}
-    if not perdoc:
-        return []
-    n_docs = len(perdoc)
-    avgdl = sum(len(t) for t in perdoc.values()) / n_docs
-    df = {
-        term: sum(1 for t in perdoc.values() if term in t) for term in terms
-    }
-    rows = []
-    for d, t in perdoc.items():
-        score, n_match = 0.0, 0
-        for term in terms:
-            tf = sum(1 for x in t if x == term)
-            idf = math.log(1.0 + (n_docs - df[term] + 0.5) / (df[term] + 0.5))
-            denom = tf + k1 * ((1.0 - b) + b * len(t) / avgdl)
-            score = score + (idf * (tf * (k1 + 1.0)) / denom)
-            n_match += 1 if tf > 0 else 0
-        rows.append((d, n_match, math.floor(score * 10000 + 0.5) / 10000))
-    rows.sort(key=lambda r: (-r[2], r[0]))
-    return rows[:top_n]
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.text(
-            alphabet=st.sampled_from("abcdefg "),
-            min_size=1,
-            max_size=60,
-        ),
-        min_size=1,
-        max_size=20,
-    )
-)
-def test_bm25_oracle_matches_python_reference(texts):
-    import bigdatagenomic_spark.operators.text as T
-
-    con = duckdb.connect()
-    con.register(
-        "docs",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    sql = T._bm25_oracle_sql().replace("FROM documents", "FROM docs")
-    got = con.sql(sql).fetchall()
-    want = _bm25_python(
-        dict(enumerate(texts)), T.BM25_QUERY_TERMS, T.BM25_K1, T.BM25_B,
-        T.BM25_TOP_N,
-    )
-    assert got == want
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet=st.sampled_from("ab c1"), max_size=30),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_ttr_oracle_matches_python_reference(texts):
-    import re
-
-    from bigdatagenomic_spark.operators.text import Q_TEXT_TTR_SQL
-
-    con = duckdb.connect()
-    con.register(
-        "docs", pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    )
-    sql = Q_TEXT_TTR_SQL.replace("FROM documents", "FROM docs")
-    got = con.sql(sql).fetchall()
-    want = []
-    for d, text in enumerate(texts):
-        toks = [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
-        if not toks:
-            continue
-        want.append(
-            (d, len(toks), len(set(toks)), len(set(toks)) * 1_000_000 // len(toks))
-        )
-    assert got == want
 
 
 # ---------------------------------------------------------------------------
@@ -201,114 +93,6 @@ def test_entropy_long_doc_and_punct_only_doc(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# token entropy vs math.log reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=50, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ab c1.", min_size=0, max_size=60),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_entropy_oracle_matches_python_reference(texts):
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_TEXT_ENTROPY_SQL).fetchall()}
-    for i, text in enumerate(texts):
-        toks = _tokens(text)
-        if not toks:
-            assert i not in got
-            continue
-        n = len(toks)
-        counts = [toks.count(t) for t in sorted(set(toks))]
-        ent = math.log(n) - sum(c * math.log(c) for c in counts) / n
-        n_tok, n_typ, got_ent = got[i]
-        assert (n_tok, n_typ) == (n, len(counts))
-        # same grid snap; allow one 1e-4 step for libm/fold divergence
-        ref = math.floor(ent * 10000 + 0.5) / 10000
-        assert abs(got_ent - ref) < 1.5e-4
-
-
-# ---------------------------------------------------------------------------
-# n-gram novelty vs python shingle reference
-# ---------------------------------------------------------------------------
-
-def _shingles(text: str) -> set[int]:
-    toks = _tokens(text)
-    hi = max(len(toks) - (NOVELTY_N - 1), 1)
-    out = set()
-    for i in range(hi):
-        out.add(_md5_60(" ".join(toks[i : i + NOVELTY_N])))
-    return out
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="abc de", min_size=0, max_size=80),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_novelty_oracle_matches_python_reference(texts):
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_TEXT_NOVELTY_SQL).fetchall()}
-    sh = {i: _shingles(t) for i, t in enumerate(texts)}
-    df: dict[int, int] = {}
-    for s in sh.values():
-        for h in s:
-            df[h] = df.get(h, 0) + 1
-    for i in range(len(texts)):
-        n_sh = len(sh[i])
-        n_novel = sum(1 for h in sh[i] if df[h] == 1)
-        assert got[i] == (n_sh, n_novel, n_novel * 1000000 // n_sh)
-
-
-# ---------------------------------------------------------------------------
-# sentence stats vs python reference
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ab c.!?", min_size=0, max_size=80),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_sentences_oracle_matches_python_reference(texts):
-    from bigdatagenomic_spark.operators.text import Q_TEXT_SENTENCES_SQL
-
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_TEXT_SENTENCES_SQL).fetchall()}
-    for i, text in enumerate(texts):
-        sents = [s for s in re.split(r"[.!?]+", text) if s.strip() != ""]
-        if not sents:
-            assert i not in got
-            continue
-        wc = [len(_tokens(s)) for s in sents]
-        assert got[i] == (
-            len(sents),
-            sum(wc),
-            max(wc),
-            1000 * sum(wc) // len(sents),
-        )
-
-
-# ---------------------------------------------------------------------------
 # hapax / readability: token-less and sentence-less docs drop, not crash
 # ---------------------------------------------------------------------------
 
@@ -342,315 +126,8 @@ def test_hapax_and_readability_drop_degenerate_docs(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# hapax legomena ratio
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ab c.d!", min_size=0, max_size=60),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_hapax_oracle_matches_python(texts):
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_TEXT_HAPAX_SQL).fetchall()}
-    for i, text in enumerate(texts):
-        toks = _tokens(text)
-        if not toks:
-            assert i not in got
-            continue
-        counts: dict[str, int] = {}
-        for t in toks:
-            counts[t] = counts.get(t, 0) + 1
-        n_hapax = sum(1 for c in counts.values() if c == 1)
-        assert got[i] == (
-            len(toks),
-            len(counts),
-            n_hapax,
-            n_hapax * 1000000 // len(counts),
-        )
-
-
-# ---------------------------------------------------------------------------
-# Flesch readability
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="the quick fox.! ", min_size=0, max_size=80),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_readability_oracle_matches_python(texts):
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_TEXT_READABILITY_SQL).fetchall()}
-    for i, text in enumerate(texts):
-        sents = [s for s in re.split(r"[.!?]+", text) if s.strip()]
-        toks = _tokens(text)
-        if not sents or not toks:
-            assert i not in got
-            continue
-        syl = sum(
-            max(len(re.split(r"[aeiou]+", w)) - 1, 1) for w in toks
-        )
-        s, w = len(sents), len(toks)
-        flesch = 206.835 - 1.015 * (w / s) - 84.6 * (syl / w)
-        n_s, n_w, n_y, milli = got[i]
-        assert (n_s, n_w, n_y) == (s, w, syl)
-        # identical formula both sides; allow one milli step for libm ulp
-        assert abs(milli - math.floor(flesch * 1000 + 0.5)) <= 1
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.lists(st.sampled_from(["aa", "bb", "cc", "dd"]), min_size=0, max_size=6),
-        min_size=BURST_MIN_DF,
-        max_size=BURST_MIN_DF + 12,
-    )
-)
-def test_burstiness_oracle_matches_python(doc_tokens):
-    texts = [" ".join(toks) for toks in doc_tokens]
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
-    )
-    got = {r[0]: r[1:] for r in con.sql(Q_TEXT_BURSTINESS_SQL).fetchall()}
-    n = len(texts)
-    per_term: dict[str, list] = {}
-    for toks in doc_tokens:
-        counts: dict[str, int] = {}
-        for t in toks:
-            counts[t] = counts.get(t, 0) + 1
-        for t, c in counts.items():
-            per_term.setdefault(t, []).append(c)
-    expect = {}
-    for t, cs in per_term.items():
-        if len(cs) < BURST_MIN_DF:
-            continue
-        sx = sum(cs)
-        sxx = sum(c * c for c in cs)
-        expect[t] = (len(cs), sx, (n * sxx - sx * sx) * 1000000 // (sx * (n - 1)))
-    assert got == expect
-    con.close()
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["en", "fr"]),
-            st.text(alphabet="ab cde.f", min_size=0, max_size=40),
-        ),
-        min_size=1,
-        max_size=10,
-    )
-)
-def test_wordlen_profile_oracle_matches_python(rows):
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame(
-            {
-                "doc_id": range(len(rows)),
-                "lang": [r[0] for r in rows],
-                "text": [r[1] for r in rows],
-            }
-        ),
-    )
-    got = {
-        (r[0], r[1]): r[2:]
-        for r in con.sql(Q_TEXT_WORDLEN_PROFILE_SQL).fetchall()
-    }
-    cells: dict[tuple, int] = {}
-    totals: dict[str, int] = {}
-    for lang, text in rows:
-        for w in _tokens(text):
-            cells[(lang, len(w))] = cells.get((lang, len(w)), 0) + 1
-            totals[lang] = totals.get(lang, 0) + 1
-    expect = {
-        k: (n, n * 1000000 // totals[k[0]]) for k, n in cells.items()
-    }
-    assert got == expect
-    con.close()
-
-
-@settings(max_examples=150, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["en", "de", "fr"]),
-            st.lists(
-                st.sampled_from(
-                    ["the", "of", "der", "und", "le", "est", "el", "y", "zzz"]
-                ),
-                min_size=0,
-                max_size=8,
-            ),
-        ),
-        min_size=1,
-        max_size=12,
-    )
-)
-def test_lang_confusion_oracle_matches_python(rows):
-    stopsets = {
-        "en": ["the", "a", "of", "and", "to", "is", "in", "it"],
-        "de": ["der", "die", "das", "und", "ist", "ein"],
-        "fr": ["le", "les", "et", "est", "une", "dans"],
-        "es": ["el", "los", "y", "es", "una", "en"],
-    }
-    import __spark_entry__ as entry
-
-    con = duckdb.connect()
-    con.register(
-        "documents",
-        pd.DataFrame(
-            {
-                "doc_id": range(len(rows)),
-                "lang": [r[0] for r in rows],
-                "text": [" ".join(r[1]) for r in rows],
-            }
-        ),
-    )
-    sql = entry.oracle_sql()["q_text_lang_confusion"]
-    got = {(r[0], r[1]): r[2:] for r in con.sql(sql).fetchall()}
-    cells: dict[tuple, int] = {}
-    totals: dict[str, int] = {}
-    for lang, toks in rows:
-        cnt = {
-            la: sum(1 for t in toks if t in ws) for la, ws in stopsets.items()
-        }
-        en, de, fr, es = cnt["en"], cnt["de"], cnt["fr"], cnt["es"]
-        if en >= de and en >= fr and en >= es and en > 0:
-            pred = "en"
-        elif de >= fr and de >= es and de > 0:
-            pred = "de"
-        elif fr >= es and fr > 0:
-            pred = "fr"
-        elif es > 0:
-            pred = "es"
-        else:
-            pred = "und"
-        cells[(lang, pred)] = cells.get((lang, pred), 0) + 1
-        totals[lang] = totals.get(lang, 0) + 1
-    expect = {k: (n, n * 1000000 // totals[k[0]]) for k, n in cells.items()}
-    assert got == expect
-    con.close()
-
-
-@settings(max_examples=150, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ab cd", min_size=0, max_size=20),
-        min_size=1,
-        max_size=6,
-    )
-)
-def test_heaps_curve_oracle_matches_python(texts):
-    # doc_ids at multiples of the checkpoint so every doc emits a row
-    ids = [i * HEAPS_CHECKPOINT_EVERY for i in range(len(texts))]
-    con = duckdb.connect()
-    con.register("documents", pd.DataFrame({"doc_id": ids, "text": texts}))
-    got = {r[0]: r[1:] for r in con.sql(Q_TEXT_HEAPS_CURVE_SQL).fetchall()}
-    seen: set = set()
-    cum_tok = 0
-    expect = {}
-    for i, text in zip(ids, texts):
-        toks = _tokens(text)
-        cum_tok += len(toks)
-        seen |= set(toks)
-        expect[i] = (cum_tok, len(seen))
-    assert got == expect
-    con.close()
-
-
-# ---------------------------------------------------------------------------
-# Gopher repetition screens
-# ---------------------------------------------------------------------------
-
-@settings(max_examples=30, deadline=None)
-@given(st.lists(_TEXTS, min_size=1, max_size=6))
-def test_gopher_repetition_oracle_matches_python(texts):
-    con = _docs_con(texts)
-    got = {
-        r[0]: r[1:]
-        for r in con.sql(Q_TEXT_GOPHER_REPETITION_SQL).fetchall()
-    }
-    for i, text in enumerate(texts):
-        t = _tokens(text)
-        if not t:
-            assert i not in got
-            continue
-        g2 = [" ".join(t[j : j + 2]) for j in range(len(t) - 1)]
-        g5 = [" ".join(t[j : j + 5]) for j in range(len(t) - 4)]
-        if len(t) >= 2:
-            top2 = max(g2.count(g) for g in set(g2))
-            e2 = (top2, top2 * 1000000 // len(g2))
-        else:
-            e2 = (None, None)
-        if len(t) >= 5:
-            dup5 = len(g5) - len(set(g5))
-            e5 = (dup5, dup5 * 1000000 // len(g5))
-        else:
-            e5 = (None, None)
-        assert got[i] == (len(t), *e2, *e5)
-
-
-# ---------------------------------------------------------------------------
 # RAKE keyword extraction
 # ---------------------------------------------------------------------------
-
-def _rake_reference(texts):
-    occ: dict[str, int] = {}
-    for text in texts:
-        t = _tokens(text)
-        phrase: list[str] = []
-        phrases: list[str] = []
-        for w in t:
-            if w in RAKE_STOPWORDS:
-                if phrase:
-                    phrases.append(" ".join(phrase))
-                phrase = []
-            else:
-                phrase.append(w)
-        if phrase:
-            phrases.append(" ".join(phrase))
-        for p in phrases:
-            occ[p] = occ.get(p, 0) + 1
-    freq: dict[str, int] = {}
-    degree: dict[str, int] = {}
-    for p, n in occ.items():
-        ws = p.split(" ")
-        for w in ws:
-            freq[w] = freq.get(w, 0) + n
-            degree[w] = degree.get(w, 0) + n * len(ws)
-    w_score = {w: degree[w] * 1000000 // freq[w] for w in freq}
-    scored = [
-        (p, occ[p], sum(w_score[w] for w in p.split(" "))) for p in occ
-    ]
-    scored.sort(key=lambda r: (-r[2], r[0]))
-    return scored[:RAKE_TOP_K]
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.lists(_TEXTS, min_size=1, max_size=6))
-def test_rake_oracle_matches_python(texts):
-    con = _docs_con(texts)
-    got = con.sql(Q_TEXT_RAKE_SQL).fetchall()
-    assert got == _rake_reference(texts)
 
 
 def test_novelty_single_tokenize_pass(spark):
