@@ -15,9 +15,10 @@ unboundedly and re-executes from the scan on every action.
 connected_components picks its strategy from the size of the pinned,
 symmetrized edge list, as extract_path (assembly.py) does: within the
 driver-walk row budget the edges are collected and labeled by a
-union-find on the driver (the pinning job and one collect); above it, hash-min
-propagation with pointer jumping runs one checkpoint job per round, its
-convergence test counted inside that job by an Observation. On random
+union-find on the driver (the pinning job and one collect, no shuffle);
+above it, the edges are deduplicated and hash-min propagation with
+pointer jumping runs one checkpoint job per round, its convergence test
+counted inside that job by an Observation. On random
 graphs of 10k-5M edges the driver path was faster at every size
 (SCALING.md Part 16), so the budget needs no CC-specific cap.
 """
@@ -75,11 +76,13 @@ def connected_components(
 ) -> DataFrame:
     """(id, component) — component = min vertex id reachable (undirected).
 
-    Edges are symmetrized and pinned once (``sym``); the job that pins
-    them also counts the rows through an ``Observation``, and the count
-    picks the physical strategy, as :func:`~bigdatagenomic_spark.
-    operators.assembly.extract_path` picks between its driver walk and
-    pointer doubling:
+    Edges are symmetrized and pinned once (``sym``) with no shuffle:
+    duplicate edges stay in, since neither strategy's labels depend on
+    them. The job that pins them also counts the rows through an
+    ``Observation``, and the count (duplicates included, so it can only
+    err toward the loop) picks the physical strategy, as
+    :func:`~bigdatagenomic_spark.operators.assembly.extract_path` picks
+    between its driver walk and pointer doubling:
 
     * **small graph** (``sym`` rows within :func:`~bigdatagenomic_spark.
       sources.local.fits_driver`'s budget, the same "fits in one node's
@@ -87,17 +90,21 @@ def connected_components(
       union-find with min-id roots labels it on the driver, and the
       labels come back as a local relation in one partition, so a
       caller's sort of them needs no range exchange.
-    * **large graph**: hash-min label propagation over the pinned
-      ``sym`` — every vertex adopts the smallest label among itself and
-      its neighbors, then the label of its label (pointer jumping),
-      until a round changes nothing. One job per round.
+    * **large graph**: ``sym`` is deduplicated and pinned again (one
+      shuffle job), then hash-min label propagation runs over it —
+      every vertex adopts the smallest label among itself and its
+      neighbors, then the label of its label (pointer jumping), until a
+      round changes nothing. One job per round.
 
     Both give the same frame: a self-loop vertex labels itself and
     empty input gives no rows. On ``q_graph_cc``'s sf0.001 graph the
     loop alone ran 55 jobs per call (2.1-3.0 s steady); the driver path
     runs 8 (0.38-0.55 s), the loop 50 when forced (4-core host,
-    ``local[4]``, five warm calls each), and the one-partition labels
-    take the driver path to 6. The loop used to be kept for
+    ``local[4]``, five warm calls each). The one-partition labels took
+    the driver path to 6, and pinning ``sym`` without its ``distinct``
+    shuffle (and reading the lineitem table with its declared schema)
+    to 3: the pin, the Arrow collect and the caller's collect. The loop
+    used to be kept for
     every size because a driver-built result then went through a
     Python-RDD ``createDataFrame`` (~0.4 s per pass of Python worker
     start); ``local_frame`` builds an Arrow local relation and starts no
@@ -106,9 +113,9 @@ def connected_components(
     carries no CC-specific cap.
     """
     sym, fits = pin_counted(
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
+        edges.select("src", "dst").unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
     )
     if fits:
         vid = sym.schema["src"].dataType
@@ -117,7 +124,7 @@ def connected_components(
             _union_find(sym.toArrow()),
             StructType([StructField("id", vid), StructField("component", vid)]),
         ).coalesce(1)
-    return _hash_min(sym, max_rounds)
+    return _hash_min(sym.distinct().localCheckpoint(eager=True), max_rounds)
 
 
 def _union_find(sym) -> list[tuple]:
@@ -219,7 +226,7 @@ def q_graph_cc(spark, sf_dir: str) -> DataFrame:
     edges = li.select(
         F.col("l_orderkey").alias("src"),
         (F.col("l_partkey") + F.lit(1_000_000)).alias("dst"),
-    ).distinct()
+    )
     cc = connected_components(edges)
     return (
         cc.where(F.col("id") < 1_000_000)  # report order vertices only

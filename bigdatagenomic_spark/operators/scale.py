@@ -916,14 +916,13 @@ def q_x_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("grp"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
-    # localCheckpoint the grid: it feeds the cumsum AND the per-group
-    # total below, so unpinned the fact scan + aggregate would run once
-    # per consumer (the shuffle_audit measured 3 fact scans here
-    # pre-fix); the grid is |distinct cents| narrow rows
-    dv = (
-        li.groupBy("grp", "cents")
-        .agg(F.count("*").cast("long").alias("_cnt"))
-        .localCheckpoint(eager=True)
+    # pin the grid: it feeds the cumsum AND the per-group total below,
+    # so unpinned the fact scan + aggregate would run once per consumer
+    # (the shuffle_audit measured 3 fact scans here pre-fix); the grid
+    # is |distinct cents| narrow rows. pin_counted, so the cumsum's own
+    # pin reuses this one instead of checkpointing the grid again.
+    dv, _ = pin_counted(
+        li.groupBy("grp", "cents").agg(F.count("*").cast("long").alias("_cnt"))
     )
     cum = two_phase_cumsum(
         dv, "_cnt", [F.col("cents").asc()], group_cols=["grp"], out_col="_cum"
@@ -1005,14 +1004,13 @@ def q_x_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("grp"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
-    # localCheckpoint the grid: it feeds the cumsum AND the per-group
-    # total below, so unpinned the fact scan + aggregate would run once
-    # per consumer (the shuffle_audit measured 3 fact scans here
-    # pre-fix); the grid is |distinct cents| narrow rows
-    dv = (
-        li.groupBy("grp", "cents")
-        .agg(F.count("*").cast("long").alias("_cnt"))
-        .localCheckpoint(eager=True)
+    # pin the grid: it feeds the cumsum AND the per-group total below,
+    # so unpinned the fact scan + aggregate would run once per consumer
+    # (the shuffle_audit measured 3 fact scans here pre-fix); the grid
+    # is |distinct cents| narrow rows. pin_counted, so the cumsum's own
+    # pin reuses this one instead of checkpointing the grid again.
+    dv, _ = pin_counted(
+        li.groupBy("grp", "cents").agg(F.count("*").cast("long").alias("_cnt"))
     )
     # pin `cum` lazily (round 15): it feeds the bounds broadcast AND
     # the kept-band aggregate, and each consumer otherwise replays the
@@ -1119,7 +1117,10 @@ def q_x_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_quantity"
     )
-    cells = (
+    # pin: the grid feeds the cumsum and the total; without it the
+    # shuffle_audit measured FOUR fact scans for this operator.
+    # pin_counted, so the cumsum's own pin reuses this one.
+    cells, _ = pin_counted(
         li.select(
             F.col("l_returnflag").alias("g"),
             F.col("l_extendedprice").alias("p"),
@@ -1132,9 +1133,6 @@ def q_x_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("g", "p")
         .agg(F.sum("w").cast("long").alias("wsum"))
-        # checkpoint: the grid feeds the cumsum and the total; without
-        # it the shuffle_audit measured FOUR fact scans for this operator
-        .localCheckpoint(eager=True)
     )
     cum = two_phase_cumsum(
         cells, "wsum", [F.col("p").asc()], group_cols=["g"], out_col="cw"

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.functions import md5_long, tokens
 from bigdatagenomic_spark.operators.relational import round2_portable
+from bigdatagenomic_spark.sources.local import pin_counted
 from bigdatagenomic_spark.sources.tables import fan_out, load_table
 
 
@@ -2789,15 +2790,13 @@ def q_x_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.datediff(F.max("day"), F.min("day")).cast("long").alias("lt"))
     )
-    # eager checkpoint (round-14 shuffle_audit, SCALING.md Part 15
-    # addendum): unlike the single-exchange daily grids, this grid sits
-    # TWO exchanges deep (user min/max agg -> lifetime count), and the
-    # measured cost without the checkpoint was a full second events
-    # scan (200k -> 100k input records with it)
-    grid = (
-        lives.groupBy("lt")
-        .agg(F.count("*").cast("long").alias("d"))
-        .localCheckpoint(eager=True)
+    # pin (round-14 shuffle_audit, SCALING.md Part 15 addendum): unlike
+    # the single-exchange daily grids, this grid sits TWO exchanges deep
+    # (user min/max agg -> lifetime count), and the measured cost
+    # without the pin was a full second events scan (200k -> 100k input
+    # records with it). pin_counted, so the cumsum's own pin reuses it.
+    grid, _ = pin_counted(
+        lives.groupBy("lt").agg(F.count("*").cast("long").alias("d"))
     )
     tot = grid.agg(F.sum("d").cast("long").alias("_n"))
     cum = two_phase_cumsum(grid, "d", [F.col("lt").asc()], out_col="_cum")

@@ -63,9 +63,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # the driver's events.parquet stores TIMESTAMP(NANOS), which the
-        # Spark parquet reader rejects by default; read as long + convert
-        # in sources.tables.load_table
+        # older driver testdata stored events.ts as TIMESTAMP(NANOS),
+        # which the parquet reader rejects without this flag; current
+        # files store micros and the flag is inert
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():

@@ -19,7 +19,8 @@ pointer doubling), ``graph.connected_components`` (union-find vs
 hash-min) and ``scale``'s two-phase window family (one-partition window
 vs range-partitioned two-phase path) pick their plans by.
 :func:`pin_counted` pins a frame and counts it in the same job, so a
-caller pays no separate count to apply the rule.
+caller pays no separate count to apply the rule, and pins a frame only
+once.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from __future__ import annotations
 import re
 from collections.abc import Iterable, Sequence
 from datetime import timezone
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -119,12 +121,23 @@ def fits_driver(spark: SparkSession, rows: int) -> bool:
     return rows <= driver_walk_row_budget(spark)
 
 
+# row counts of the frames pin_counted returned, by frame identity
+_PINNED_ROWS: WeakKeyDictionary[DataFrame, int] = WeakKeyDictionary()
+
+
 def pin_counted(df: DataFrame) -> tuple[DataFrame, bool]:
     """``df`` pinned by an eager ``localCheckpoint``, and whether its
     row count :func:`fits_driver`. The pinning job counts the rows
-    through an ``Observation``, so the rule costs no job of its own."""
+    through an ``Observation``, so the rule costs no job of its own.
+    A frame this function returned before comes back as it is, judged
+    by its recorded count, with no job at all: a caller may pin a frame
+    it reads twice and hand it on to a helper that pins its input."""
+    spark = df.sparkSession
+    if df in _PINNED_ROWS:
+        return df, fits_driver(spark, _PINNED_ROWS[df])
     size = Observation()
     pinned = df.observe(size, F.count(F.lit(1)).alias("rows")).localCheckpoint(
         eager=True
     )
-    return pinned, fits_driver(df.sparkSession, size.get["rows"])
+    _PINNED_ROWS[pinned] = size.get["rows"]
+    return pinned, fits_driver(spark, _PINNED_ROWS[pinned])

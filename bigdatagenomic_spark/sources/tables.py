@@ -3,6 +3,11 @@
 Parquet scans are the engine's default source: columnar, predicate
 pushdown, column pruning and partition pruning all come from Catalyst for
 free (verify with ``df.explain`` → ``PushedFilters`` / ``ReadSchema``).
+
+Every table is read with its schema declared (:data:`SCHEMAS`), so no
+load runs a job: ``spark.read.parquet`` without a schema runs a one-task
+schema-inference job per call (~70 ms steady, 43 of the headline set's
+223 jobs per call before the schemas were declared).
 """
 
 from __future__ import annotations
@@ -11,18 +16,29 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+# The one home of the table schemas (FIXTURES.md §B), equal to what Spark
+# infers from the parquet footers (tests/test_sources.py checks it). A
+# file may hold fewer columns; the missing ones read as null.
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, "
+    "c_acctbal DOUBLE, c_mktsegment STRING",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+    "p_size INT, p_retailprice DOUBLE",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+    "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+    "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+    "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+    "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ",
+    "events": "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
+    "event_type STRING, value DOUBLE, props STRING",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+TABLES = list(SCHEMAS)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -35,11 +51,12 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     so every conf a query's *result* depends on must be (re)applied here —
     both are runtime-settable SQL confs, so ``conf.set`` is sufficient:
 
-    * ``nanosAsLong`` — belt-and-braces for *older* driver testdata whose
-      ``events.parquet`` stored ``ts`` as INT64 TIMESTAMP(NANOS), which the
-      Spark parquet reader rejects outright without this flag. (Current
-      testdata stores TIMESTAMP(MICROS, isAdjustedToUTC=false); the flag is
-      then inert.)
+    * ``nanosAsLong`` — the parquet-reader flag ``get_spark`` sets too,
+      so both sessions read alike. Older driver testdata stored
+      ``events.ts`` as INT64 TIMESTAMP(NANOS), which the reader rejects
+      without it; current testdata stores TIMESTAMP(MICROS,
+      isAdjustedToUTC=false), which :data:`SCHEMAS` declares, and the
+      flag is inert.
     * ``session.timeZone=UTC`` — timestamp formatting/extraction must agree
       with the DuckDB oracle regardless of host timezone.
     """
@@ -48,29 +65,15 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        # Invariant: events.ts loads as TimestampNTZType. The current
-        # driver testdata stores ts as parquet TIMESTAMP(MICROS,
-        # isAdjustedToUTC=false), which Spark 4 reads directly as NTZ —
-        # naive wall-clock, matching DuckDB's naive TIMESTAMP, and (key
-        # property) every derived value (hour, date_trunc, unix_micros)
-        # is independent of spark.sql.session.timeZone.
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
+    """Table ``name`` of ``sf_dir``, read with its declared schema.
 
-        if isinstance(df.schema["ts"].dataType, LongType):
-            # Belt-and-braces for older testdata: TIMESTAMP(NANOS) +
-            # nanosAsLong arrives as BIGINT epoch nanos — integer
-            # division (epoch nanos exceed 2^53, so no double
-            # round-trip), then drop the TZ; the session TZ was just
-            # healed to UTC above, so the NTZ cast is deterministic.
-            df = df.withColumn(
-                "ts",
-                F.timestamp_micros(F.expr("ts DIV 1000")).cast(TimestampNTZType()),
-            )
-    return df
+    ``events.ts`` (like the two TPC-H dates) is ``TIMESTAMP_NTZ``: the
+    files store parquet TIMESTAMP(MICROS, isAdjustedToUTC=false), naive
+    wall-clock time as DuckDB's TIMESTAMP reads it, so every derived
+    value (hour, date_trunc, unix_micros) is independent of
+    ``spark.sql.session.timeZone``."""
+    _ensure_session_confs(spark)
+    return spark.read.schema(SCHEMAS[name]).parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def fan_out(df: DataFrame, parts: int | None = None) -> DataFrame:

@@ -148,6 +148,21 @@ def test_two_phase_cumsum_matches_window_sum(spark, driver_budget, shuffle_parti
     assert got_g == want_g
 
 
+def test_pin_counted_pins_a_frame_once(spark, driver_budget):
+    """A frame that pin_counted returned comes back from it as the same
+    frame, with no new checkpoint, and is judged by its recorded row
+    count under the budget in force: a grid a query pins for two
+    consumers is not pinned again by the two-phase helper it feeds."""
+    from bigdatagenomic_spark.sources.local import pin_counted
+
+    pinned, fits = pin_counted(spark.range(10))
+    again, fits_again = pin_counted(pinned)
+    assert again is pinned and fits and fits_again
+    driver_budget(9)
+    again, fits_again = pin_counted(pinned)
+    assert again is pinned and not fits_again
+
+
 @pytest.mark.parametrize("partitions", [1, 7])
 @pytest.mark.parametrize(
     "op, grouped",

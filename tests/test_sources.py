@@ -1,14 +1,17 @@
 """Source/sink round-trips: CSV and JSON interchange vs the parquet base.
 
 The graphlab text reader (R1) is covered in test_assembly.py; this file
-covers the general-format surface in sources.files, and the
-``sources.tables.fan_out`` repartition rule.
+covers the general-format surface in sources.files, the declared table
+schemas and the ``sources.tables.fan_out`` repartition rule.
 """
 
 from __future__ import annotations
 
+import importlib.util
+import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.plans.inspect import formatted_plan
@@ -18,9 +21,15 @@ from bigdatagenomic_spark.sources.files import (
     write_csv,
     write_json,
 )
-from bigdatagenomic_spark.sources.tables import fan_out, load_table
+from bigdatagenomic_spark.sources.tables import TABLES, fan_out, load_table, load_tables
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_spec = importlib.util.spec_from_file_location(
+    "job_census", os.path.join(ROOT, "tools", "job_census.py")
+)
+job_census = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(job_census)
 
 
 def _rows(df):
@@ -106,7 +115,7 @@ def test_events_load_on_vanilla_session_confs(spark):
     SparkSession (no ``get_spark`` confs), so ``load_table`` must itself
     (re)apply every conf the result depends on. events.ts now arrives as
     parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) → TimestampNTZType
-    (the NANOS→long conversion branch is belt-and-braces for old data).
+    (declared in ``sources.tables.SCHEMAS``).
     Pin the new invariant: ts is NTZ, the confs self-heal, and a derived
     value is independent of the session timezone."""
     from pyspark.sql import functions as F
@@ -135,6 +144,29 @@ def test_events_load_on_vanilla_session_confs(spark):
     finally:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", saved_tz)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_declared_schemas_equal_inferred(spark, sf):
+    """Every table's declared schema is the one Spark infers from the
+    parquet footers, at each scale of the test data."""
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+    for name in TABLES:
+        inferred = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+        assert load_table(spark, sf_dir, name).schema == inferred, name
+
+
+def test_load_tables_runs_no_job(spark):
+    """With the schemas declared, loading all ten tables runs no Spark
+    job (an inferred schema costs one job per table)."""
+    sc = spark.sparkContext
+    group = "test-load-tables-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        load_tables(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert job_census.group_counts(spark, group)["jobs"] == 0
 
 
 def test_orc_roundtrip(spark, tmp_path):
