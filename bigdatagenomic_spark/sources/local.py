@@ -132,12 +132,10 @@ def pin_counted(df: DataFrame) -> tuple[DataFrame, bool]:
     A frame this function returned before comes back as it is, judged
     by its recorded count, with no job at all: a caller may pin a frame
     it reads twice and hand it on to a helper that pins its input."""
-    spark = df.sparkSession
-    if df in _PINNED_ROWS:
-        return df, fits_driver(spark, _PINNED_ROWS[df])
-    size = Observation()
-    pinned = df.observe(size, F.count(F.lit(1)).alias("rows")).localCheckpoint(
-        eager=True
-    )
-    _PINNED_ROWS[pinned] = size.get["rows"]
-    return pinned, fits_driver(spark, _PINNED_ROWS[pinned])
+    if df not in _PINNED_ROWS:
+        size = Observation()
+        df = df.observe(size, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+            eager=True
+        )
+        _PINNED_ROWS[df] = size.get["rows"]
+    return df, fits_driver(df.sparkSession, _PINNED_ROWS[df])

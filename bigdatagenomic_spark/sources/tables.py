@@ -6,8 +6,9 @@ free (verify with ``df.explain`` → ``PushedFilters`` / ``ReadSchema``).
 
 Every table is read with its schema declared (:data:`SCHEMAS`), so no
 load runs a job: ``spark.read.parquet`` without a schema runs a one-task
-schema-inference job per call (~70 ms steady, 43 of the headline set's
-223 jobs per call before the schemas were declared).
+schema-inference job per call, 43 of the 223 jobs a call of each
+headline query ran (tools/job_census.py) before the schemas were
+declared.
 """
 
 from __future__ import annotations
